@@ -3,7 +3,7 @@ package graft.lake
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,7 +17,8 @@ final class StoreOutOfSpaceException(path: String)
     extends RuntimeException(s"store is out of space: $path")
 final class StoreLockedException(path: String, holder: String)
     extends RuntimeException(s"store is locked by another writer ($holder): $path")
-final class LakeOutOfStoresException extends RuntimeException("lake is out of writable stores")
+final class LakeOutOfStoresException(cause: Throwable = null)
+    extends RuntimeException("lake is out of writable stores", cause)
 final class InvalidMagicException(path: String)
     extends RuntimeException(s"not a graft store (bad magic): $path")
 final class BlobNotFoundException(hash: String)
@@ -407,151 +408,182 @@ final class ChunkStore private (
       .withColumn("verified", sha2(col("data"), 256) === col("blob_hash"))
   }
 
-  /** Point lookups via the recursive manifest tree: walk down from the
-    * catalog root (reference LongHkey expansion), fetching each level
-    * with literal bucket + hash predicates so every chunk scan
-    * statically prunes to its 1/nBuckets hash-prefix partitions
-    * (store/mod.rs:252-257 — and the difference between reading
-    * 100 TB and reading 100 GB). Depth is log_fanout(parts), so the
-    * walk is a handful of pruned reads even for huge blobs.
+  /** Point lookups via the recursive manifest tree (reference LongHkey
+    * expansion). One catalog probe ([[ChunkStore.resolve]]: a single
+    * job over the catalog and the tombstones, filtered to `hashes`)
+    * hands each live blob's catalog row to the driver, which walks the
+    * tree from there without re-scanning the catalog: each tree level
+    * is one job that reads only the `chunks/bucket=N` directories its
+    * nodes hash to ([[chunksIn]]; store/mod.rs:252-257 — the
+    * difference between reading 100 TB and reading 100 GB), and the
+    * returned frame reads the leaves the same way. Depth is
+    * log_fanout(parts), so a point read costs the probe, one job per
+    * level and the frame's own job.
+    *
+    * Returns (blob_hash, data, verified) ordered by blob_hash; missing
+    * and tombstoned hashes are absent. Nothing is cached.
     */
-  def getBlobsByHashes(hashes: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val cat = liveCatalog.filter(col("blob_hash").isin(hashes: _*))
-    val inline = cat
-      .filter(col("kind") === "inline")
-      .select(col("blob_hash"), col("inline_data").as("data"))
+  def getBlobsByHashes(hashes: Seq[String]): DataFrame =
+    readEntries(ChunkStore.resolve(Seq(this), hashes).values.map(_._2).toSeq)
 
-    var leaves = cat
-      .filter(col("kind") === "single")
-      .select(col("blob_hash"), lit(0L).as("part_idx"), col("root_hash").as("chunk_hash"), col("root_key").as("key"), col("root_bucket").as("bucket"))
-    var frontier = cat
-      .filter(col("kind") === "tree")
-      .select(col("blob_hash"), col("root_hash").as("chunk_hash"), col("root_key").as("key"), col("root_bucket").as("bucket"))
-
-    // The catalog records each tree's depth at put time, so the walk
-    // runs EXACTLY maxDepth levels instead of paying an extra
-    // frontier-isEmpty materialization job per level to discover the
-    // bottom (a deep point read is all fixed per-job cost at test
-    // scale — this removes one job per level, ~25% of the walk). A
-    // blob shallower than maxDepth just empties out of the frontier
-    // early; trust in the recorded depth is backstopped by the
-    // leftover-frontier throw below and by verify-on-read.
-    val maxDepth = cat.filter(col("kind") === "tree")
-      .agg(coalesce(max(col("tree_depth")), lit(0))).head().getInt(0)
-
-    val perLevel = Seq.newBuilder[DataFrame]
-    def expandLevel(): Unit = {
-      val entries = frontier
-        .join(
-          prunedChunks(frontier).select(col("chunk_hash"), col("bucket"), col("enc"), col("data").as("stored")),
-          Seq("chunk_hash", "bucket"),
-        )
-        .select(col("blob_hash"), decoded(col("stored"), col("enc"), col("key")).cast(StringType).as("text"))
-        .select(col("blob_hash"), explode(split(col("text"), "\n")).as("line"))
-        .withColumn("f", split(col("line"), ","))
-        .select(
-          col("blob_hash"),
-          col("f").getItem(0).cast(LongType).as("idx"),
-          col("f").getItem(1).as("chunk_hash"),
-          when(col("f").getItem(2) === "-", lit(null).cast(StringType)).otherwise(col("f").getItem(2)).as("key"),
-          col("f").getItem(4).as("ck"),
-        )
-        .withColumn("bucket", bucketOf(col("chunk_hash"), params.nBuckets))
-        .cache()
-      perLevel += entries
-      leaves = leaves.unionByName(
-        entries.filter(col("ck") === "L").select(col("blob_hash"), col("idx").as("part_idx"), col("chunk_hash"), col("key"), col("bucket"))
-      )
-      frontier = entries.filter(col("ck") === "N").select(col("blob_hash"), col("chunk_hash"), col("key"), col("bucket"))
-    }
-    // The leaf set of a point read is bounded by the requested blobs'
-    // part counts (the point-lookup contract — bulk restores go
-    // through [[getBlobs]]), so land it on the driver: one action
-    // that also materializes every per-level cache exactly once.
-    // After this the level caches can be RELEASED — nothing
-    // downstream reads them — and the returned frame carries no
-    // cached state at all, so repeated point reads with fresh hash
-    // sets leak nothing into the block manager (each caller action
-    // re-scans only the bucket-pruned leaf files below). The walk AND
-    // the collect sit inside try/finally: a non-terminating-manifest
-    // throw or a failed collect must not strand up to maxDepth+64
-    // cached level frames in the block manager for the session.
-    val leafRows =
-      try {
-        for (_ <- 1 to maxDepth) expandLevel()
-        // A frontier surviving maxDepth expansions means a catalog row
-        // under-reports its tree's depth. The tree itself may still be
-        // intact (every node verified by its content address as we
-        // decode it), so availability wins: fall back to the
-        // depth-agnostic probe loop and finish the walk, paying one
-        // isEmpty job per extra level — only on this repair path. The
-        // hard cap bounds cyclic/garbage manifests; verify-on-read still
-        // backstops the payload.
-        var extraLevels = 0
-        while (!frontier.isEmpty) {
-          extraLevels += 1
-          if (extraLevels > 64)
-            throw new InvalidMagicException(
-              s"manifest tree does not terminate within tree_depth=$maxDepth+64 in $path")
-          log.warn(
-            s"tree deeper than recorded tree_depth=$maxDepth in $path " +
-              s"(extra level $extraLevels); continuing depth-agnostic walk")
-          expandLevel()
-        }
-        leaves.dropDuplicates("blob_hash", "part_idx").collect().toIndexedSeq
-      } finally {
-        perLevel.result().foreach(_.unpersist())
+  /** (blob_hash, data, verified) for live catalog rows, ordered by
+    * blob_hash. Inline payloads come from the rows themselves; chunked
+    * blobs are walked on the driver ([[walk]]) down to their leaves,
+    * which the frame fetches bucket-scoped. Inline payloads and leaf
+    * parts meet in one single-partition aggregate, so the frame runs as
+    * one job with no shuffle (a point read's leaf set is small by
+    * definition; bulk restores go through [[getBlobs]]).
+    */
+  private def readEntries(entries: Seq[CatalogEntry]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val leaves = walk(entries)
+    val inlineParts = spark.createDataFrame(
+      entries.filter(_.kind == "inline").map(e => Row(e.blobHash, 0L, e.inlineData)).asJava,
+      partSchema)
+    val parts =
+      if (leaves.isEmpty) inlineParts
+      else {
+        val owners = typedLit(leaves.groupBy(_.chunkHash).map { case (h, rs) => h -> rs.map(r => (r.blobHash, r.idx)) })
+        inlineParts.unionByName(
+          fetch(leaves)
+            .select(explode(element_at(owners, col("chunk_hash"))).as("o"), col("part"))
+            .select(col("o._1").as("blob_hash"), col("o._2").as("part_idx"), col("part")))
       }
-    val leafSchema = leaves.schema
-    val m = spark.createDataFrame(
-      spark.sparkContext.parallelize(leafRows, math.max(1, leafRows.size / 1000)), leafSchema)
-    // Leaf fetch: node levels are fanout-bounded so literal (bucket,
-    // hash) predicates are right for them, but the LEAF set of a big
-    // blob is parts-sized — thousands of hash literals make the scan
-    // predicate itself the cost (measured ~5 s for 3×1500-part blobs
-    // at sf0.1). Keep the partition pruning (bucket IN, ≤ nBuckets
-    // literals) and do the hash membership as a broadcast semi join.
-    val leafBuckets = leafRows.map(_.getAs[Int]("bucket")).distinct.sorted
-    val leafHashes = leafRows.map(_.getAs[String]("chunk_hash")).distinct
-    val leafChunks =
-      if (leafBuckets.isEmpty) chunks.limit(0)
-      else chunks.filter(col("bucket").isin(leafBuckets.map(Integer.valueOf): _*))
-        .join(broadcast(leafHashes.toDF("chunk_hash")), Seq("chunk_hash"), "left_semi")
-    inline
-      .unionByName(reassemble(m, leafChunks))
+    parts
+      .coalesce(1)
+      .groupBy(col("blob_hash"))
+      // a set: a chunk stored twice (a replayed append) is one part
+      .agg(Codec.concatBinary(
+        transform(array_sort(collect_set(struct(col("part_idx"), col("part")))), p => p.getField("part"))
+      ).as("data"))
       .withColumn("verified", sha2(col("data"), 256) === col("blob_hash"))
       .orderBy("blob_hash")
   }
 
-  /** chunks filtered by literal (bucket, hash) sets from `refs` —
-    * collected to the driver, which is exactly right for point lookups
-    * (the ref set is small by definition) and turns the chunk read
-    * into a partition-pruned scan.
+  /** Leaf references of the chunked blobs among `entries`, walked from
+    * their catalog roots on the driver: one bucket-scoped [[fetch]] job
+    * per tree level, whose decrypted node texts are parsed here.
+    *
+    * The catalog records each tree's depth at put time, but the walk
+    * simply runs until the frontier is empty, so a row that
+    * under-reports its depth costs nothing extra: the tree may still
+    * be intact (every node is checked against its content address as
+    * it is read), so availability wins and the walk continues past the
+    * recorded depth with a warning. The hard cap of 64 extra levels
+    * bounds cyclic or garbage manifests; verify-on-read backstops the
+    * payload.
     */
-  private def prunedChunks(refs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val wanted = refs.select(col("chunk_hash"), col("bucket")).distinct().as[(String, Int)].collect()
-    if (wanted.isEmpty) chunks.limit(0)
-    else chunks.filter(
-      col("bucket").isin(wanted.map(_._2).distinct.toSeq: _*) &&
-        col("chunk_hash").isin(wanted.map(_._1).distinct.toSeq: _*)
-    )
+  private def walk(entries: Seq[CatalogEntry]): Seq[PartRef] = {
+    def root(e: CatalogEntry) = PartRef(e.blobHash, 0L, e.rootHash, e.rootKey, e.rootBucket)
+    val trees = entries.filter(_.kind == "tree")
+    val maxDepth = (0 +: trees.map(_.treeDepth)).max
+    var leaves = entries.filter(_.kind == "single").map(root)
+    var frontier = trees.map(root)
+    var level = 0
+    while (frontier.nonEmpty) {
+      level += 1
+      if (level > maxDepth + 64)
+        throw new InvalidMagicException(
+          s"manifest tree does not terminate within tree_depth=$maxDepth+64 in $path")
+      if (level > maxDepth)
+        log.warn(
+          s"tree deeper than recorded tree_depth=$maxDepth in $path " +
+            s"(extra level ${level - maxDepth}); continuing depth-agnostic walk")
+      val nodes = fetch(frontier).collect()
+        .map(r => r.getString(0) -> new String(r.getAs[Array[Byte]](1), StandardCharsets.UTF_8)).toMap
+      val children = frontier.flatMap(f => nodes.get(f.chunkHash).toSeq.flatMap(parseNode(f.blobHash, _)))
+      leaves ++= children.collect { case (r, true) => r }
+      frontier = children.collect { case (r, false) => r }.distinct
+    }
+    leaves.distinct
   }
 
-  /** Single-blob convenience get with verify-on-read. */
-  def getBlob(hash: String): Array[Byte] = {
-    val rows = getBlobsByHashes(Seq(hash)).collect()
-    if (rows.isEmpty) throw new BlobNotFoundException(hash)
-    val r = rows.head
-    if (!r.getAs[Boolean]("verified")) throw new InvalidMagicException(s"hash mismatch for $hash")
-    r.getAs[Array[Byte]]("data")
+  /** One manifest node's entries, as written by the put path's
+    * `idx,chunk_hash,key|-,len,L|N` lines; the flag is true for leaves.
+    */
+  private def parseNode(blobHash: String, text: String): Seq[(PartRef, Boolean)] =
+    text.split("\n").toSeq.map { line =>
+      line.split(",") match {
+        case Array(idx, h, key, _, ck) =>
+          (PartRef(blobHash, idx.toLong, h, if (key == "-") null else key, bucketOf(h, params.nBuckets)), ck == "L")
+        case _ => throw new InvalidMagicException(s"malformed manifest node line in $path: $line")
+      }
+    }
+
+  /** (chunk_hash, part): the decrypted chunks behind `refs`, read from
+    * only the bucket directories they hash to. The hash predicate is a
+    * literal IN list (pushed down to parquet) for node-sized sets and a
+    * literal map lookup beyond that — thousands of IN literals make the
+    * scan predicate itself the cost. A chunk whose stored bytes no
+    * longer hash to its address is dropped, so its blob fails
+    * verification instead of decrypting garbage.
+    */
+  private def fetch(refs: Seq[PartRef]): DataFrame = {
+    val keys = refs.map(r => r.chunkHash -> r.key).toMap
+    val keyOf = typedLit(keys)
+    val wanted =
+      if (keys.size <= MaxHashLiterals) col("chunk_hash").isin(keys.keys.toSeq: _*)
+      else map_contains_key(keyOf, col("chunk_hash"))
+    chunksIn(refs.map(_.bucket))
+      .filter(wanted && sha2(col("data"), 256) === col("chunk_hash"))
+      .select(col("chunk_hash"), decoded(col("data"), col("enc"), element_at(keyOf, col("chunk_hash"))).as("part"))
   }
 
-  def containsBlob(hash: String): Boolean = {
-    import spark.implicits._
-    liveCatalog.join(Seq(hash).toDF("blob_hash"), Seq("blob_hash"), "left_semi").limit(1).count() > 0
+  /** The chunk table restricted to the `bucket=N` directories of
+    * `buckets`. Only those directories are listed — never the whole
+    * `chunks/` tree, whose nBuckets subdirectories would exceed the
+    * parallel partition discovery threshold and cost a distributed
+    * listing job — in groups at or below that threshold, so every
+    * listing stays on the driver. `basePath` keeps `bucket` a partition
+    * column and the literal bucket filter keeps it in the plan's
+    * PartitionFilters.
+    */
+  private def chunksIn(buckets: Seq[Int]): DataFrame = {
+    val bs = buckets.distinct.sorted
+    val conf = spark.sessionState.newHadoopConf()
+    val dirs = bs.map(b => new HPath(s"$chunksDir/bucket=$b")).filter(p => p.getFileSystem(conf).exists(p))
+    if (dirs.isEmpty) emptyDf(chunkSchema)
+    else {
+      val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt max 1
+      dirs.grouped(perRead)
+        .map(g => spark.read.schema(chunkSchema).option("basePath", chunksDir).parquet(g.map(_.toString): _*))
+        .reduce(_ unionByName _)
+        .filter(col("bucket").isin(bs.map(Integer.valueOf): _*))
+    }
   }
+
+  /** This store's side of the catalog probe in [[ChunkStore.resolve]]:
+    * its catalog rows (`dead` false) and tombstones (`dead` true) for
+    * `hashes`.
+    */
+  private def probe(hashes: Seq[String]): DataFrame = {
+    val wanted = col("blob_hash").isin(hashes: _*)
+    catalog.filter(wanted)
+      .select(lit(false).as("dead"), col("blob_hash"), col("kind"), col("inline_data"),
+        col("root_hash"), col("root_key"), col("root_bucket"), col("tree_depth"))
+      .unionByName(tombstones.filter(wanted).select(lit(true).as("dead"), col("blob_hash")), allowMissingColumns = true)
+  }
+
+  /** One blob's bytes from its live catalog row, verified on read. An
+    * inline payload comes straight from the row, with no further job.
+    * A payload that is missing or does not hash to its address raises
+    * [[InvalidMagicException]]: the catalog says the blob is live.
+    */
+  private def readBlob(e: CatalogEntry): Array[Byte] = {
+    val data =
+      if (e.kind == "inline") Some(e.inlineData).filter(d => sha256Hex(d) == e.blobHash)
+      else readEntries(Seq(e)).collect().headOption.filter(_.getAs[Boolean]("verified")).map(_.getAs[Array[Byte]]("data"))
+    data.getOrElse(throw new InvalidMagicException(s"hash mismatch for ${e.blobHash} in $path"))
+  }
+
+  /** Single-blob get with verify-on-read: the catalog probe once (which
+    * alone answers a miss or an inline blob), then bucket-scoped chunk
+    * reads, one job per tree level plus one for the leaves.
+    */
+  def getBlob(hash: String): Array[Byte] = ChunkStore.getBlob(Seq(this), hash)
+
+  /** Whether the blob is live here: the catalog probe alone, one job. */
+  def containsBlob(hash: String): Boolean = ChunkStore.resolve(Seq(this), Seq(hash)).contains(hash)
 
   /** Tombstone blobs for deletion (no data is reclaimed yet — chunks
     * are shared across blobs by content addressing, so the space comes
@@ -961,6 +993,22 @@ final class ChunkStore private (
 final case class BlobRef(blobHash: String, totalLen: Long, kind: String)
 final case class PutResult(blobs: Seq[BlobRef])
 
+/** A live catalog row, as the point-read walk starts from it. */
+private[lake] final case class CatalogEntry(
+    blobHash: String,
+    kind: String,
+    inlineData: Array[Byte],
+    rootHash: String,
+    rootKey: String,
+    rootBucket: Int,
+    treeDepth: Int,
+)
+
+/** A stored part of a blob: a leaf (idx = part_idx) or a manifest node
+  * (idx = node index in its level); `key` is null for raw chunks.
+  */
+private[lake] final case class PartRef(blobHash: String, idx: Long, chunkHash: String, key: String, bucket: Int)
+
 object ChunkStore {
   /** Magic marker content (reference: store/mod.rs MAGIC = b"DataLake..."). */
   val Magic = "GraftStore v1"
@@ -1010,6 +1058,63 @@ object ChunkStore {
   /** Hash-prefix bucket (the index-modulo analog, store/mod.rs:252-257). */
   def bucketOf(hashHex: Column, nBuckets: Int): Column =
     (conv(substring(hashHex, 1, 4), 16, 10).cast(IntegerType) % nBuckets).cast(IntegerType)
+
+  /** [[bucketOf]] for one hash on the driver. */
+  def bucketOf(hashHex: String, nBuckets: Int): Int = Integer.parseInt(hashHex.substring(0, 4), 16) % nBuckets
+
+  private[lake] def sha256Hex(data: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(data).map("%02x".format(_)).mkString
+
+  /** Above this many chunk hashes a point read matches them with a map
+    * lookup instead of an IN list (see `ChunkStore.fetch`).
+    */
+  private val MaxHashLiterals = 64
+
+  private val partSchema: StructType = StructType(Seq(
+    StructField("blob_hash", StringType),
+    StructField("part_idx", LongType),
+    StructField("part", BinaryType),
+  ))
+
+  /** The catalog probe behind every point read: each store's catalog
+    * rows and tombstones for `hashes`, tagged with the store's index,
+    * unioned and collected in ONE job however many stores there are.
+    * Each hash resolves to the first store (in `stores` order) whose
+    * catalog holds it and whose tombstones do not — the reference's
+    * fallback chain (lake/mod.rs:59-75), with liveness judged per
+    * store, so a blob deleted in one store is still served by the
+    * next. Hashes live nowhere are absent from the result.
+    */
+  private[lake] def resolve(stores: Seq[ChunkStore], hashes: Seq[String]): Map[String, (ChunkStore, CatalogEntry)] =
+    if (stores.isEmpty || hashes.isEmpty) Map.empty
+    else {
+      val rows = stores.zipWithIndex
+        .map { case (s, i) => s.probe(hashes.distinct).withColumn("store", lit(i)) }
+        .reduceLeft(_ unionByName _)
+        .collect()
+      def key(r: Row) = (r.getAs[Int]("store"), r.getAs[String]("blob_hash"))
+      val (dead, present) = rows.partition(_.getAs[Boolean]("dead"))
+      val tombstoned = dead.map(key).toSet
+      present.filterNot(r => tombstoned(key(r)))
+        .groupBy(_.getAs[String]("blob_hash"))
+        .map { case (h, rs) =>
+          val r = rs.minBy(_.getAs[Int]("store"))
+          h -> (stores(r.getAs[Int]("store")), CatalogEntry(
+            h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
+            r.getAs[String]("root_key"), Option(r.getAs[Integer]("root_bucket")).fold(0)(_.intValue),
+            Option(r.getAs[Integer]("tree_depth")).fold(0)(_.intValue)))
+        }
+    }
+
+  /** Point read across `stores`: one probe ([[resolve]]) picks the
+    * first store holding `hash` live, which reads it with
+    * verify-on-read.
+    */
+  private[lake] def getBlob(stores: Seq[ChunkStore], hash: String): Array[Byte] =
+    resolve(stores, Seq(hash)).get(hash) match {
+      case Some((s, e)) => s.readBlob(e)
+      case None => throw new BlobNotFoundException(hash)
+    }
 
   /** The [[ChunkStore.fsck]] invariant algebra over ARBITRARY
     * (manifest, chunks, catalog) relations — static so the audit can

@@ -57,9 +57,12 @@ object LakeConfig {
   *    (lake/mod.rs:36-53 verify_magic branch);
   *  - get: first store that has the blob wins (lake/mod.rs:59-75
   *    fallback chain) — implemented as a priority-ranked union so one
-  *    distributed job covers all stores;
+  *    distributed job covers all stores, for the bulk [[get]] and the
+  *    point [[getBlob]] alike (whose probe also decides liveness per
+  *    store: a blob tombstoned in one store is served by the next);
   *  - put: first writable store with space; OutOfSpace/ReadOnly →
-  *    try next; none left → LakeOutOfStores (lake/mod.rs:77-118).
+  *    try next; none left → LakeOutOfStores, carrying the last
+  *    store's refusal as its cause (lake/mod.rs:77-118).
   */
 final class Lake private (val spark: SparkSession, val config: LakeConfig, val stores: Seq[ChunkStore]) {
 
@@ -68,14 +71,14 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
 
   def put(blobs: DataFrame): PutResult = {
     var lastErr: Throwable = null
-    writable.foreach { s =>
+    stores.foreach { s =>
       try return s.putBlobs(blobs)
       catch {
         case e: StoreOutOfSpaceException => lastErr = e
         case e: StoreReadOnlyException => lastErr = e
       }
     }
-    throw (if (lastErr != null) new LakeOutOfStoresException else new LakeOutOfStoresException)
+    throw new LakeOutOfStoresException(lastErr)
   }
 
   /** Bulk get across all stores; first (config-order) store holding a
@@ -93,12 +96,13 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
       .drop("rn", "store_priority")
   }
 
-  def getBlob(hash: String): Array[Byte] = {
-    stores.foreach { s =>
-      if (s.containsBlob(hash)) return s.getBlob(hash)
-    }
-    throw new BlobNotFoundException(hash)
-  }
+  /** Point read with verify-on-read: one catalog probe across every
+    * store picks the first store holding the blob live, which answers
+    * a miss or an inline blob by itself; a chunked blob then costs one
+    * bucket-scoped job per tree level plus one for its leaves
+    * ([[ChunkStore.getBlobsByHashes]]).
+    */
+  def getBlob(hash: String): Array[Byte] = ChunkStore.getBlob(stores, hash)
 
   /** Tombstone blobs in every writable store that holds them (a blob
     * put before a spill-over may live in several). Returns the number

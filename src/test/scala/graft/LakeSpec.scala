@@ -3,7 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.lake._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -291,7 +294,8 @@ class LakeSpec extends AnyFunSuite {
     val p = tmp()
     ChunkStore.init(spark, p)
     val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(p, readonly = true))))
-    intercept[LakeOutOfStoresException](lake.put(blobDf(1L -> mid)))
+    val e = intercept[LakeOutOfStoresException](lake.put(blobDf(1L -> mid)))
+    assert(e.getCause.isInstanceOf[StoreReadOnlyException], s"cause: ${e.getCause}")
   }
 
   test("config TOML round-trip preserves entries") {
@@ -425,6 +429,132 @@ class LakeSpec extends AnyFunSuite {
     ChunkStore.init(spark, roDir)
     val ro = ChunkStore.load(spark, roDir, readonly = true)
     intercept[StoreReadOnlyException](a.replicateTo(ro))
+  }
+
+  private def sha256hex(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+
+  /** Jobs `body` runs and the most tasks any of them has, counted by a
+    * listener keyed on a job group. The listener bus is asynchronous,
+    * so poll until the count is stable rather than racing it.
+    */
+  private def jobsOf(group: String)(body: => Unit): (Int, Int) = {
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          tasks.put(e.jobId, e.stageInfos.map(_.numTasks).sum)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      var n = -1; var same = 0
+      while (same < 3) {
+        val m = tasks.size
+        if (m == n) same += 1 else { same = 0; n = m }
+        Thread.sleep(50)
+      }
+      (n, tasks.values.asScala.maxOption.getOrElse(0))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Rewrites a store's chunk table with one bit flipped in the payload
+    * of `chunkHash` (the at-rest bit-rot fixture of the scrub tests).
+    */
+  private def flipChunk(store: ChunkStore, chunkHash: String): Unit = {
+    val rows = store.chunks.collect().map { r =>
+      val data = r.getAs[Array[Byte]](3).clone()
+      if (r.getString(0) == chunkHash) data(0) = (data(0) ^ 0x7f).toByte
+      (r.getString(0), r.getLong(1), r.getString(2), data, r.getInt(4))
+    }.toSeq
+    assert(rows.exists(_._1 == chunkHash), s"fixture: chunk $chunkHash not stored")
+    rows.toDF("chunk_hash", "size", "enc", "data", "bucket")
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"${store.path}/chunks")
+  }
+
+  test("getBlob job budget: one catalog probe across stores, bucket-scoped chunk reads") {
+    val params = LakeParams()
+    // ~100-part trees spread each store's chunks over > 32 bucket dirs,
+    // past the parallel listing threshold: a read of the whole chunks/
+    // tree would show up as a job with >= nBuckets tasks
+    def tree(tag: String) = (0 until 4000).map(i => s"$tag-$i-").mkString.take(params.chunkMax.toInt * 100)
+    val (p0, p1) = (tmp(), tmp())
+    val s0 = ChunkStore.init(spark, p0)
+    val s1 = ChunkStore.init(spark, p1)
+    s0.putBlobs(blobDf(1L -> tree("hot"), 2L -> tiny))
+    s1.putBlobs(blobDf(1L -> tree("spill"), 2L -> mid))
+    Seq(p0, p1).foreach { p =>
+      val dirs = Files.list(Paths.get(p, "chunks")).toArray.count(_.toString.contains("bucket="))
+      assert(dirs > 32, s"fixture: $p has only $dirs bucket dirs")
+    }
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(p0), StoreEntry(p1))))
+    val h = (s: String) => sha256hex(s.getBytes(StandardCharsets.UTF_8))
+    lake.getBlob(h(mid)): Unit // warm the code paths outside the counted groups
+
+    val (miss, missTasks) = jobsOf("budget-miss") {
+      intercept[BlobNotFoundException](lake.getBlob(h("absent from every store")))
+    }
+    val (inline, inlineTasks) = jobsOf("budget-inline") {
+      assert(new String(lake.getBlob(h(tiny)), StandardCharsets.UTF_8) == tiny)
+    }
+    val (single, singleTasks) = jobsOf("budget-single") {
+      assert(new String(lake.getBlob(h(mid)), StandardCharsets.UTF_8) == mid)
+    }
+    val depth = s1.catalog.agg(max(col("tree_depth"))).head().getInt(0)
+    val (treeJobs, _) = jobsOf("budget-tree") {
+      assert(new String(lake.getBlob(h(tree("spill"))), StandardCharsets.UTF_8) == tree("spill"))
+    }
+    assert(miss == 1, s"a miss is answered by the probe alone: $miss jobs")
+    assert(inline <= 1, s"an inline hit is answered by the probe alone: $inline jobs")
+    assert(single <= 2, s"a single-chunk hit in the second store: probe + leaf read, got $single jobs")
+    assert(depth == 2, s"fixture: tree depth $depth")
+    assert(treeJobs <= depth + 2, s"a depth-$depth tree: probe + one job per level + leaves, got $treeJobs jobs")
+    Seq(missTasks, inlineTasks, singleTasks).foreach { t =>
+      assert(t < params.nBuckets, s"a job with $t tasks: the whole chunks/ tree was listed")
+    }
+  }
+
+  test("getBlob resolves the first store holding the blob live; tombstones are seen at once") {
+    val (p0, p1) = (tmp(), tmp())
+    val cfg = LakeConfig(Seq(StoreEntry(p0), StoreEntry(p1)))
+    val lake = Lake.init(spark, cfg)
+    lake.stores.foreach(_.putBlobs(blobDf(1L -> big)))
+    val hBig = sha256hex(big.getBytes(StandardCharsets.UTF_8))
+    // tombstoned in store 0 only: store 1 serves it, byte for byte
+    assert(lake.stores(0).deleteBlobs(Seq(hBig)) == 1)
+    assert(!lake.stores(0).containsBlob(hBig) && lake.stores(1).containsBlob(hBig))
+    assert(java.util.Arrays.equals(lake.getBlob(hBig), big.getBytes(StandardCharsets.UTF_8)))
+
+    // a delete through another handle is seen by this handle's next read
+    lake.put(blobDf(2L -> mid))
+    val hMid = sha256hex(mid.getBytes(StandardCharsets.UTF_8))
+    assert(new String(lake.getBlob(hMid), StandardCharsets.UTF_8) == mid)
+    assert(Lake.init(spark, cfg).delete(Seq(hMid)) == 1)
+    intercept[BlobNotFoundException](lake.getBlob(hMid))
+
+    intercept[BlobNotFoundException](lake.getBlob(sha256hex("in no store".getBytes(StandardCharsets.UTF_8))))
+  }
+
+  test("getBlob verifies on read: a flipped bit in a raw single chunk or a tree leaf raises") {
+    val rnd = new scala.util.Random(7)
+    val raw = Array.fill(200)(rnd.nextInt(256).toByte) // incompressible: stored raw
+    val p = tmp()
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(p))))
+    val store = lake.stores.head
+    store.putBlobs(Seq(raw, big.getBytes(StandardCharsets.UTF_8)).toDF("data"))
+    val (hRaw, hBig) = (sha256hex(raw), sha256hex(big.getBytes(StandardCharsets.UTF_8)))
+    assert(java.util.Arrays.equals(lake.getBlob(hRaw), raw))
+
+    val rawChunk = store.catalog.filter(col("blob_hash") === hRaw).select("root_hash").as[String].head()
+    assert(store.chunks.filter(col("chunk_hash") === rawChunk).select("enc").as[String].head() == "raw")
+    flipChunk(store, rawChunk)
+    intercept[InvalidMagicException](lake.getBlob(hRaw))
+
+    val leaf = store.manifest.filter(col("blob_hash") === hBig && col("level") === 0 && col("part_idx") === 1L)
+      .select("chunk_hash").as[String].head()
+    flipChunk(store, leaf)
+    intercept[InvalidMagicException](lake.getBlob(hBig))
   }
 
   test("bucket pruning: chunk reads filter to the hash-prefix partition") {
