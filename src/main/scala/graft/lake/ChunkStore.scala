@@ -409,54 +409,55 @@ final class ChunkStore private (
   }
 
   /** Point lookups via the recursive manifest tree (reference LongHkey
-    * expansion). One catalog probe ([[ChunkStore.resolve]]: a single
-    * job over the catalog and the tombstones, filtered to `hashes`)
-    * hands each live blob's catalog row to the driver, which walks the
-    * tree from there without re-scanning the catalog: each tree level
-    * is one job that reads only the `chunks/bucket=N` directories its
-    * nodes hash to ([[chunksIn]]; store/mod.rs:252-257 — the
-    * difference between reading 100 TB and reading 100 GB), and the
-    * returned frame reads the leaves the same way. Depth is
-    * log_fanout(parts), so a point read costs the probe, one job per
-    * level and the frame's own job.
+    * expansion). One catalog probe ([[probe]]: a single job over the
+    * catalog and the tombstones, filtered to `hashes`) hands each live
+    * blob's catalog row to the driver, which walks the tree from there
+    * without re-scanning the catalog: each tree level is one job that
+    * reads only the `chunks/bucket=N` directories its nodes hash to
+    * ([[chunksIn]]; store/mod.rs:252-257 — the difference between
+    * reading 100 TB and reading 100 GB), and the returned frame reads
+    * the leaves the same way. Depth is log_fanout(parts), so a point
+    * read costs the probe, one job per level and the frame's own job.
     *
-    * Returns (blob_hash, data, verified) ordered by blob_hash; missing
-    * and tombstoned hashes are absent. Nothing is cached.
+    * Returns (blob_hash, data, verified) ordered by blob_hash. Missing
+    * and tombstoned hashes are absent; every live hash has a row, and
+    * one whose chunks are missing or corrupt reads `verified` false
+    * (with null `data` when no part could be read). Nothing is cached.
     */
   def getBlobsByHashes(hashes: Seq[String]): DataFrame =
-    readEntries(ChunkStore.resolve(Seq(this), hashes).values.map(_._2).toSeq)
+    readEntries(lookup(hashes).values.toSeq)
+
+  /** This store's live catalog rows for `hashes`: the probe alone. */
+  private def lookup(hashes: Seq[String]): Map[String, CatalogEntry] =
+    if (hashes.isEmpty) Map.empty else liveEntries(probe(hashes).collect().toSeq)
 
   /** (blob_hash, data, verified) for live catalog rows, ordered by
     * blob_hash. Inline payloads come from the rows themselves; chunked
     * blobs are walked on the driver ([[walk]]) down to their leaves,
-    * which the frame fetches bucket-scoped. Inline payloads and leaf
-    * parts meet in one single-partition aggregate, so the frame runs as
-    * one job with no shuffle (a point read's leaf set is small by
-    * definition; bulk restores go through [[getBlobs]]).
+    * which the frame fetches bucket-scoped. Each entry also contributes
+    * a row of its own (a null part for a chunked blob), so a blob none
+    * of whose parts can be read still gets a row, unverified. Up to
+    * [[MaxPointRefs]] leaves the parts meet in one single-partition
+    * aggregate, so the frame runs as one job with no shuffle; a larger
+    * leaf set (a big blob) is aggregated in parallel.
     */
   private def readEntries(entries: Seq[CatalogEntry]): DataFrame = {
     import scala.jdk.CollectionConverters._
     val leaves = walk(entries)
-    val inlineParts = spark.createDataFrame(
-      entries.filter(_.kind == "inline").map(e => Row(e.blobHash, 0L, e.inlineData)).asJava,
+    val own = spark.createDataFrame(
+      entries.map(e => Row(e.blobHash, 0L, if (e.kind == "inline") e.inlineData else null)).asJava,
       partSchema)
     val parts =
-      if (leaves.isEmpty) inlineParts
-      else {
-        val owners = typedLit(leaves.groupBy(_.chunkHash).map { case (h, rs) => h -> rs.map(r => (r.blobHash, r.idx)) })
-        inlineParts.unionByName(
-          fetch(leaves)
-            .select(explode(element_at(owners, col("chunk_hash"))).as("o"), col("part"))
-            .select(col("o._1").as("blob_hash"), col("o._2").as("part_idx"), col("part")))
-      }
-    parts
-      .coalesce(1)
+      if (leaves.isEmpty) own
+      else own.unionByName(fetch(leaves).withColumnRenamed("idx", "part_idx"))
+    (if (leaves.size <= MaxPointRefs) parts.coalesce(1) else parts)
       .groupBy(col("blob_hash"))
       // a set: a chunk stored twice (a replayed append) is one part
-      .agg(Codec.concatBinary(
-        transform(array_sort(collect_set(struct(col("part_idx"), col("part")))), p => p.getField("part"))
-      ).as("data"))
-      .withColumn("verified", sha2(col("data"), 256) === col("blob_hash"))
+      .agg(array_sort(collect_set(when(col("part").isNotNull, struct(col("part_idx"), col("part"))))).as("parts"))
+      .select(
+        col("blob_hash"),
+        when(size(col("parts")) > 0, Codec.concatBinary(transform(col("parts"), p => p.getField("part")))).as("data"))
+      .withColumn("verified", coalesce(sha2(col("data"), 256) === col("blob_hash"), lit(false)))
       .orderBy("blob_hash")
   }
 
@@ -489,11 +490,11 @@ final class ChunkStore private (
         log.warn(
           s"tree deeper than recorded tree_depth=$maxDepth in $path " +
             s"(extra level ${level - maxDepth}); continuing depth-agnostic walk")
-      val nodes = fetch(frontier).collect()
-        .map(r => r.getString(0) -> new String(r.getAs[Array[Byte]](1), StandardCharsets.UTF_8)).toMap
-      val children = frontier.flatMap(f => nodes.get(f.chunkHash).toSeq.flatMap(parseNode(f.blobHash, _)))
+      val children = fetch(frontier).collect().toSeq
+        .flatMap(r => parseNode(r.getString(0), new String(r.getAs[Array[Byte]](2), StandardCharsets.UTF_8)))
+        .distinct
       leaves ++= children.collect { case (r, true) => r }
-      frontier = children.collect { case (r, false) => r }.distinct
+      frontier = children.collect { case (r, false) => r }
     }
     leaves.distinct
   }
@@ -510,23 +511,31 @@ final class ChunkStore private (
       }
     }
 
-  /** (chunk_hash, part): the decrypted chunks behind `refs`, read from
-    * only the bucket directories they hash to. The hash predicate is a
-    * literal IN list (pushed down to parquet) for node-sized sets and a
-    * literal map lookup beyond that — thousands of IN literals make the
-    * scan predicate itself the cost. A chunk whose stored bytes no
-    * longer hash to its address is dropped, so its blob fails
-    * verification instead of decrypting garbage.
+  /** (blob_hash, idx, part) for each of `refs`: the decrypted chunks
+    * behind them, read from only the bucket directories they hash to.
+    * Up to [[MaxPointRefs]] refs, the chunk hashes are a literal IN
+    * list (pushed down to parquet) and each match finds its refs and
+    * key in a literal map, so the read is one scan. A larger set (a big
+    * blob's leaves or lower levels) is matched by a broadcast hash join
+    * instead: a literal map is searched linearly, so thousands of
+    * entries make the per-row lookup itself the cost. A chunk whose
+    * stored bytes no longer hash to its address is dropped, so its blob
+    * fails verification instead of decrypting garbage.
     */
   private def fetch(refs: Seq[PartRef]): DataFrame = {
-    val keys = refs.map(r => r.chunkHash -> r.key).toMap
-    val keyOf = typedLit(keys)
-    val wanted =
-      if (keys.size <= MaxHashLiterals) col("chunk_hash").isin(keys.keys.toSeq: _*)
-      else map_contains_key(keyOf, col("chunk_hash"))
-    chunksIn(refs.map(_.bucket))
-      .filter(wanted && sha2(col("data"), 256) === col("chunk_hash"))
-      .select(col("chunk_hash"), decoded(col("data"), col("enc"), element_at(keyOf, col("chunk_hash"))).as("part"))
+    import scala.jdk.CollectionConverters._
+    val stored = chunksIn(refs.map(_.bucket)).filter(sha2(col("data"), 256) === col("chunk_hash"))
+    val matched =
+      if (refs.size <= MaxPointRefs) {
+        val owners = typedLit(refs.groupBy(_.chunkHash).map { case (h, rs) => h -> rs.map(r => (r.blobHash, r.idx, r.key)) })
+        stored.filter(col("chunk_hash").isin(refs.map(_.chunkHash).distinct: _*))
+          .select(col("data"), col("enc"), explode(element_at(owners, col("chunk_hash"))).as("o"))
+          .select(col("o._1").as("blob_hash"), col("o._2").as("idx"), col("data"), col("enc"), col("o._3").as("key"))
+      } else {
+        val wanted = spark.createDataFrame(refs.map(r => Row(r.blobHash, r.idx, r.chunkHash, r.key)).asJava, refSchema)
+        stored.join(broadcast(wanted), Seq("chunk_hash"))
+      }
+    matched.select(col("blob_hash"), col("idx"), decoded(col("data"), col("enc"), col("key")).as("part"))
   }
 
   /** The chunk table restricted to the `bucket=N` directories of
@@ -552,12 +561,13 @@ final class ChunkStore private (
     }
   }
 
-  /** This store's side of the catalog probe in [[ChunkStore.resolve]]:
-    * its catalog rows (`dead` false) and tombstones (`dead` true) for
-    * `hashes`.
+  /** This store's side of a point read's catalog probe: its catalog
+    * rows (`dead` false) and tombstones (`dead` true) for `hashes`, as
+    * [[ChunkStore.liveEntries]] reads them. [[Lake.getBlob]] unions
+    * every store's probe into one job.
     */
-  private def probe(hashes: Seq[String]): DataFrame = {
-    val wanted = col("blob_hash").isin(hashes: _*)
+  private[lake] def probe(hashes: Seq[String]): DataFrame = {
+    val wanted = col("blob_hash").isin(hashes.distinct: _*)
     catalog.filter(wanted)
       .select(lit(false).as("dead"), col("blob_hash"), col("kind"), col("inline_data"),
         col("root_hash"), col("root_key"), col("root_bucket"), col("tree_depth"))
@@ -569,7 +579,7 @@ final class ChunkStore private (
     * A payload that is missing or does not hash to its address raises
     * [[InvalidMagicException]]: the catalog says the blob is live.
     */
-  private def readBlob(e: CatalogEntry): Array[Byte] = {
+  private[lake] def readBlob(e: CatalogEntry): Array[Byte] = {
     val data =
       if (e.kind == "inline") Some(e.inlineData).filter(d => sha256Hex(d) == e.blobHash)
       else readEntries(Seq(e)).collect().headOption.filter(_.getAs[Boolean]("verified")).map(_.getAs[Array[Byte]]("data"))
@@ -580,10 +590,11 @@ final class ChunkStore private (
     * alone answers a miss or an inline blob), then bucket-scoped chunk
     * reads, one job per tree level plus one for the leaves.
     */
-  def getBlob(hash: String): Array[Byte] = ChunkStore.getBlob(Seq(this), hash)
+  def getBlob(hash: String): Array[Byte] =
+    lookup(Seq(hash)).get(hash).fold(throw new BlobNotFoundException(hash))(readBlob)
 
   /** Whether the blob is live here: the catalog probe alone, one job. */
-  def containsBlob(hash: String): Boolean = ChunkStore.resolve(Seq(this), Seq(hash)).contains(hash)
+  def containsBlob(hash: String): Boolean = lookup(Seq(hash)).contains(hash)
 
   /** Tombstone blobs for deletion (no data is reclaimed yet — chunks
     * are shared across blobs by content addressing, so the space comes
@@ -1065,10 +1076,11 @@ object ChunkStore {
   private[lake] def sha256Hex(data: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(data).map("%02x".format(_)).mkString
 
-  /** Above this many chunk hashes a point read matches them with a map
-    * lookup instead of an IN list (see `ChunkStore.fetch`).
+  /** Above this many chunk references a point read matches chunks with
+    * a broadcast join instead of literal lists and maps, and
+    * reassembles its leaves in parallel (see `ChunkStore.fetch`).
     */
-  private val MaxHashLiterals = 64
+  private val MaxPointRefs = 256
 
   private val partSchema: StructType = StructType(Seq(
     StructField("blob_hash", StringType),
@@ -1076,45 +1088,28 @@ object ChunkStore {
     StructField("part", BinaryType),
   ))
 
-  /** The catalog probe behind every point read: each store's catalog
-    * rows and tombstones for `hashes`, tagged with the store's index,
-    * unioned and collected in ONE job however many stores there are.
-    * Each hash resolves to the first store (in `stores` order) whose
-    * catalog holds it and whose tombstones do not — the reference's
-    * fallback chain (lake/mod.rs:59-75), with liveness judged per
-    * store, so a blob deleted in one store is still served by the
-    * next. Hashes live nowhere are absent from the result.
-    */
-  private[lake] def resolve(stores: Seq[ChunkStore], hashes: Seq[String]): Map[String, (ChunkStore, CatalogEntry)] =
-    if (stores.isEmpty || hashes.isEmpty) Map.empty
-    else {
-      val rows = stores.zipWithIndex
-        .map { case (s, i) => s.probe(hashes.distinct).withColumn("store", lit(i)) }
-        .reduceLeft(_ unionByName _)
-        .collect()
-      def key(r: Row) = (r.getAs[Int]("store"), r.getAs[String]("blob_hash"))
-      val (dead, present) = rows.partition(_.getAs[Boolean]("dead"))
-      val tombstoned = dead.map(key).toSet
-      present.filterNot(r => tombstoned(key(r)))
-        .groupBy(_.getAs[String]("blob_hash"))
-        .map { case (h, rs) =>
-          val r = rs.minBy(_.getAs[Int]("store"))
-          h -> (stores(r.getAs[Int]("store")), CatalogEntry(
-            h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
-            r.getAs[String]("root_key"), Option(r.getAs[Integer]("root_bucket")).fold(0)(_.intValue),
-            Option(r.getAs[Integer]("tree_depth")).fold(0)(_.intValue)))
-        }
-    }
+  private val refSchema: StructType = StructType(Seq(
+    StructField("blob_hash", StringType),
+    StructField("idx", LongType),
+    StructField("chunk_hash", StringType),
+    StructField("key", StringType),
+  ))
 
-  /** Point read across `stores`: one probe ([[resolve]]) picks the
-    * first store holding `hash` live, which reads it with
-    * verify-on-read.
+  /** The live catalog rows among one store's [[ChunkStore.probe]]
+    * rows, by blob hash: those whose hash the same store has not
+    * tombstoned.
     */
-  private[lake] def getBlob(stores: Seq[ChunkStore], hash: String): Array[Byte] =
-    resolve(stores, Seq(hash)).get(hash) match {
-      case Some((s, e)) => s.readBlob(e)
-      case None => throw new BlobNotFoundException(hash)
-    }
+  private[lake] def liveEntries(rows: Seq[Row]): Map[String, CatalogEntry] = {
+    val (dead, present) = rows.partition(_.getAs[Boolean]("dead"))
+    val tombstoned = dead.map(_.getAs[String]("blob_hash")).toSet
+    present.filterNot(r => tombstoned(r.getAs[String]("blob_hash"))).map { r =>
+      val h = r.getAs[String]("blob_hash")
+      h -> CatalogEntry(
+        h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
+        r.getAs[String]("root_key"), Option(r.getAs[Integer]("root_bucket")).fold(0)(_.intValue),
+        Option(r.getAs[Integer]("tree_depth")).fold(0)(_.intValue))
+    }.toMap
+  }
 
   /** The [[ChunkStore.fsck]] invariant algebra over ARBITRARY
     * (manifest, chunks, catalog) relations — static so the audit can

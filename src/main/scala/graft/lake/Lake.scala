@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,8 @@ object LakeConfig {
   *    store: a blob tombstoned in one store is served by the next);
   *  - put: first writable store with space; OutOfSpace/ReadOnly →
   *    try next; none left → LakeOutOfStores, carrying the last
-  *    store's refusal as its cause (lake/mod.rs:77-118).
+  *    writable store's refusal as its cause, or StoreReadOnly when no
+  *    store is writable (lake/mod.rs:77-118).
   */
 final class Lake private (val spark: SparkSession, val config: LakeConfig, val stores: Seq[ChunkStore]) {
 
@@ -71,14 +72,15 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
 
   def put(blobs: DataFrame): PutResult = {
     var lastErr: Throwable = null
-    stores.foreach { s =>
+    writable.foreach { s =>
       try return s.putBlobs(blobs)
       catch {
         case e: StoreOutOfSpaceException => lastErr = e
         case e: StoreReadOnlyException => lastErr = e
       }
     }
-    throw new LakeOutOfStoresException(lastErr)
+    throw new LakeOutOfStoresException(
+      if (writable.isEmpty) new StoreReadOnlyException(stores.map(_.path).mkString(", ")) else lastErr)
   }
 
   /** Bulk get across all stores; first (config-order) store holding a
@@ -96,13 +98,31 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
       .drop("rn", "store_priority")
   }
 
-  /** Point read with verify-on-read: one catalog probe across every
-    * store picks the first store holding the blob live, which answers
-    * a miss or an inline blob by itself; a chunked blob then costs one
-    * bucket-scoped job per tree level plus one for its leaves
-    * ([[ChunkStore.getBlobsByHashes]]).
+  /** Point read with verify-on-read. Every store's catalog probe
+    * ([[ChunkStore.probe]]), tagged with the store's index, is unioned
+    * and collected in ONE job however many stores there are; the first
+    * store (in config order) that holds the blob and has not
+    * tombstoned it serves it, so a blob deleted in one store is still
+    * served by the next. The probe alone answers a miss or an inline
+    * blob; a chunked blob then costs one bucket-scoped job per tree
+    * level plus one for its leaves ([[ChunkStore.getBlobsByHashes]]).
+    * Nothing is cached across calls.
     */
-  def getBlob(hash: String): Array[Byte] = ChunkStore.getBlob(stores, hash)
+  def getBlob(hash: String): Array[Byte] = {
+    val rows =
+      if (stores.isEmpty) Map.empty[Int, Seq[Row]]
+      else stores.zipWithIndex
+        .map { case (s, i) => s.probe(Seq(hash)).withColumn("store", lit(i)) }
+        .reduceLeft(_ unionByName _)
+        .collect().toSeq
+        .groupBy(_.getAs[Int]("store"))
+    stores.indices.iterator
+      .flatMap(i => ChunkStore.liveEntries(rows.getOrElse(i, Seq.empty)).get(hash).map(stores(i) -> _))
+      .nextOption() match {
+      case Some((s, e)) => s.readBlob(e)
+      case None => throw new BlobNotFoundException(hash)
+    }
+  }
 
   /** Tombstone blobs in every writable store that holds them (a blob
     * put before a spill-over may live in several). Returns the number

@@ -298,6 +298,14 @@ class LakeSpec extends AnyFunSuite {
     assert(e.getCause.isInstanceOf[StoreReadOnlyException], s"cause: ${e.getCause}")
   }
 
+  test("a full hot store before a readonly archive: LakeOutOfStores carries the OutOfSpace") {
+    val archive = tmp()
+    ChunkStore.init(spark, archive)
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(tmp(), maxBytes = 100), StoreEntry(archive, readonly = true))))
+    val e = intercept[LakeOutOfStoresException](lake.put(blobDf(1L -> big)))
+    assert(e.getCause.isInstanceOf[StoreOutOfSpaceException], s"cause: ${e.getCause}")
+  }
+
   test("config TOML round-trip preserves entries") {
     val cfg = LakeConfig(Seq(StoreEntry("/a", readonly = true), StoreEntry("/b", maxBytes = 12345)))
     val back = LakeConfig.fromToml(cfg.toToml)
@@ -555,6 +563,32 @@ class LakeSpec extends AnyFunSuite {
       .select("chunk_hash").as[String].head()
     flipChunk(store, leaf)
     intercept[InvalidMagicException](lake.getBlob(hBig))
+
+    // the frame keeps a row for each corrupt blob, flagged unverified:
+    // corruption never reads as a miss
+    val rows = store.getBlobsByHashes(Seq(hRaw, hBig)).collect()
+    assert(rows.map(_.getAs[String]("blob_hash")).toSeq == Seq(hRaw, hBig).sorted)
+    assert(rows.forall(!_.getAs[Boolean]("verified")))
+    assert(rows.find(_.getAs[String]("blob_hash") == hRaw).get.isNullAt(1), "no part of the raw blob is readable")
+  }
+
+  test("a blob of over 256 leaves reads through the parallel path; a corrupt leaf reads unverified") {
+    val p = tmp()
+    val store = ChunkStore.init(spark, p)
+    val huge = (0 until 30000).map(i => s"h$i.").mkString.take(LakeParams().chunkMax.toInt * 300)
+    store.putBlobs(blobDf(1L -> huge, 2L -> big))
+    val (hHuge, hBig) = (sha256hex(huge.getBytes(StandardCharsets.UTF_8)), sha256hex(big.getBytes(StandardCharsets.UTF_8)))
+    val leaves = store.manifest.filter(col("blob_hash") === hHuge && col("level") === 0)
+    assert(leaves.count() > 256, s"fixture: ${leaves.count()} leaves")
+    assert(new String(store.getBlob(hHuge), StandardCharsets.UTF_8) == huge)
+    def read() = store.getBlobsByHashes(Seq(hHuge, hBig)).collect()
+      .map(r => r.getString(0) -> (Option(r.getAs[Array[Byte]](1)).map(new String(_, StandardCharsets.UTF_8)), r.getBoolean(2))).toMap
+    assert(read() == Map(hHuge -> (Some(huge), true), hBig -> (Some(big), true)))
+
+    flipChunk(store, leaves.filter(col("part_idx") === 7L).select("chunk_hash").as[String].head())
+    intercept[InvalidMagicException](store.getBlob(hHuge))
+    val after = read()
+    assert(!after(hHuge)._2 && after(hBig) == (Some(big), true), s"only the huge blob is unverified: $after")
   }
 
   test("bucket pruning: chunk reads filter to the hash-prefix partition") {
