@@ -85,6 +85,14 @@ object LakeParams {
   *    lake/util.rs verify_magic). All paths go through Hadoop's
   *    FileSystem, so hdfs:///s3a:// store dirs work like local ones.
   *
+  * A put is two steps. [[ChunkStore.stage]] does the content work,
+  * which depends on [[LakeParams]] alone: ladder, parts, convergent
+  * encryption, manifest tree. It runs once per put, outside any lock,
+  * however many stores a [[Lake]] offers the batch to. [[commit]] does
+  * this store's work under its write lock: dedup against its catalog
+  * and chunks, the capacity gate, the appends. [[replicateTo]] feeds
+  * the same commit.
+  *
   * Write order is chunks → manifest → catalog: a blob becomes visible
   * only once fully written, so a failed-and-retried put (the normal
   * streaming foreachBatch failure mode) re-runs idempotently — chunk
@@ -111,17 +119,19 @@ final class ChunkStore private (
   private def catalogDir = s"$path/catalog"
   private def tombstonesDir = s"$path/tombstones"
 
-  private def emptyDf(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  private def rowsOf(schema: StructType, rows: Row*): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
 
   private def readOr(dir: String, schema: StructType): DataFrame = {
     val p = new HPath(dir)
     if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
       spark.read.schema(schema).parquet(dir)
-    else emptyDf(schema)
+    else rowsOf(schema)
   }
 
-  def chunks: DataFrame = readOr(chunksDir, chunkSchema)
+  def chunks: DataFrame = readChunks(bucketDirs)
   def manifest: DataFrame = readOr(manifestDir, manifestSchema)
   def catalog: DataFrame = readOr(catalogDir, catalogSchema)
   def tombstones: DataFrame = readOr(tombstonesDir, tombstoneSchema)
@@ -133,22 +143,29 @@ final class ChunkStore private (
   def liveCatalog: DataFrame = catalog.join(tombstones, Seq("blob_hash"), "left_anti")
 
   /** Bytes currently stored (at-rest chunk payloads + inline payloads). */
-  def currentBytes: Long = {
-    val c = chunks.agg(coalesce(sum(col("size")), lit(0L))).head.getLong(0)
-    val i = catalog
-      .filter(col("kind") === "inline")
-      .agg(coalesce(sum(octet_length(col("inline_data")).cast(LongType)), lit(0L)))
-      .head
-      .getLong(0)
-    c + i
+  def currentBytes: Long = tally(holdings(chunks, catalog, added = false))._1
+
+  /** (bytes, blobs) rows: the at-rest size of each of `chunkRows`, the
+    * inline payload of each of `catalogRows`, and, when `added`, one
+    * blob per catalog row.
+    */
+  private def holdings(chunkRows: DataFrame, catalogRows: DataFrame, added: Boolean): DataFrame =
+    chunkRows.select(col("size").as("bytes"), lit(0L).as("blobs")).unionByName(catalogRows.select(
+      when(col("kind") === "inline", octet_length(col("inline_data"))).otherwise(lit(0)).cast(LongType).as("bytes"),
+      lit(if (added) 1L else 0L).as("blobs")))
+
+  /** Total bytes and blobs of `holdings` frames, in one job. */
+  private def tally(holdings: DataFrame*): (Long, Long) = {
+    val r = holdings.reduce(_ unionByName _).agg(coalesce(sum(col("bytes")), lit(0L)), coalesce(sum(col("blobs")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
-  /** Collect-free put for large batches: same semantics as
-    * [[putBlobs]] but the per-blob summary stays distributed (at
+  /** Collect-free put for large batches: the same stage and commit as
+    * [[putBlobs]], but the per-blob summary stays distributed (at
     * 100 TB the driver must never hold one row per blob).
     */
   def putBlobsDf(blobs: DataFrame): DataFrame = {
-    putBlobsInternal(blobs, collectSummary = false)
+    put(blobs)(_ => ())
     catalog.join(
       blobs.select(sha2(col("data"), 256).as("blob_hash")).distinct(),
       Seq("blob_hash"),
@@ -156,30 +173,99 @@ final class ChunkStore private (
     ).select(col("blob_hash"), col("total_len"), col("kind"))
   }
 
-  /** Stores every blob in `blobs` (column `data`: binary). Content-
-    * addressed: already-present blobs and chunks are skipped
-    * (idempotent put, store/mod.rs:330-344).
+  /** Stores every blob in `blobs` (column `data`: binary): one
+    * [[ChunkStore.stage]] of the batch, then one [[commit]] here.
+    * Content-addressed: already-present blobs and chunks are skipped
+    * (idempotent put, store/mod.rs:330-344), and a blob deleted here
+    * and put again before [[gc]] is live again.
     */
-  def putBlobs(blobs: DataFrame): PutResult =
-    putBlobsInternal(blobs, collectSummary = true).getOrElse(PutResult(Nil))
+  def putBlobs(blobs: DataFrame): PutResult = put(blobs)(_.summary)
 
-  /** Convergent encrypt-at-rest pipeline for one level of parts.
-    * In: (blob_hash, part_idx, part). Out adds: part_len (plaintext),
-    * enc ('gcm'|'raw'), stored (at-rest bytes), stored_len,
-    * chunk_hash (address of the STORED bytes), key (hex, null when
-    * raw), bucket. Mirrors put_chunk/put_encrypted_chunk:
-    * deflate+encrypt, keep raw when that is not smaller.
+  private def put[T](blobs: DataFrame)(result: Staged => T): T = {
+    if (readonly) throw new StoreReadOnlyException(path)
+    val staged = stage(blobs, Seq(this))
+    try { commit(staged); result(staged) }
+    finally staged.release()
+  }
+
+  /** The store half of every write of blobs: a put's and
+    * [[replicateTo]]'s. Under the write lock it keeps the staged blobs
+    * this store's raw catalog lacks, their manifest rows, and those of
+    * their chunks this store lacks. It refuses the batch before any
+    * write when that would take a bounded store past `maxBytes`
+    * (reference: DataStoreOutOfSpace), then appends chunks → manifest →
+    * catalog, each row placed by this store's bucket count. Last, for a
+    * put, it lifts this store's tombstones on the staged blobs: a blob
+    * tombstoned here is not live here, so the staging always covers it.
+    * Returns the number of blobs added.
     */
-  private def encryptParts(df: DataFrame): DataFrame =
-    df.withColumn("part_len", octet_length(col("part")).cast(LongType))
-      .withColumn("ct", Convergent.encryptDeflated(col("part")))
-      .withColumn("enc", when(octet_length(col("ct")) <= col("part_len"), lit("gcm")).otherwise(lit("raw")))
-      .withColumn("stored", when(col("enc") === "gcm", col("ct")).otherwise(col("part")))
-      .withColumn("chunk_hash", sha2(col("stored"), 256))
-      .withColumn("key", when(col("enc") === "gcm", sha2(col("part"), 256)).otherwise(lit(null).cast(StringType)))
-      .withColumn("bucket", bucketOf(col("chunk_hash"), params.nBuckets))
-      .withColumn("stored_len", octet_length(col("stored")).cast(LongType))
-      .select("blob_hash", "part_idx", "chunk_hash", "key", "bucket", "part_len", "enc", "stored", "stored_len")
+  private[lake] def commit(batch: Staged): Long = {
+    if (readonly) throw new StoreReadOnlyException(path)
+    withWriteLock {
+      val rows = batch.rows.join(catalog.select("blob_hash"), Seq("blob_hash"), "left_anti")
+      try {
+        val newCat = rows.filter(col("level").isNull)
+        val newMan = rows.filter(col("level").isNotNull)
+        val newChunks = newMan
+          .filter(col("data").isNotNull)
+          .select(col("chunk_hash"), col("size"), col("enc"), col("data"))
+          .dropDuplicates("chunk_hash")
+          .join(chunks.select("chunk_hash"), Seq("chunk_hash"), "left_anti")
+        // the blobs to add and, for a bounded store, the bytes it would
+        // hold with them: one job either way. The new rows are cached for
+        // the appends, but only after a gate, whose two reads of them
+        // would each materialize the cache.
+        val n =
+          if (maxBytes == Long.MaxValue) { rows.cache(); newCat.coalesce(1).count() }
+          else {
+            val (bytes, blobs) = tally(holdings(chunks, catalog, added = false), holdings(newChunks, newCat, added = true))
+            if (blobs > 0 && bytes > maxBytes) throw new StoreOutOfSpaceException(path)
+            rows.cache()
+            blobs
+          }
+        if (n > 0) {
+          newChunks.withColumn("bucket", bucketOf(col("chunk_hash"), params.nBuckets))
+            .write.mode(SaveMode.Append).partitionBy("bucket").parquet(chunksDir)
+          // level-major, so a file keeps each level's rows together
+          // (parquet encodes their runs compactly); `level` is never null
+          // here, and the coalesce makes the file's column required
+          newMan
+            .sortWithinPartitions("level", "blob_hash", "part_idx")
+            .select(col("blob_hash"), coalesce(col("level"), lit(0)).as("level"), col("part_idx"), col("chunk_hash"), col("key"),
+              bucketOf(col("chunk_hash"), params.nBuckets).as("bucket"), col("part_len"))
+            .write.mode(SaveMode.Append).parquet(manifestDir)
+          newCat
+            .select(col("blob_hash"), col("total_len"), col("kind"), col("inline_data"), col("root_hash"), col("root_key"),
+              bucketOf(col("root_hash"), params.nBuckets).as("root_bucket"), col("tree_depth"))
+            .write.mode(SaveMode.Append).parquet(catalogDir)
+        }
+        if (batch.blobs.isDefined) revive(batch.rows.filter(col("level").isNull).select("blob_hash"))
+        n
+      } finally rows.unpersist()
+    }
+  }
+
+  /** Lifts this store's tombstones on `hashes`, so a blob deleted and
+    * put again before [[gc]] is live again (its rows stay until gc).
+    * Only the tombstone files naming one of them are rewritten: their
+    * other rows are appended first and the old files deleted after, so
+    * a reader never sees fewer tombstones than survive.
+    */
+  private def revive(hashes: DataFrame): Unit = {
+    val dir = new HPath(tombstonesDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(dir)) {
+      val files = tombstones.withColumn("file", input_file_name())
+        .join(hashes, Seq("blob_hash"), "left_semi")
+        .select("file").distinct().collect().map(_.getString(0))
+      if (files.nonEmpty) {
+        spark.read.schema(tombstoneSchema).parquet(files.toIndexedSeq: _*)
+          .join(hashes, Seq("blob_hash"), "left_anti")
+          .write.mode(SaveMode.Append).parquet(tombstonesDir)
+        files.foreach(f => fs.delete(new HPath(new java.net.URI(f)), false))
+      }
+    }
+  }
 
   private def lockFile = new HPath(path, "_GRAFT_WRITE_LOCK")
 
@@ -234,134 +320,6 @@ final class ChunkStore private (
         try withWriteLock(recoverInterruptedSwap())
         catch { case _: StoreLockedException => () }
     }
-  }
-
-  private def putBlobsInternal(blobs: DataFrame, collectSummary: Boolean): Option[PutResult] = {
-    if (readonly) throw new StoreReadOnlyException(path)
-    withWriteLock {
-      putBlobsLocked(blobs, collectSummary)
-    }
-  }
-
-  private def putBlobsLocked(blobs: DataFrame, collectSummary: Boolean): Option[PutResult] = {
-    val ladder = blobs
-      .select(col("data"))
-      .filter(col("data").isNotNull)
-      .withColumn("blob_hash", sha2(col("data"), 256))
-      .withColumn("total_len", octet_length(col("data")).cast(LongType))
-      .withColumn("kind", kindOf(col("total_len"), params))
-      .dropDuplicates("blob_hash")
-
-    val known = catalog.select(col("blob_hash").as("known_hash"))
-    val fresh = ladder
-      .join(known, col("blob_hash") === col("known_hash"), "left_anti")
-      .cache()
-    val cached = scala.collection.mutable.ListBuffer[DataFrame](fresh)
-    try {
-      val inline = fresh.filter(col("kind") === "inline")
-      val chunked = fresh.filter(col("kind") =!= "inline")
-
-      // split into fixed-size parts; SQL substring is 1-based and
-      // byte-addressed on BinaryType
-      val parts = encryptParts(
-        chunked
-          .withColumn(
-            "part_idx",
-            explode(sequence(lit(0L), (col("total_len") + lit(params.chunkMax - 1)).divide(lit(params.chunkMax)).cast(LongType) - 1)),
-          )
-          .withColumn("part", expr(s"substring(data, cast(part_idx * ${params.chunkMax} + 1 as int), ${params.chunkMax})"))
-          .select(col("blob_hash"), col("part_idx"), col("part"))
-      ).cache()
-      cached += parts
-
-      // ---- recursive manifest tree (LongHkeyExpanded::from_blob →
-      // shrink): fold level-k entries into fanout-sized node blobs,
-      // store each node as a (convergently encrypted) chunk, repeat
-      // until every blob is down to a single root node. O(log_fanout n)
-      // rounds; each round is one distributed groupBy.
-      var roots = parts
-        .join(chunked.filter(col("kind") === "single").select("blob_hash"), Seq("blob_hash"), "left_semi")
-        .select(
-          col("blob_hash"), col("chunk_hash").as("root_hash"), col("key").as("root_key"),
-          col("bucket").as("root_bucket"), lit(0).as("tree_depth"),
-        )
-      var cur = parts
-        .join(chunked.filter(col("kind") === "tree").select("blob_hash"), Seq("blob_hash"), "left_semi")
-        .select(col("blob_hash"), col("part_idx").as("idx"), col("chunk_hash"), col("key"), col("part_len").as("len"), lit("L").as("ck"))
-      var depth = 0
-      var nodeLevels = List.empty[DataFrame]
-      var manifestNodeRows = List.empty[DataFrame]
-      var remaining = cur.limit(1).count() // tree blobs have ≥2 level-0 entries
-
-      while (remaining > 0) {
-        depth += 1
-        val nodesRaw = cur
-          .withColumn("node_idx", expr(s"idx DIV ${params.treeFanout}"))
-          .withColumn("line", concat_ws(",", col("idx"), col("chunk_hash"), coalesce(col("key"), lit("-")), col("len"), col("ck")))
-          .groupBy(col("blob_hash"), col("node_idx"))
-          .agg(array_join(
-            transform(array_sort(collect_list(struct(col("idx"), col("line")))), s => s.getField("line")),
-            "\n",
-          ).as("node_text"))
-          .select(col("blob_hash"), col("node_idx").as("part_idx"), col("node_text").cast(BinaryType).as("part"))
-        val nodes = encryptParts(nodesRaw).cache()
-        cached += nodes
-        nodeLevels ::= nodes
-        manifestNodeRows ::= nodes.select(
-          col("blob_hash"), lit(depth).as("level"), col("part_idx"), col("chunk_hash"), col("key"), col("bucket"), col("part_len"),
-        )
-
-        val counts = nodes.groupBy(col("blob_hash")).agg(count(lit(1)).as("n"))
-        roots = roots.unionByName(
-          nodes
-            .join(counts.filter(col("n") === 1).select("blob_hash"), Seq("blob_hash"), "left_semi")
-            .select(
-              col("blob_hash"), col("chunk_hash").as("root_hash"), col("key").as("root_key"),
-              col("bucket").as("root_bucket"), lit(depth).as("tree_depth"),
-            )
-        )
-        cur = nodes
-          .join(counts.filter(col("n") > 1).select("blob_hash"), Seq("blob_hash"), "left_semi")
-          .select(col("blob_hash"), col("part_idx").as("idx"), col("chunk_hash"), col("key"), col("part_len").as("len"), lit("N").as("ck"))
-        remaining = cur.limit(1).count()
-      }
-
-      val newChunks = (parts :: nodeLevels)
-        .map(_.select(col("chunk_hash"), col("bucket"), col("stored_len").as("size"), col("enc"), col("stored").as("data")))
-        .reduce(_ unionByName _)
-        .dropDuplicates("chunk_hash")
-        .join(chunks.select(col("chunk_hash").as("kh")), col("chunk_hash") === col("kh"), "left_anti")
-        .drop("kh")
-
-      // capacity gate (reference: DataStoreOutOfSpace before any write)
-      val newChunkBytes =
-        newChunks.agg(coalesce(sum(col("size")), lit(0L))).head.getLong(0)
-      val newInlineBytes =
-        inline.agg(coalesce(sum(col("total_len")), lit(0L))).head.getLong(0)
-      if (maxBytes != Long.MaxValue && currentBytes + newChunkBytes + newInlineBytes > maxBytes)
-        throw new StoreOutOfSpaceException(path)
-
-      newChunks.write.mode(SaveMode.Append).partitionBy("bucket").parquet(chunksDir)
-      (parts.select(col("blob_hash"), lit(0).as("level"), col("part_idx"), col("chunk_hash"), col("key"), col("bucket"), col("part_len")) :: manifestNodeRows)
-        .reduce(_ unionByName _)
-        .write.mode(SaveMode.Append).parquet(manifestDir)
-      fresh
-        .join(roots, Seq("blob_hash"), "left")
-        .select(
-          col("blob_hash"),
-          col("total_len"),
-          col("kind"),
-          when(col("kind") === "inline", col("data")).otherwise(lit(null).cast(BinaryType)).as("inline_data"),
-          col("root_hash"), col("root_key"), col("root_bucket"),
-          coalesce(col("tree_depth"), lit(0)).as("tree_depth"),
-        )
-        .write.mode(SaveMode.Append).parquet(catalogDir)
-
-      if (collectSummary) {
-        val summary = ladder.select(col("blob_hash"), col("total_len"), col("kind")).collect()
-        Some(PutResult(summary.map(r => BlobRef(r.getString(0), r.getLong(1), r.getString(2))).toSeq))
-      } else None
-    } finally cached.foreach(_.unpersist())
   }
 
   /** Decrypt stored chunk bytes back to the plaintext part. */
@@ -539,27 +497,43 @@ final class ChunkStore private (
   }
 
   /** The chunk table restricted to the `bucket=N` directories of
-    * `buckets`. Only those directories are listed — never the whole
-    * `chunks/` tree, whose nBuckets subdirectories would exceed the
-    * parallel partition discovery threshold and cost a distributed
-    * listing job — in groups at or below that threshold, so every
-    * listing stays on the driver. `basePath` keeps `bucket` a partition
-    * column and the literal bucket filter keeps it in the plan's
-    * PartitionFilters.
+    * `buckets`, each checked for existence on its own (a point read
+    * needs a few, and a listing of `chunks/` costs more than that); the
+    * literal bucket filter keeps `bucket` in the plan's PartitionFilters.
     */
   private def chunksIn(buckets: Seq[Int]): DataFrame = {
     val bs = buckets.distinct.sorted
     val conf = spark.sessionState.newHadoopConf()
     val dirs = bs.map(b => new HPath(s"$chunksDir/bucket=$b")).filter(p => p.getFileSystem(conf).exists(p))
-    if (dirs.isEmpty) emptyDf(chunkSchema)
+    readChunks(dirs).filter(col("bucket").isin(bs.map(Integer.valueOf): _*))
+  }
+
+  /** This store's `chunks/bucket=N` directories, from one listing of
+    * `chunks/`.
+    */
+  private def bucketDirs: Seq[HPath] = {
+    val p = new HPath(chunksDir)
+    val listed =
+      try p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")).map(_.getPath).sortBy(_.getName)
+  }
+
+  /** The chunk table over the bucket directories `dirs`. Spark lists
+    * them itself, never the whole `chunks/` tree: its nBuckets
+    * subdirectories would exceed the parallel partition discovery
+    * threshold and cost a distributed listing job. The directories are
+    * read in groups at or below that threshold, so every listing stays
+    * on the driver; `basePath` keeps `bucket` a partition column.
+    */
+  private def readChunks(dirs: Seq[HPath]): DataFrame =
+    if (dirs.isEmpty) rowsOf(chunkSchema)
     else {
       val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt max 1
       dirs.grouped(perRead)
         .map(g => spark.read.schema(chunkSchema).option("basePath", chunksDir).parquet(g.map(_.toString): _*))
         .reduce(_ unionByName _)
-        .filter(col("bucket").isin(bs.map(Integer.valueOf): _*))
     }
-  }
 
   /** This store's side of a point read's catalog probe: its catalog
     * rows (`dead` false) and tombstones (`dead` true) for `hashes`, as
@@ -664,13 +638,13 @@ final class ChunkStore private (
       fs.delete(new HPath(tombstonesDir), true)
 
       val afterChunks = chunks.agg(count(lit(1)), coalesce(sum(col("size")), lit(0L))).as[(Long, Long)].head()
-      Seq((
+      rowsOf(gcSchema, Row(
         deadBlobs,
         beforeChunks._1 - afterChunks._1,
         beforeChunks._2 - afterChunks._2,
         afterChunks._1,
         afterChunks._2,
-      )).toDF("blobs_deleted", "chunks_reclaimed", "bytes_reclaimed", "chunks_live", "bytes_live")
+      ))
     }
   }
 
@@ -792,12 +766,7 @@ final class ChunkStore private (
   def maintenanceReport(maxFilesPerBucketMilli: Long = 2000L, maxDeadPpm: Long = 300000L): DataFrame = {
     import spark.implicits._
     val nFiles = countDataFiles(chunksDir)
-    val nBucketsUsed = {
-      val p = new HPath(chunksDir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).count(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")).toLong
-    }
+    val nBucketsUsed = bucketDirs.size.toLong
     val filesPerBucketMilli = if (nBucketsUsed == 0) 0L else nFiles * 1000L / nBucketsUsed
     // ONE pass over the chunk table for both liveness counts (was two:
     // a distinct count, then a semi-join + distinct count that re-read
@@ -832,7 +801,6 @@ final class ChunkStore private (
 
   def compact(reclaim: Boolean = false): DataFrame = {
     if (readonly) throw new StoreReadOnlyException(path)
-    import spark.implicits._
     withWriteLock {
       val conf = spark.sessionState.newHadoopConf()
       val tmpRoot = new HPath(path, ".compact_tmp")
@@ -866,14 +834,14 @@ final class ChunkStore private (
       swapCommitted(fs, tmpRoot, Seq("chunks", "manifest", "catalog"), "compact")
       if (reclaim) fs.delete(new HPath(tombstonesDir), true)
 
-      Seq("chunks", "manifest", "catalog").map { d =>
+      rowsOf(compactSchema, Seq("chunks", "manifest", "catalog").map { d =>
         val dir = d match {
           case "chunks" => chunksDir
           case "manifest" => manifestDir
           case _ => catalogDir
         }
-        (d, before(d), countDataFiles(dir))
-      }.toDF("table", "files_before", "files_after")
+        Row(d, before(d), countDataFiles(dir))
+      }: _*)
     }
   }
 
@@ -887,7 +855,7 @@ final class ChunkStore private (
   /** Payload scrub — the bit-rot half of the integrity story
     * ([[fsck]] audits STRUCTURE across the three relations; scrub
     * audits the BYTES at rest). Chunks are addressed by the hash of
-    * what is actually stored (ciphertext or raw — encryptParts), so
+    * what is actually stored (ciphertext or raw — see `stage`), so
     * re-hashing every payload against its address detects any flipped
     * bit with no key material and no decryption: the scheduled-scrub
     * pass an object store runs, here ONE map-side scan of the chunk
@@ -905,7 +873,6 @@ final class ChunkStore private (
     * store. A healthy store is all-zero.
     */
   def scrub(): DataFrame = {
-    import spark.implicits._
     val agg = chunks.agg(
       count(lit(1)).as("n"),
       coalesce(sum(when(sha2(col("data"), 256) =!= col("chunk_hash"), 1L).otherwise(0L)), lit(0L)).as("h"),
@@ -913,13 +880,13 @@ final class ChunkStore private (
       coalesce(sum(when(col("bucket") =!= ChunkStore.bucketOf(col("chunk_hash"), params.nBuckets), 1L).otherwise(0L)), lit(0L)).as("b"),
       coalesce(sum(when(col("data").isNull, 1L).otherwise(0L)), lit(0L)).as("m"),
     ).head()
-    Seq(
-      ("misplaced_bucket", agg.getLong(3)),
-      ("missing_payload", agg.getLong(4)),
-      ("payload_hash_mismatch", agg.getLong(1)),
-      ("scanned_chunks", agg.getLong(0)),
-      ("size_mismatch", agg.getLong(2)),
-    ).toDF("check", "violations").orderBy("check")
+    rowsOf(scrubSchema,
+      Row("misplaced_bucket", agg.getLong(3)),
+      Row("missing_payload", agg.getLong(4)),
+      Row("payload_hash_mismatch", agg.getLong(1)),
+      Row("scanned_chunks", agg.getLong(0)),
+      Row("size_mismatch", agg.getLong(2)),
+    ).orderBy("check")
   }
 
   /** Catalog-level diff vs another store: one row per blob seen by
@@ -950,59 +917,59 @@ final class ChunkStore private (
       )
 
   /** Replicate every *live* blob this store has and `target` lacks, by
-    * content address: the missing catalog rows, their manifest rows
-    * (keys travel with them, so convergent-encrypted parts stay
-    * decryptable), and only the chunk payloads the target does not
-    * already hold — cross-store dedup is the same anti-join the put
-    * path uses, so shared chunks are never re-shipped. Idempotent;
-    * honors the target's capacity gate and write lock; follows the
-    * chunks → manifest → catalog visibility order so a failed copy
-    * leaves no readable half-blob. Returns the number of blobs copied.
+    * content address: this store's live catalog, manifest and chunk
+    * rows go to `target`'s [[commit]], the same one a put ends in. So
+    * only the missing catalog rows, their manifest rows (keys travel
+    * with them, so convergent-encrypted parts stay decryptable) and the
+    * chunk payloads the target does not already hold are written, under
+    * the target's capacity gate, write lock and bucket count, in the
+    * chunks → manifest → catalog visibility order. Idempotent. Returns
+    * the number of blobs copied.
     *
     * Replication is additive and respects deletes on both ends: the
     * source side is [[liveCatalog]] (a blob tombstoned here — even
     * before [[gc]] reclaims it — must not resurrect as a readable
-    * blob in the replica), while the anti-join keys on the target's
-    * *raw* catalog (a blob the target itself tombstoned still owns
-    * its catalog row until gc, so it is not re-shipped and the
-    * target's delete stays deleted). Deletes are not pushed to blobs
-    * the target already holds — this is a copy, not a delete-sync.
+    * blob in the replica), while the commit keys on the target's *raw*
+    * catalog and lifts no tombstone (a blob the target itself
+    * tombstoned still owns its catalog row until gc, so it is not
+    * re-shipped and the target's delete stays deleted). Deletes are
+    * not pushed to blobs the target already holds — this is a copy,
+    * not a delete-sync.
     */
   def replicateTo(target: ChunkStore): Long = {
-    if (target.readonly) throw new StoreReadOnlyException(target.path)
-    target.withWriteLock {
-      val missing = liveCatalog
-        .join(target.catalog.select("blob_hash"), Seq("blob_hash"), "left_anti")
-        .cache()
-      try {
-        val n = missing.count()
-        if (n > 0) {
-          val mRows = manifest
-            .join(missing.select("blob_hash"), Seq("blob_hash"), "left_semi")
-            .cache()
-          val wanted = mRows.select(col("chunk_hash")).distinct()
-          val newChunks = chunks
-            .join(wanted, Seq("chunk_hash"), "left_semi")
-            .join(target.chunks.select("chunk_hash"), Seq("chunk_hash"), "left_anti")
-          val addBytes = newChunks.agg(coalesce(sum(col("size")), lit(0L))).head.getLong(0)
-          val inlineBytes = missing.filter(col("kind") === "inline")
-            .agg(coalesce(sum(col("total_len")), lit(0L))).head.getLong(0)
-          if (target.maxBytes != Long.MaxValue &&
-            target.currentBytes + addBytes + inlineBytes > target.maxBytes)
-            throw new StoreOutOfSpaceException(target.path)
-          newChunks.write.mode(SaveMode.Append).partitionBy("bucket").parquet(target.chunksDir)
-          mRows.write.mode(SaveMode.Append).parquet(target.manifestDir)
-          missing.write.mode(SaveMode.Append).parquet(target.catalogDir)
-          mRows.unpersist()
-        }
-        n
-      } finally missing.unpersist()
-    }
+    val live = liveCatalog.drop("root_bucket")
+    val parts = manifest
+      .drop("bucket")
+      .join(live.select("blob_hash"), Seq("blob_hash"), "left_semi")
+      .join(chunks.dropDuplicates("chunk_hash").select("chunk_hash", "size", "enc", "data"), Seq("chunk_hash"), "left")
+    target.commit(new Staged(live.unionByName(parts, allowMissingColumns = true), blobs = None))
   }
 }
 
 final case class BlobRef(blobHash: String, totalLen: Long, kind: String)
 final case class PutResult(blobs: Seq[BlobRef])
+
+/** A batch ready for [[ChunkStore.commit]], as one frame of rows
+  * keyed by `blob_hash`: a catalog row per blob (no `level`: total_len,
+  * kind, inline_data, root_hash, root_key, tree_depth) and a manifest
+  * row per stored part or node (level, part_idx, chunk_hash, key,
+  * part_len) carrying its chunk (size, enc, data). No
+  * row has a bucket: a bucket is store layout, not content, so the
+  * commit derives it from the hash with its own store's bucket count.
+  * `blobs` (blob_hash, total_len, kind) is what a put was asked to
+  * store, which it reports; a replica has none, and its commit lifts no
+  * tombstone. `release` drops the rows from the cache, if a staging
+  * cached them.
+  */
+private[lake] final class Staged(val rows: DataFrame, val blobs: Option[DataFrame]) {
+  /** One [[BlobRef]] per distinct blob asked for, deduplicated here
+    * rather than by a shuffle.
+    */
+  def summary: PutResult =
+    PutResult(blobs.toSeq.flatMap(_.collect()).map(r => BlobRef(r.getString(0), r.getLong(1), r.getString(2))).distinct)
+
+  def release(): Unit = rows.unpersist()
+}
 
 /** A live catalog row, as the point-read walk starts from it. */
 private[lake] final case class CatalogEntry(
@@ -1025,8 +992,9 @@ object ChunkStore {
   val Magic = "GraftStore v1"
 
   /** Write locks older than this are presumed dead and taken over (a
-    * crashed driver must not brick the store forever; a healthy put
-    * refreshes nothing, so size the TTL well above the longest put).
+    * crashed driver must not brick the store forever). A put holds the
+    * lock for its commit only, not for its staging, and refreshes
+    * nothing, so size the TTL well above the longest commit.
     */
   val LockTtlMs: Long = 30L * 60 * 1000
 
@@ -1060,6 +1028,21 @@ object ChunkStore {
     StructField("blob_hash", StringType),
   ))
 
+  /** Result schemas of [[ChunkStore.gc]], [[ChunkStore.compact]] and
+    * [[ChunkStore.scrub]]; [[Lake]]'s per-store forms add `store`.
+    */
+  val gcSchema: StructType = StructType(
+    Seq("blobs_deleted", "chunks_reclaimed", "bytes_reclaimed", "chunks_live", "bytes_live").map(StructField(_, LongType, nullable = false)))
+  val compactSchema: StructType = StructType(Seq(
+    StructField("table", StringType),
+    StructField("files_before", LongType, nullable = false),
+    StructField("files_after", LongType, nullable = false),
+  ))
+  val scrubSchema: StructType = StructType(Seq(
+    StructField("check", StringType),
+    StructField("violations", LongType, nullable = false),
+  ))
+
   /** Size ladder (store/mod.rs:430-457). */
   def kindOf(len: Column, p: LakeParams): Column =
     when(len <= p.inlineMax, "inline")
@@ -1072,6 +1055,139 @@ object ChunkStore {
 
   /** [[bucketOf]] for one hash on the driver. */
   def bucketOf(hashHex: String, nBuckets: Int): Int = Integer.parseInt(hashHex.substring(0, 4), 16) % nBuckets
+
+  /** Bytes one manifest node at level k covers: chunkMax·fanoutᵏ,
+    * saturating at Long.MaxValue.
+    */
+  private def treeCap(p: LakeParams, k: Int): Long =
+    (1 to k).foldLeft(p.chunkMax)((c, _) => if (c > Long.MaxValue / p.treeFanout) Long.MaxValue else c * p.treeFanout)
+
+  /** The content half of a put, which depends on [[LakeParams]] alone:
+    * the size ladder, the parts, their convergent encryption and the
+    * manifest tree above them. It covers the blobs of `blobs` (column
+    * `data`) that some of `stores` does not hold live, so an idempotent
+    * re-put encrypts nothing. Convergent encryption is deterministic,
+    * so the staged rows commit unchanged to whichever of `stores` takes
+    * them ([[ChunkStore.commit]]). Staging runs its jobs here, before
+    * any lock is taken, and keeps the staged rows cached until
+    * [[Staged.release]].
+    *
+    * Level 0 holds one row per fixed-size part, so no staged row grows
+    * with the blob; only the input row holds a whole blob, which Spark
+    * caps at 2 GB per binary value. The manifest
+    * tree (LongHkeyExpanded::from_blob → shrink, store/mod.rs:419-426)
+    * folds each level's entries into nodes of `treeFanout` entries, each
+    * stored as a convergently encrypted chunk, until one root remains.
+    * Level k holds ⌈len / treeCap(k)⌉ entries, so a blob's depth follows
+    * from its length: its root sits at the first level k with
+    * len ≤ treeCap(k), and the batch's longest blob, found by one job,
+    * sets how many levels to build.
+    */
+  private[lake] def stage(blobs: DataFrame, stores: Seq[ChunkStore]): Staged = {
+    val p = stores.head.params
+    val ladder = blobs
+      .select(col("data"))
+      .filter(col("data").isNotNull)
+      .withColumn("blob_hash", sha2(col("data"), 256))
+      .withColumn("total_len", octet_length(col("data")).cast(LongType))
+      .withColumn("kind", kindOf(col("total_len"), p))
+    val chunked = col("kind") =!= "inline"
+    // folded on the driver from each partition's maximum: no shuffle
+    val longest = ladder.filter(chunked).select(col("total_len")).rdd.map(_.getLong(0)).fold(0L)(math.max)
+    val depth = Iterator.from(0).find(k => longest <= treeCap(p, k)).get
+    val liveEverywhere = stores.map(_.liveCatalog.select("blob_hash")).reduce(_.join(_, Seq("blob_hash"), "left_semi"))
+    // level 0: a catalog row per inline blob, a row per part of the
+    // others (Column.substr is 1-based and byte-addressed on BinaryType)
+    val nParts = (col("total_len") + lit(p.chunkMax - 1)).divide(lit(p.chunkMax)).cast(LongType)
+    val level0 = ladder
+      .dropDuplicates("blob_hash")
+      .join(liveEverywhere, Seq("blob_hash"), "left_anti")
+      .withColumn("part_idx", explode_outer(when(chunked, sequence(lit(0L), nParts - 1))))
+      .select(
+        col("blob_hash"),
+        col("total_len"),
+        when(chunked, lit(0)).as("level"),
+        col("part_idx"),
+        when(!chunked, col("data")).as("inline_data"),
+        col("data").substr((col("part_idx") * p.chunkMax + 1).cast(IntegerType), lit(p.chunkMax.toInt)).as("part"),
+      )
+    val leaves = encrypted(level0).cache()
+    // level k: the level k-1 entries of each blob that has more than
+    // one there, `treeFanout` to a node of lines
+    // `idx,chunk_hash,key|-,len,L|N` (L: the entry is a leaf)
+    val levels = (1 to depth).scanLeft(leaves) { (below, k) =>
+      val line = concat_ws(",", col("part_idx"), col("chunk_hash"), coalesce(col("key"), lit("-")), col("part_len"),
+        lit(if (k == 1) "L" else "N"))
+      val nodes = below
+        .filter(col("total_len") > treeCap(p, k - 1))
+        .groupBy(col("blob_hash"), col("total_len"), expr(s"part_idx DIV ${p.treeFanout}").as("node"))
+        .agg(array_join(
+          transform(array_sort(collect_list(struct(col("part_idx"), line.as("line")))), e => e("line")),
+          "\n",
+        ).as("text"))
+        .select(
+          col("blob_hash"),
+          col("total_len"),
+          lit(k).as("level"),
+          col("node").as("part_idx"),
+          col("text").cast(BinaryType).as("part"),
+        )
+      encrypted(nodes)
+    }
+    // the one entry of the first level a chunked blob fits in is its
+    // root: it yields the blob's catalog row too (no level, no chunk)
+    val rootLevel = (0 until depth).foldRight(lit(depth)) { (k, above) =>
+      when(col("total_len") <= treeCap(p, k), lit(k)).otherwise(above)
+    }
+    val entry = (c: Column) => when(!col("catalog"), c)
+    val rows = levels
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .withColumn("catalog", explode(
+        when(col("level") === rootLevel, array(lit(false), lit(true))).otherwise(array(lit(false)))))
+      .select(
+        col("blob_hash"),
+        col("total_len"),
+        kindOf(col("total_len"), p).as("kind"),
+        rootLevel.as("tree_depth"),
+        col("inline_data"),
+        when(col("catalog"), col("chunk_hash")).as("root_hash"),
+        when(col("catalog"), col("key")).as("root_key"),
+        entry(col("level")).as("level"),
+        col("part_idx"),
+        col("chunk_hash"),
+        col("key"),
+        col("part_len"),
+        col("size"),
+        col("enc"),
+        entry(col("data")).as("data"),
+      )
+      .cache()
+    // level 0 stays cached only while `rows` is built, so its parts are
+    // encrypted once, and a commit reads one cached frame
+    try rows.write.format("noop").mode(SaveMode.Overwrite).save()
+    catch { case e: Throwable => rows.unpersist(); throw e }
+    finally leaves.unpersist()
+    new Staged(rows, Some(ladder.select(col("blob_hash"), col("total_len"), col("kind"))))
+  }
+
+  /** Convergent encrypt-at-rest of a frame's `part` column, replaced by
+    * part_len (plaintext), enc ('gcm'|'raw'), data (at-rest bytes), key
+    * (hex, null when raw), chunk_hash (address of the STORED bytes) and
+    * size. Mirrors put_chunk/put_encrypted_chunk: deflate+encrypt, keep
+    * raw when that is not smaller.
+    */
+  private def encrypted(parts: DataFrame): DataFrame = {
+    val gcm = octet_length(col("ct")) <= col("part_len")
+    parts
+      .withColumn("part_len", octet_length(col("part")).cast(LongType))
+      .withColumn("ct", Convergent.encryptDeflated(col("part")))
+      .withColumn("enc", when(gcm, lit("gcm")).otherwise(lit("raw")))
+      .withColumn("data", when(gcm, col("ct")).otherwise(col("part")))
+      .withColumn("key", when(gcm, sha2(col("part"), 256)))
+      .withColumn("chunk_hash", sha2(col("data"), 256))
+      .withColumn("size", octet_length(col("data")).cast(LongType))
+      .drop("part", "ct")
+  }
 
   private[lake] def sha256Hex(data: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(data).map("%02x".format(_)).mkString
@@ -1267,16 +1383,16 @@ object ChunkStore {
     * paths resolve with the session's configuration (a java.nio check
     * would wrongly report remote stores absent).
     */
-  def isStore(spark: SparkSession, path: String): Boolean = {
+  def isStore(spark: SparkSession, path: String): Boolean = marker(spark, path).isDefined
+
+  /** The `_GRAFT_STORE` marker's text, when it starts with the magic. */
+  private def marker(spark: SparkSession, path: String): Option[String] = {
     val m = markerPath(path)
     val fs = m.getFileSystem(hadoopConf(spark))
-    fs.exists(m) && {
+    if (!fs.exists(m)) None
+    else {
       val in = fs.open(m)
-      try {
-        val buf = new Array[Byte](Magic.length)
-        in.readFully(buf)
-        new String(buf, StandardCharsets.UTF_8) == Magic
-      } catch { case _: java.io.EOFException => false }
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)).filter(_.startsWith(Magic))
       finally in.close()
     }
   }
@@ -1293,10 +1409,15 @@ object ChunkStore {
   }
 
   /** Load an existing store, verifying the magic (DataStore::load +
-    * verify_magic, lake/util.rs).
+    * verify_magic, lake/util.rs). The bucket count is the one [[init]]
+    * wrote into the marker, since every chunk was placed by it;
+    * `params` supplies it only for a marker without that line.
     */
   def load(spark: SparkSession, path: String, readonly: Boolean, maxBytes: Long = Long.MaxValue, params: LakeParams = LakeParams()): ChunkStore = {
-    if (!isStore(spark, path)) throw new InvalidMagicException(path)
-    new ChunkStore(spark, path, readonly, maxBytes, params)
+    val text = marker(spark, path).getOrElse(throw new InvalidMagicException(path))
+    val nBuckets = text.linesIterator.collectFirst { case l if l.startsWith("nBuckets=") =>
+      l.stripPrefix("nBuckets=").trim.toIntOption.filter(_ > 0).getOrElse(throw new InvalidMagicException(path))
+    }
+    new ChunkStore(spark, path, readonly, maxBytes, nBuckets.fold(params)(n => params.copy(nBuckets = n)))
   }
 }

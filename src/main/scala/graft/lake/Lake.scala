@@ -3,6 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, BooleanType, StringType, StructField, StructType}
 
 /** Store entry in a lake config (reference: lake/config.rs
   * ConfigStoreEntry {filename, readonly}), extended with a capacity
@@ -70,33 +71,42 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
   def readable: Seq[ChunkStore] = stores
   def writable: Seq[ChunkStore] = stores.filterNot(_.readonly)
 
+  /** Stores `blobs` (column `data`: binary) in the first writable
+    * store that takes the whole batch. The content work — ladder,
+    * convergent encryption, manifest tree ([[ChunkStore.stage]]) — runs
+    * once; each store tried then costs only its commit, and a store
+    * that refuses writes nothing.
+    */
   def put(blobs: DataFrame): PutResult = {
-    var lastErr: Throwable = null
-    writable.foreach { s =>
-      try return s.putBlobs(blobs)
-      catch {
-        case e: StoreOutOfSpaceException => lastErr = e
-        case e: StoreReadOnlyException => lastErr = e
+    var refusal: Throwable = new StoreReadOnlyException(stores.map(_.path).mkString(", "))
+    if (writable.isEmpty) throw new LakeOutOfStoresException(refusal)
+    val staged = ChunkStore.stage(blobs, writable)
+    try {
+      val taken = writable.exists { s =>
+        try { s.commit(staged); true }
+        catch { case e @ (_: StoreOutOfSpaceException | _: StoreReadOnlyException) => refusal = e; false }
       }
-    }
-    throw new LakeOutOfStoresException(
-      if (writable.isEmpty) new StoreReadOnlyException(stores.map(_.path).mkString(", ")) else lastErr)
+      if (!taken) throw new LakeOutOfStoresException(refusal)
+      staged.summary
+    } finally staged.release()
   }
 
   /** Bulk get across all stores; first (config-order) store holding a
     * hash provides the payload.
     */
-  def get(hashDf: DataFrame): DataFrame = {
-    val perStore = stores.zipWithIndex.map { case (s, i) =>
-      s.getBlobs(hashDf).withColumn("store_priority", lit(i))
+  def get(hashDf: DataFrame): DataFrame =
+    if (stores.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Lake.readSchema)
+    else {
+      val perStore = stores.zipWithIndex.map { case (s, i) =>
+        s.getBlobs(hashDf).withColumn("store_priority", lit(i))
+      }
+      val all = perStore.reduceLeft(_ unionByName _)
+      val w = Window.partitionBy(col("blob_hash")).orderBy(col("store_priority"))
+      all
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .drop("rn", "store_priority")
     }
-    val all = perStore.reduceLeft(_ unionByName _)
-    val w = Window.partitionBy(col("blob_hash")).orderBy(col("store_priority"))
-    all
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "store_priority")
-  }
 
   /** Point read with verify-on-read. Every store's catalog probe
     * ([[ChunkStore.probe]]), tagged with the store's index, is unioned
@@ -132,9 +142,14 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     writable.map(_.deleteBlobs(hashes)).sum
 
   /** GC every writable store; returns per-store stats keyed by path. */
-  def gc(): DataFrame =
-    writable.map(s => s.gc().withColumn("store", lit(s.path)))
-      .reduceLeft(_ unionByName _)
+  def gc(): DataFrame = perStore(writable, ChunkStore.gcSchema)(_.gc())
+
+  /** `f` of each of `ss` with a `store` column holding its path; an
+    * empty frame of `schema` and `store` when `ss` is empty.
+    */
+  private def perStore(ss: Seq[ChunkStore], schema: StructType)(f: ChunkStore => DataFrame): DataFrame =
+    if (ss.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema.add("store", StringType, nullable = false))
+    else ss.map(s => f(s).withColumn("store", lit(s.path))).reduceLeft(_ unionByName _)
 
   /** Compact every writable store (small-file consolidation; with
     * `reclaim` the GC liveness filter is fused into the same rewrite —
@@ -142,17 +157,13 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     * of [[gc]]: per-store per-table before/after file counts keyed by
     * path.
     */
-  def compact(reclaim: Boolean = false): DataFrame =
-    writable.map(s => s.compact(reclaim).withColumn("store", lit(s.path)))
-      .reduceLeft(_ unionByName _)
+  def compact(reclaim: Boolean = false): DataFrame = perStore(writable, ChunkStore.compactSchema)(_.compact(reclaim))
 
   /** Scrub every store, readable included (payload verification needs
     * no write access); per-store per-invariant violation counts keyed
     * by path — the fleet-wide form of the scheduled scrub.
     */
-  def scrub(): DataFrame =
-    stores.map(s => s.scrub().withColumn("store", lit(s.path)))
-      .reduceLeft(_ unionByName _)
+  def scrub(): DataFrame = perStore(stores, ChunkStore.scrubSchema)(_.scrub())
 
   /** Fleet-level maintenance planner — the WHEN for [[compact]]/[[gc]]
     * at the grain the reference's multi-store routing implies
@@ -207,6 +218,13 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
 }
 
 object Lake {
+  /** The schema of [[Lake.get]]'s frame. */
+  private val readSchema = StructType(Seq(
+    StructField("blob_hash", StringType),
+    StructField("data", BinaryType),
+    StructField("verified", BooleanType),
+  ))
+
   /** DataLake::init (lake/mod.rs:32-57). */
   def init(spark: SparkSession, config: LakeConfig, params: LakeParams = LakeParams()): Lake = {
     val stores = config.stores.map { e =>

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class LakeSpec extends AnyFunSuite {
+  import LakeSpec._
   import TestSpark.spark
   import spark.implicits._
 
@@ -269,6 +270,13 @@ class LakeSpec extends AnyFunSuite {
     val store = ChunkStore.init(spark, tmp(), maxBytes = 100)
     intercept[StoreOutOfSpaceException](store.putBlobs(blobDf(1L -> big)))
     assert(store.chunks.count() == 0, "failed put must not leave partial chunks")
+    // nor any other row, nor lift a tombstone of a blob in the batch
+    store.putBlobs(blobDf(2L -> tiny))
+    assert(store.deleteBlobs(Seq(sha256hex(tiny.getBytes(StandardCharsets.UTF_8)))) == 1)
+    def rows() = Seq(store.chunks, store.manifest, store.catalog, store.tombstones).map(rowsOf)
+    val before = rows()
+    intercept[StoreOutOfSpaceException](store.putBlobs(blobDf(1L -> big, 2L -> tiny)))
+    assert(rows() == before, "a refused put changed the store")
   }
 
   test("lake routes puts past full stores (spill-over) and reads across stores") {
@@ -406,6 +414,8 @@ class LakeSpec extends AnyFunSuite {
     assert(a.replicateTo(b) == 2, "tombstoned blob must not replicate")
     assert(!b.containsBlob(delHash), "deleted blob resurrected in replica")
     assert(a.diff(b).filter(col("status") =!= "in_sync").count() == 0)
+    assert(b.manifest.filter(col("blob_hash") === delHash).count() == 0, "deleted blob's manifest rows shipped")
+    assert(b.fsck().filter(col("violations") > 0).count() == 0, "replica holds rows of no live blob")
 
     // target that already holds the blob live: diff reports only_other
     // (live views), and replicate does not push the delete
@@ -442,16 +452,30 @@ class LakeSpec extends AnyFunSuite {
   private def sha256hex(b: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
 
-  /** Jobs `body` runs and the most tasks any of them has, counted by a
+  /** A table's rows as sorted strings, binary cells in hex. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case v => String.valueOf(v)
+    }.mkString(",")).sorted.toSeq
+
+  /** Jobs `body` runs and the most tasks any of them has. */
+  private def jobsOf(group: String)(body: => Unit): (Int, Int) = {
+    val jobs = jobLog(group)(body)
+    (jobs.size, jobs.map(_._1).maxOption.getOrElse(0))
+  }
+
+  /** Each job `body` runs, as its task count and `spark.job.description`
+    * (the group's name unless the job set its own), recorded by a
     * listener keyed on a job group. The listener bus is asynchronous,
     * so poll until the count is stable rather than racing it.
     */
-  private def jobsOf(group: String)(body: => Unit): (Int, Int) = {
-    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+  private def jobLog(group: String)(body: => Unit): Seq[(Int, String)] = {
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Int, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          tasks.put(e.jobId, e.stageInfos.map(_.numTasks).sum)
+          jobs.put(e.jobId, (e.stageInfos.map(_.numTasks).sum, e.properties.getProperty("spark.job.description")))
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -459,11 +483,11 @@ class LakeSpec extends AnyFunSuite {
       try body finally spark.sparkContext.clearJobGroup()
       var n = -1; var same = 0
       while (same < 3) {
-        val m = tasks.size
+        val m = jobs.size
         if (m == n) same += 1 else { same = 0; n = m }
         Thread.sleep(50)
       }
-      (n, tasks.values.asScala.maxOption.getOrElse(0))
+      jobs.values.asScala.toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -600,4 +624,130 @@ class LakeSpec extends AnyFunSuite {
     val dirs = Files.list(Paths.get(store.path, "chunks")).toArray.map(_.toString)
     assert(dirs.exists(_.contains("bucket=")), dirs.mkString(","))
   }
+
+  test("a blob deleted and put again before gc reads back, through a store and through a lake") {
+    val (bigBytes, hBig, hMid) = (big.getBytes(StandardCharsets.UTF_8), sha256hex(big.getBytes(StandardCharsets.UTF_8)),
+      sha256hex(mid.getBytes(StandardCharsets.UTF_8)))
+    val store = ChunkStore.init(spark, tmp())
+    store.putBlobs(blobDf(1L -> big, 2L -> mid))
+    assert(store.deleteBlobs(Seq(hBig, hMid)) == 2) // one tombstone file naming both
+    assert(store.putBlobs(blobDf(3L -> big)).blobs.map(_.blobHash) == Seq(hBig))
+    assert(java.util.Arrays.equals(store.getBlob(hBig), bigBytes))
+    intercept[BlobNotFoundException](store.getBlob(hMid)) // its tombstone survives the rewrite
+    store.gc(): Unit
+    assert(java.util.Arrays.equals(store.getBlob(hBig), bigBytes))
+    intercept[BlobNotFoundException](store.getBlob(hMid))
+    assert(store.fsck().filter(col("violations") > 0).count() == 0)
+
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(tmp()))))
+    lake.put(blobDf(1L -> big))
+    assert(lake.delete(Seq(hBig)) == 1)
+    intercept[BlobNotFoundException](lake.getBlob(hBig))
+    lake.put(blobDf(1L -> big))
+    assert(java.util.Arrays.equals(lake.getBlob(hBig), bigBytes))
+    lake.gc(): Unit
+    assert(java.util.Arrays.equals(lake.getBlob(hBig), bigBytes))
+    assert(lake.stores.head.fsck().filter(col("violations") > 0).count() == 0)
+  }
+
+  test("load takes the bucket count from the store's marker") {
+    val p = tmp()
+    ChunkStore.init(spark, p, params = LakeParams.primeBuckets(100)).putBlobs(blobDf(1L -> big))
+    val h = sha256hex(big.getBytes(StandardCharsets.UTF_8))
+    val loaded = ChunkStore.load(spark, p, readonly = true)
+    assert(loaded.params.nBuckets == 97)
+    assert(new String(loaded.getBlob(h), StandardCharsets.UTF_8) == big)
+    assert(new String(Lake.init(spark, LakeConfig(Seq(StoreEntry(p)))).getBlob(h), StandardCharsets.UTF_8) == big)
+    // a marker without the line keeps the caller's params
+    Files.deleteIfExists(Paths.get(p, "._GRAFT_STORE.crc"))
+    Files.write(Paths.get(p, "_GRAFT_STORE"), ChunkStore.Magic.getBytes(StandardCharsets.UTF_8))
+    assert(ChunkStore.load(spark, p, readonly = true, params = LakeParams(nBuckets = 97)).params.nBuckets == 97)
+    assert(ChunkStore.load(spark, p, readonly = true).params.nBuckets == LakeParams().nBuckets)
+  }
+
+  test("a spilling Lake.put stays within its job budget and lists no chunk table remotely") {
+    val params = LakeParams()
+    // ~100-part trees spread each store's chunks over > 32 bucket dirs,
+    // past the parallel listing threshold
+    def tree(tag: String) = (0 until 4000).map(i => s"$tag-$i-").mkString.take(params.chunkMax.toInt * 100)
+    val (p0, p1) = (tmp(), tmp())
+    ChunkStore.init(spark, p0).putBlobs(blobDf(1L -> tree("hot")))
+    ChunkStore.init(spark, p1).putBlobs(blobDf(1L -> tree("spill")))
+    Seq(p0, p1).foreach { p =>
+      val dirs = Files.list(Paths.get(p, "chunks")).toArray.count(_.toString.contains("bucket="))
+      assert(dirs > 32, s"fixture: $p has only $dirs bucket dirs")
+    }
+    val hotBytes = ChunkStore.load(spark, p0, readonly = true).currentBytes
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(p0, maxBytes = hotBytes + 100), StoreEntry(p1))))
+    val h = sha256hex(tree("batch").getBytes(StandardCharsets.UTF_8))
+    val jobs = jobLog("put-budget")(lake.put(blobDf(1L -> tree("batch"), 2L -> mid, 3L -> tiny)): Unit)
+    assert(!lake.stores(0).containsBlob(h) && lake.stores(1).containsBlob(h), "fixture: the batch must spill")
+    assert(jobs.size <= PutJobCeiling, s"a spilling put ran ${jobs.size} jobs: ${jobs.map(_._2).mkString("; ")}")
+    assert(!jobs.exists(_._2.startsWith("Listing leaf files")), s"a distributed listing: ${jobs.map(_._2).mkString("; ")}")
+  }
+
+  test("a spilled batch lands as a direct put into an empty store would; depths follow from length") {
+    val p = LakeParams(inlineMax = 4, chunkMax = 8, treeFanout = 4)
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(tmp(), maxBytes = 100), StoreEntry(tmp()))), p)
+    // lengths at and around each level's capacity 8·4ᵏ, up to depth 4
+    val lens = Seq(3, 4, 5, 8, 9, 32, 33, 128, 129, 512, 513, 800)
+    val batch = blobDf(lens.map(n => n.toLong -> (0 until n).map(i => ('a' + (i * 7 + n) % 26).toChar).mkString): _*)
+    lake.put(batch)
+    val direct = ChunkStore.init(spark, tmp(), params = p)
+    direct.putBlobs(batch)
+    def rows(s: ChunkStore) = Seq(s.catalog, s.manifest, s.chunks, s.tombstones).map(rowsOf)
+    assert(rows(lake.stores(1)) == rows(direct))
+    assert(rows(lake.stores(0)).forall(_.isEmpty), "the refused store was written to")
+    val depths = direct.catalog.select("total_len", "tree_depth").as[(Long, Int)].collect().toMap
+    assert(depths == Map(3L -> 0, 4L -> 0, 5L -> 0, 8L -> 0, 9L -> 1, 32L -> 1, 33L -> 2, 128L -> 2, 129L -> 3,
+      512L -> 3, 513L -> 4, 800L -> 4))
+    assert(direct.fsck().filter(col("violations") > 0).count() == 0)
+  }
+
+  test("no cached block survives a refused store, LakeOutOfStores or a refused replicateTo") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(tmp(), maxBytes = 100), StoreEntry(tmp()))))
+    lake.put(blobDf(1L -> big))
+    assert(lake.stores(1).containsBlob(sha256hex(big.getBytes(StandardCharsets.UTF_8))))
+    assert(persisted == before, "after a put the first store refused")
+    intercept[LakeOutOfStoresException](Lake.init(spark, LakeConfig(Seq(StoreEntry(tmp(), maxBytes = 100)))).put(blobDf(1L -> big)))
+    assert(persisted == before, "after LakeOutOfStores")
+    intercept[StoreOutOfSpaceException](lake.stores(1).replicateTo(ChunkStore.init(spark, tmp(), maxBytes = 100)))
+    assert(persisted == before, "after a refused replicateTo")
+  }
+
+  test("Lake.gc on a lake without a writable store returns an empty frame") {
+    val p = tmp()
+    ChunkStore.init(spark, p)
+    val out = Lake.init(spark, LakeConfig(Seq(StoreEntry(p, readonly = true)))).gc()
+    assert(out.count() == 0 && out.columns.toSeq == ChunkStore.gcSchema.fieldNames.toSeq :+ "store")
+  }
+
+  test("Lake.compact on a lake without a writable store returns an empty frame") {
+    val p = tmp()
+    ChunkStore.init(spark, p)
+    val out = Lake.init(spark, LakeConfig(Seq(StoreEntry(p, readonly = true)))).compact(reclaim = true)
+    assert(out.count() == 0 && out.columns.toSeq == Seq("table", "files_before", "files_after", "store"))
+  }
+
+  test("Lake.scrub on a lake without stores returns an empty frame") {
+    val out = Lake.init(spark, LakeConfig(Nil)).scrub()
+    assert(out.count() == 0 && out.columns.toSeq == Seq("check", "violations", "store"))
+  }
+
+  test("Lake.get on a lake without stores returns an empty frame") {
+    val out = Lake.init(spark, LakeConfig(Nil)).get(Seq(sha256hex(mid.getBytes(StandardCharsets.UTF_8))).toDF("blob_hash"))
+    assert(out.count() == 0 && out.columns.toSeq == Seq("blob_hash", "data", "verified"))
+  }
+}
+
+object LakeSpec {
+  /** Jobs of the spilling put in the job-budget test, as measured: the
+    * longest-blob probe and the staging (dedup, the stores' live
+    * catalogs, one shuffle per tree level, the level-0 and staged
+    * caches) run once; the refusing store runs its gate, the taking
+    * store its count and three appends.
+    */
+  val PutJobCeiling = 22
 }
