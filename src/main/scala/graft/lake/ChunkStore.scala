@@ -81,9 +81,22 @@ object LakeParams {
   *    (inline|single|tree), inline payload for tiny blobs (the
   *    reference's raw Hkey, which embeds data in the key itself),
   *    and the tree root (hash, key, bucket, depth).
+  *  - `tombstones/` — the hashes of deleted blobs ([[deleteBlobs]]).
   *  - `_GRAFT_STORE` — the magic marker (store/mod.rs MAGIC +
   *    lake/util.rs verify_magic). All paths go through Hadoop's
   *    FileSystem, so hdfs:///s3a:// store dirs work like local ones.
+  *
+  * The four tables form a generation. Generation 0 lives at the store
+  * root. Puts and deletes append to the current generation; [[gc]] and
+  * [[compact]] never rewrite one in place, they write the next one,
+  * `gen-<n>/` with the same four tables, and publish it
+  * with one directory rename (the snapshot commit of a table format
+  * such as Delta or Iceberg, without the dependency). Every operation
+  * resolves the current generation once, from one listing of the root,
+  * and reads only that one, so a reader never sees a half-written
+  * store: it sees the generation before a rewrite or the one after.
+  * A rewrite keeps the generation it replaced, so a reader that
+  * resolved it finishes; the rewrite after that deletes it.
   *
   * A put is two steps. [[ChunkStore.stage]] does the content work,
   * which depends on [[LakeParams]] alone: ladder, parts, convergent
@@ -98,10 +111,8 @@ object LakeParams {
   * streaming foreachBatch failure mode) re-runs idempotently — chunk
   * appends are anti-joined away, and any manifest rows the failed
   * attempt left behind are deduplicated on read and surfaced by
-  * [[fsck]]. Concurrent multi-writer atomicity (the reference's
-  * single-writer mmap guard, store/atomic.rs) is out of scope for
-  * plain parquet dirs; a table format (Iceberg/Delta) would supply it
-  * without changing this class's dataflow.
+  * [[fsck]]. Writers, rewrites included, hold the store's write lock
+  * (the reference's single-writer guard, store/atomic.rs).
   */
 final class ChunkStore private (
     val spark: SparkSession,
@@ -109,41 +120,95 @@ final class ChunkStore private (
     val readonly: Boolean,
     val maxBytes: Long,
     val params: LakeParams,
+    lockTtlMs: Long = ChunkStore.LockTtlMs,
 ) {
   import ChunkStore._
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def chunksDir = s"$path/chunks"
-  private def manifestDir = s"$path/manifest"
-  private def catalogDir = s"$path/catalog"
-  private def tombstonesDir = s"$path/tombstones"
+  private lazy val fs: FileSystem = new HPath(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def rowsOf(schema: StructType, rows: Row*): DataFrame = {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  private def readOr(dir: String, schema: StructType): DataFrame = {
-    val p = new HPath(dir)
-    if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else rowsOf(schema)
+  /** The directory of generation `n`: the store root for generation 0. */
+  private def genDir(n: Long): String = if (n == 0) path else s"$path/$GenPrefix$n"
+
+  /** The generation readers and writers see now, from one listing of
+    * the store root: the highest published `gen-<n>`, or generation 0
+    * when there is none. Resolved once per operation and never cached,
+    * since another handle may publish. A writable handle refuses a store
+    * that holds the debris of the per-table swap earlier graft versions
+    * ran for gc and compact: there a table may sit renamed aside, and
+    * writing on would lose it.
+    */
+  private def current(): Generation = {
+    def dirs(p: String) = fs.listStatus(new HPath(p)).filter(_.isDirectory).map(_.getPath.getName).toSet
+    val root = dirs(path)
+    val debris = root.intersect(SwapDebris)
+    if (!readonly && debris.nonEmpty)
+      throw new IllegalStateException(s"$path holds an interrupted table swap (${debris.toSeq.sorted.mkString(", ")}) " +
+        "of an earlier graft version; open it writable once with that version, which recovers it, before using this one")
+    root.flatMap(genOf).maxOption.fold(new Generation(0, root))(n => new Generation(n, dirs(genDir(n))))
   }
 
-  def chunks: DataFrame = readChunks(bucketDirs)
-  def manifest: DataFrame = readOr(manifestDir, manifestSchema)
-  def catalog: DataFrame = readOr(catalogDir, catalogSchema)
-  def tombstones: DataFrame = readOr(tombstonesDir, tombstoneSchema)
+  /** One generation's tables, as one operation reads them: each table
+    * is listed at most once, a missing one reads as empty.
+    */
+  private final class Generation(val n: Long, tables: Set[String]) {
+    val dir: String = genDir(n)
+    def has(table: String): Boolean = tables(table)
+    private def read(table: String, schema: StructType) =
+      if (has(table)) spark.read.schema(schema).parquet(s"$dir/$table") else rowsOf(schema)
+    lazy val bucketDirs: Seq[HPath] =
+      if (!has("chunks")) Seq.empty
+      else fs.listStatus(new HPath(s"$dir/chunks")).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")).map(_.getPath).sortBy(_.getName)
+    lazy val chunks: DataFrame = readChunks(dir, bucketDirs)
+    lazy val manifest: DataFrame = read("manifest", manifestSchema)
+    lazy val catalog: DataFrame = read("catalog", catalogSchema)
+    lazy val tombstones: DataFrame = read("tombstones", tombstoneSchema)
+    def liveCatalog: DataFrame = catalog.join(tombstones, Seq("blob_hash"), "left_anti")
+
+    /** What the store keeps alive: the live catalog, the live blobs'
+      * manifest rows with replayed duplicates dropped, and the chunks
+      * those rows reference, each once. Shared chunks of deleted blobs
+      * stay as long as a live blob references them.
+      */
+    def live: (DataFrame, DataFrame, DataFrame) = {
+      val cat = liveCatalog
+      val man = manifest
+        .dropDuplicates("blob_hash", "level", "part_idx")
+        .join(cat.select("blob_hash"), Seq("blob_hash"), "left_semi")
+      val chk = chunks
+        .dropDuplicates("chunk_hash")
+        .join(man.select("chunk_hash").distinct(), Seq("chunk_hash"), "left_semi")
+      (cat, man, chk)
+    }
+  }
+
+  /** The store's tables, over the generation current at the call. A
+    * returned frame keeps reading that generation, which stays on disk
+    * until the second [[gc]] or [[compact]] after the call.
+    */
+  def chunks: DataFrame = current().chunks
+  def manifest: DataFrame = current().manifest
+  def catalog: DataFrame = current().catalog
+  def tombstones: DataFrame = current().tombstones
 
   /** catalog minus tombstoned blobs — what readers see. Deletes are
     * two-phase (content-addressed chunks are shared, so nothing can be
     * dropped eagerly): [[deleteBlobs]] tombstones, [[gc]] reclaims.
     */
-  def liveCatalog: DataFrame = catalog.join(tombstones, Seq("blob_hash"), "left_anti")
+  def liveCatalog: DataFrame = current().liveCatalog
 
   /** Bytes currently stored (at-rest chunk payloads + inline payloads). */
-  def currentBytes: Long = tally(holdings(chunks, catalog, added = false))._1
+  def currentBytes: Long = {
+    val g = current()
+    tally(holdings(g.chunks, g.catalog, added = false))._1
+  }
 
   /** (bytes, blobs) rows: the at-rest size of each of `chunkRows`, the
     * inline payload of each of `catalogRows`, and, when `added`, one
@@ -202,15 +267,21 @@ final class ChunkStore private (
   private[lake] def commit(batch: Staged): Long = {
     if (readonly) throw new StoreReadOnlyException(path)
     withWriteLock {
-      val rows = batch.rows.join(catalog.select("blob_hash"), Seq("blob_hash"), "left_anti")
+      val g = current()
+      val rows = batch.rows.join(g.catalog.select("blob_hash"), Seq("blob_hash"), "left_anti")
       try {
         val newCat = rows.filter(col("level").isNull)
         val newMan = rows.filter(col("level").isNotNull)
+        // repartitioned by bucket last, with an explicit count, which AQE
+        // keeps, so that each task writes the files of its own buckets
+        // whichever way the anti-join runs; the copies of a chunk meet in
+        // its bucket's task, so the dedup needs no shuffle of its own
         val newChunks = newMan
           .filter(col("data").isNotNull)
-          .select(col("chunk_hash"), col("size"), col("enc"), col("data"))
-          .dropDuplicates("chunk_hash")
-          .join(chunks.select("chunk_hash"), Seq("chunk_hash"), "left_anti")
+          .select(col("chunk_hash"), col("size"), col("enc"), col("data"), bucketOf(col("chunk_hash"), params.nBuckets).as("bucket"))
+          .join(g.chunks.select("chunk_hash"), Seq("chunk_hash"), "left_anti")
+          .repartition(params.nBuckets min spark.sparkContext.defaultParallelism max 1, col("bucket"))
+          .dropDuplicates("bucket", "chunk_hash")
         // the blobs to add and, for a bounded store, the bytes it would
         // hold with them: one job either way. The new rows are cached for
         // the appends, but only after a gate, whose two reads of them
@@ -218,14 +289,13 @@ final class ChunkStore private (
         val n =
           if (maxBytes == Long.MaxValue) { rows.cache(); newCat.coalesce(1).count() }
           else {
-            val (bytes, blobs) = tally(holdings(chunks, catalog, added = false), holdings(newChunks, newCat, added = true))
+            val (bytes, blobs) = tally(holdings(g.chunks, g.catalog, added = false), holdings(newChunks, newCat, added = true))
             if (blobs > 0 && bytes > maxBytes) throw new StoreOutOfSpaceException(path)
             rows.cache()
             blobs
           }
         if (n > 0) {
-          newChunks.withColumn("bucket", bucketOf(col("chunk_hash"), params.nBuckets))
-            .write.mode(SaveMode.Append).partitionBy("bucket").parquet(chunksDir)
+          newChunks.write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"${g.dir}/chunks")
           // level-major, so a file keeps each level's rows together
           // (parquet encodes their runs compactly); `level` is never null
           // here, and the coalesce makes the file's column required
@@ -233,58 +303,64 @@ final class ChunkStore private (
             .sortWithinPartitions("level", "blob_hash", "part_idx")
             .select(col("blob_hash"), coalesce(col("level"), lit(0)).as("level"), col("part_idx"), col("chunk_hash"), col("key"),
               bucketOf(col("chunk_hash"), params.nBuckets).as("bucket"), col("part_len"))
-            .write.mode(SaveMode.Append).parquet(manifestDir)
+            .write.mode(SaveMode.Append).parquet(s"${g.dir}/manifest")
           newCat
             .select(col("blob_hash"), col("total_len"), col("kind"), col("inline_data"), col("root_hash"), col("root_key"),
               bucketOf(col("root_hash"), params.nBuckets).as("root_bucket"), col("tree_depth"))
-            .write.mode(SaveMode.Append).parquet(catalogDir)
+            .write.mode(SaveMode.Append).parquet(s"${g.dir}/catalog")
         }
-        if (batch.blobs.isDefined) revive(batch.rows.filter(col("level").isNull).select("blob_hash"))
+        if (batch.blobs.isDefined) revive(g, batch.rows.filter(col("level").isNull).select("blob_hash"))
         n
       } finally rows.unpersist()
     }
   }
 
-  /** Lifts this store's tombstones on `hashes`, so a blob deleted and
-    * put again before [[gc]] is live again (its rows stay until gc).
-    * Only the tombstone files naming one of them are rewritten: their
-    * other rows are appended first and the old files deleted after, so
-    * a reader never sees fewer tombstones than survive.
+  /** Lifts the tombstones of generation `g` on `hashes`, so a blob
+    * deleted and put again before [[gc]] is live again (its rows stay
+    * until gc). Only the tombstone files naming one of them are
+    * rewritten: their other rows are appended first and the old files
+    * deleted after, so a reader never sees fewer tombstones than survive.
     */
-  private def revive(hashes: DataFrame): Unit = {
-    val dir = new HPath(tombstonesDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(dir)) {
-      val files = tombstones.withColumn("file", input_file_name())
+  private def revive(g: Generation, hashes: DataFrame): Unit =
+    if (g.has("tombstones")) {
+      val files = g.tombstones.withColumn("file", input_file_name())
         .join(hashes, Seq("blob_hash"), "left_semi")
         .select("file").distinct().collect().map(_.getString(0))
       if (files.nonEmpty) {
         spark.read.schema(tombstoneSchema).parquet(files.toIndexedSeq: _*)
           .join(hashes, Seq("blob_hash"), "left_anti")
-          .write.mode(SaveMode.Append).parquet(tombstonesDir)
+          .write.mode(SaveMode.Append).parquet(s"${g.dir}/tombstones")
         files.foreach(f => fs.delete(new HPath(new java.net.URI(f)), false))
       }
     }
-  }
 
   private def lockFile = new HPath(path, "_GRAFT_WRITE_LOCK")
+
+  /** A copy of this handle whose write lock expires after `ms` instead
+    * of [[ChunkStore.LockTtlMs]], for tests of the lock's lifetime.
+    */
+  private[graft] def withLockTtl(ms: Long): ChunkStore = new ChunkStore(spark, path, readonly, maxBytes, params, ms)
 
   /** Single-writer guard, the parquet-dir analog of the reference's
     * exclusive mmap writer (store/atomic.rs, store/shared.rs): two
     * concurrent `putBlobs` against one store dir would race the
-    * capacity gate and double-append chunks, so the second writer must
-    * fail fast instead of corrupting silently. The lock file is created
-    * with `FileSystem.create(overwrite = false)` — atomic on local/HDFS
-    * (object stores without atomic create should front the store with a
-    * table format instead, as the class doc notes). A lock older than
-    * [[ChunkStore.LockTtlMs]] is presumed to belong to a crashed writer
-    * and is taken over.
+    * capacity gate and double-append chunks, and an append racing a
+    * rewrite would land in a generation about to be replaced, so the
+    * second writer must fail fast instead of losing data silently. The
+    * lock file is created with `FileSystem.create(overwrite = false)` —
+    * atomic on local/HDFS (an object store without atomic create needs
+    * a table format's commit protocol instead). While `body` runs, a
+    * heartbeat refreshes the lock file's modification time every
+    * quarter of [[ChunkStore.LockTtlMs]], so a live writer keeps its
+    * lock however long it runs; a lock not refreshed for that long is
+    * presumed to belong to a crashed writer and is taken over. The
+    * refresh is `FileSystem.setTimes`, which s3a does not implement:
+    * there a writer that runs past the TTL can still lose its lock.
     */
-  private def withWriteLock[T](body: => T): T = {
-    val fs = lockFile.getFileSystem(spark.sessionState.newHadoopConf())
+  private[graft] def withWriteLock[T](body: => T): T = {
     if (fs.exists(lockFile)) {
       val st = fs.getFileStatus(lockFile)
-      if (System.currentTimeMillis() - st.getModificationTime < LockTtlMs) {
+      if (System.currentTimeMillis() - st.getModificationTime < lockTtlMs) {
         val holder =
           try {
             val in = fs.open(lockFile)
@@ -300,25 +376,22 @@ final class ChunkStore private (
       catch { case _: java.io.IOException => throw new StoreLockedException(path, "concurrent writer") }
     try out.write(s"pid=${ProcessHandle.current().pid()} ts=${System.currentTimeMillis()}".getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    // a failed refresh (say, a filesystem failover) is retried at the
+    // next beat; the thread is never interrupted, so no filesystem call
+    // of it is cut off midway
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val heartbeat = new Thread(() =>
+      while (!done.await((lockTtlMs / 4) max 1, java.util.concurrent.TimeUnit.MILLISECONDS))
+        try fs.setTimes(lockFile, System.currentTimeMillis(), -1)
+        catch { case e: java.io.IOException => log.warn(s"refreshing the write lock of $path failed; retrying", e) },
+      s"graft-lock-heartbeat $path")
+    heartbeat.setDaemon(true)
+    heartbeat.start()
     try body
-    finally fs.delete(lockFile, false)
-  }
-
-  // Writable load: if a crashed gc/compact left swap debris, recover
-  // it before any read can observe a half-swapped store (readOr treats
-  // a missing table dir as empty — silent truncation). Skipped when a
-  // live writer holds the lock: that writer owns the swap in flight.
-  locally {
-    if (!readonly) {
-      val conf0 = spark.sessionState.newHadoopConf()
-      val hasDebris =
-        Seq(".gc_tmp", ".compact_tmp", "chunks.old", "manifest.old", "catalog.old").exists { d =>
-          val p = new HPath(path, d)
-          p.getFileSystem(conf0).exists(p)
-        }
-      if (hasDebris)
-        try withWriteLock(recoverInterruptedSwap())
-        catch { case _: StoreLockedException => () }
+    finally {
+      done.countDown()
+      heartbeat.join()
+      fs.delete(lockFile, false)
     }
   }
 
@@ -339,30 +412,32 @@ final class ChunkStore private (
       ).as("data"))
 
   /** Join-based bulk get: `hashDf` must have a `blob_hash` column.
-    * Returns (blob_hash, data, verified). Missing hashes are absent
-    * from the result (the caller — e.g. [[Lake]] — decides NotFound).
+    * Returns (blob_hash, data, verified). Missing and tombstoned hashes
+    * are absent from the result (the caller — e.g. [[Lake]] — decides
+    * NotFound).
     *
     * Bulk restores read the flat level-0 manifest rows directly (one
     * distributed join, no tree walk); the recursive tree is the
     * point-lookup path ([[getBlobsByHashes]]).
     */
   def getBlobs(hashDf: DataFrame): DataFrame = {
+    val g = current()
     val want = hashDf.select(col("blob_hash")).distinct()
-    val cat = liveCatalog.join(want, Seq("blob_hash"))
+    val cat = g.liveCatalog.join(want, Seq("blob_hash"))
 
     val inline = cat
       .filter(col("kind") === "inline")
       .select(col("blob_hash"), col("inline_data").as("data"))
 
-    val m = manifest
+    val m = g.manifest
       .filter(col("level") === 0)
-      .join(want, Seq("blob_hash"))
+      .join(cat.select("blob_hash"), Seq("blob_hash"))
       // replay-safe: a failed-then-retried put may have appended
       // duplicate manifest rows (see class doc); rows are identical
       .dropDuplicates("blob_hash", "part_idx")
 
     inline
-      .unionByName(reassemble(m, chunks))
+      .unionByName(reassemble(m, g.chunks))
       .withColumn("verified", sha2(col("data"), 256) === col("blob_hash"))
   }
 
@@ -389,25 +464,27 @@ final class ChunkStore private (
   private def lookup(hashes: Seq[String]): Map[String, CatalogEntry] =
     if (hashes.isEmpty) Map.empty else liveEntries(probe(hashes).collect().toSeq)
 
-  /** (blob_hash, data, verified) for live catalog rows, ordered by
-    * blob_hash. Inline payloads come from the rows themselves; chunked
-    * blobs are walked on the driver ([[walk]]) down to their leaves,
-    * which the frame fetches bucket-scoped. Each entry also contributes
-    * a row of its own (a null part for a chunked blob), so a blob none
-    * of whose parts can be read still gets a row, unverified. Up to
+  /** (blob_hash, data, verified) for live catalog rows of one probe,
+    * ordered by blob_hash, read from the generation it probed. Inline
+    * payloads come from the rows themselves; chunked blobs are walked
+    * on the driver ([[walk]]) down to their leaves, which the frame
+    * fetches bucket-scoped. Each entry also contributes a row of its
+    * own (a null part for a chunked blob), so a blob none of whose
+    * parts can be read still gets a row, unverified. Up to
     * [[MaxPointRefs]] leaves the parts meet in one single-partition
     * aggregate, so the frame runs as one job with no shuffle; a larger
     * leaf set (a big blob) is aggregated in parallel.
     */
   private def readEntries(entries: Seq[CatalogEntry]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val leaves = walk(entries)
+    val dir = genDir(entries.headOption.fold(0L)(_.gen))
+    val leaves = walk(dir, entries)
     val own = spark.createDataFrame(
       entries.map(e => Row(e.blobHash, 0L, if (e.kind == "inline") e.inlineData else null)).asJava,
       partSchema)
     val parts =
       if (leaves.isEmpty) own
-      else own.unionByName(fetch(leaves).withColumnRenamed("idx", "part_idx"))
+      else own.unionByName(fetch(dir, leaves).withColumnRenamed("idx", "part_idx"))
     (if (leaves.size <= MaxPointRefs) parts.coalesce(1) else parts)
       .groupBy(col("blob_hash"))
       // a set: a chunk stored twice (a replayed append) is one part
@@ -432,7 +509,7 @@ final class ChunkStore private (
     * bounds cyclic or garbage manifests; verify-on-read backstops the
     * payload.
     */
-  private def walk(entries: Seq[CatalogEntry]): Seq[PartRef] = {
+  private def walk(dir: String, entries: Seq[CatalogEntry]): Seq[PartRef] = {
     def root(e: CatalogEntry) = PartRef(e.blobHash, 0L, e.rootHash, e.rootKey, e.rootBucket)
     val trees = entries.filter(_.kind == "tree")
     val maxDepth = (0 +: trees.map(_.treeDepth)).max
@@ -448,7 +525,7 @@ final class ChunkStore private (
         log.warn(
           s"tree deeper than recorded tree_depth=$maxDepth in $path " +
             s"(extra level ${level - maxDepth}); continuing depth-agnostic walk")
-      val children = fetch(frontier).collect().toSeq
+      val children = fetch(dir, frontier).collect().toSeq
         .flatMap(r => parseNode(r.getString(0), new String(r.getAs[Array[Byte]](2), StandardCharsets.UTF_8)))
         .distinct
       leaves ++= children.collect { case (r, true) => r }
@@ -470,7 +547,8 @@ final class ChunkStore private (
     }
 
   /** (blob_hash, idx, part) for each of `refs`: the decrypted chunks
-    * behind them, read from only the bucket directories they hash to.
+    * behind them, read from only the bucket directories they hash to in
+    * the generation at `dir`.
     * Up to [[MaxPointRefs]] refs, the chunk hashes are a literal IN
     * list (pushed down to parquet) and each match finds its refs and
     * key in a literal map, so the read is one scan. A larger set (a big
@@ -480,9 +558,9 @@ final class ChunkStore private (
     * stored bytes no longer hash to its address is dropped, so its blob
     * fails verification instead of decrypting garbage.
     */
-  private def fetch(refs: Seq[PartRef]): DataFrame = {
+  private def fetch(dir: String, refs: Seq[PartRef]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val stored = chunksIn(refs.map(_.bucket)).filter(sha2(col("data"), 256) === col("chunk_hash"))
+    val stored = chunksIn(dir, refs.map(_.bucket)).filter(sha2(col("data"), 256) === col("chunk_hash"))
     val matched =
       if (refs.size <= MaxPointRefs) {
         val owners = typedLit(refs.groupBy(_.chunkHash).map { case (h, rs) => h -> rs.map(r => (r.blobHash, r.idx, r.key)) })
@@ -496,56 +574,50 @@ final class ChunkStore private (
     matched.select(col("blob_hash"), col("idx"), decoded(col("data"), col("enc"), col("key")).as("part"))
   }
 
-  /** The chunk table restricted to the `bucket=N` directories of
-    * `buckets`, each checked for existence on its own (a point read
-    * needs a few, and a listing of `chunks/` costs more than that); the
-    * literal bucket filter keeps `bucket` in the plan's PartitionFilters.
+  /** The chunk table of the generation at `dir` restricted to the
+    * `bucket=N` directories of `buckets`, each checked for existence on
+    * its own (a point read needs a few, and a listing of `chunks/` costs
+    * more than that); the literal bucket filter keeps `bucket` in the
+    * plan's PartitionFilters.
     */
-  private def chunksIn(buckets: Seq[Int]): DataFrame = {
+  private def chunksIn(dir: String, buckets: Seq[Int]): DataFrame = {
     val bs = buckets.distinct.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val dirs = bs.map(b => new HPath(s"$chunksDir/bucket=$b")).filter(p => p.getFileSystem(conf).exists(p))
-    readChunks(dirs).filter(col("bucket").isin(bs.map(Integer.valueOf): _*))
+    readChunks(dir, bs.map(b => new HPath(s"$dir/chunks/bucket=$b")).filter(fs.exists))
+      .filter(col("bucket").isin(bs.map(Integer.valueOf): _*))
   }
 
-  /** This store's `chunks/bucket=N` directories, from one listing of
-    * `chunks/`.
+  /** The chunk table of the generation at `dir` over its bucket
+    * directories `dirs`. Spark lists them itself, never the whole
+    * `chunks/` tree: its nBuckets subdirectories would exceed the
+    * parallel partition discovery threshold and cost a distributed
+    * listing job. The directories are read in groups at or below that
+    * threshold, so every listing stays on the driver; `basePath` keeps
+    * `bucket` a partition column.
     */
-  private def bucketDirs: Seq[HPath] = {
-    val p = new HPath(chunksDir)
-    val listed =
-      try p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    listed.filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")).map(_.getPath).sortBy(_.getName)
-  }
-
-  /** The chunk table over the bucket directories `dirs`. Spark lists
-    * them itself, never the whole `chunks/` tree: its nBuckets
-    * subdirectories would exceed the parallel partition discovery
-    * threshold and cost a distributed listing job. The directories are
-    * read in groups at or below that threshold, so every listing stays
-    * on the driver; `basePath` keeps `bucket` a partition column.
-    */
-  private def readChunks(dirs: Seq[HPath]): DataFrame =
+  private def readChunks(dir: String, dirs: Seq[HPath]): DataFrame =
     if (dirs.isEmpty) rowsOf(chunkSchema)
     else {
       val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt max 1
       dirs.grouped(perRead)
-        .map(g => spark.read.schema(chunkSchema).option("basePath", chunksDir).parquet(g.map(_.toString): _*))
+        .map(g => spark.read.schema(chunkSchema).option("basePath", s"$dir/chunks").parquet(g.map(_.toString): _*))
         .reduce(_ unionByName _)
     }
 
   /** This store's side of a point read's catalog probe: its catalog
     * rows (`dead` false) and tombstones (`dead` true) for `hashes`, as
-    * [[ChunkStore.liveEntries]] reads them. [[Lake.getBlob]] unions
-    * every store's probe into one job.
+    * [[ChunkStore.liveEntries]] reads them, each tagged with the
+    * generation it was read from, so the chunks are read from the same
+    * one ([[readBlob]]). [[Lake.getBlob]] unions every store's probe
+    * into one job.
     */
   private[lake] def probe(hashes: Seq[String]): DataFrame = {
+    val g = current()
     val wanted = col("blob_hash").isin(hashes.distinct: _*)
-    catalog.filter(wanted)
+    g.catalog.filter(wanted)
       .select(lit(false).as("dead"), col("blob_hash"), col("kind"), col("inline_data"),
         col("root_hash"), col("root_key"), col("root_bucket"), col("tree_depth"))
-      .unionByName(tombstones.filter(wanted).select(lit(true).as("dead"), col("blob_hash")), allowMissingColumns = true)
+      .unionByName(g.tombstones.filter(wanted).select(lit(true).as("dead"), col("blob_hash")), allowMissingColumns = true)
+      .withColumn("gen", lit(g.n))
   }
 
   /** One blob's bytes from its live catalog row, verified on read. An
@@ -571,20 +643,24 @@ final class ChunkStore private (
   def containsBlob(hash: String): Boolean = lookup(Seq(hash)).contains(hash)
 
   /** Tombstone blobs for deletion (no data is reclaimed yet — chunks
-    * are shared across blobs by content addressing, so the space comes
-    * back at the next [[gc]]). Unknown and already-deleted hashes are
+    * are shared across blobs by content addressing). The next [[gc]]
+    * (or `compact(reclaim = true)`) drops their rows from the current
+    * generation, but their payloads stay on disk in the generation it
+    * replaced, which readers may still be reading, until the rewrite
+    * after that one deletes it. Unknown and already-deleted hashes are
     * ignored. Returns the number of newly tombstoned blobs.
     */
   def deleteBlobsDf(hashDf: DataFrame): Long = {
     if (readonly) throw new StoreReadOnlyException(path)
     withWriteLock {
+      val g = current()
       val fresh = hashDf.select(col("blob_hash")).distinct()
-        .join(catalog.select("blob_hash"), Seq("blob_hash"), "left_semi")
-        .join(tombstones, Seq("blob_hash"), "left_anti")
+        .join(g.catalog.select("blob_hash"), Seq("blob_hash"), "left_semi")
+        .join(g.tombstones, Seq("blob_hash"), "left_anti")
         .cache()
       try {
         val n = fresh.count()
-        if (n > 0) fresh.write.mode(SaveMode.Append).parquet(tombstonesDir)
+        if (n > 0) fresh.write.mode(SaveMode.Append).parquet(s"${g.dir}/tombstones")
         n
       } finally fresh.unpersist()
     }
@@ -595,118 +671,69 @@ final class ChunkStore private (
     deleteBlobsDf(hashes.toDF("blob_hash"))
   }
 
-  /** Garbage collection: rewrite the store keeping only chunks
-    * reachable from live (non-tombstoned) catalog entries. One
-    * distributed anti-join cascade — catalog → manifest rows →
-    * referenced chunk hashes — then an atomic-ish swap (write to a
-    * temp dir, delete old, rename). Also compacts away replayed
-    * duplicate manifest rows and orphan chunks from failed puts (the
-    * same classes [[fsck]] reports).
-    *
-    * Requires the write lock; concurrent READERS during the swap
-    * window would see a partial store — at 100 TB, front the store
-    * with a table format for snapshot-isolated GC, as the class doc
-    * notes. Returns a one-row stats frame.
+  /** The one rewrite behind [[gc]] and [[compact]], under the write
+    * lock. From the current generation n it writes generation n+1 into
+    * a temp dir: chunks repartitioned by `bucket` (one file per bucket
+    * per task, so a pruned point read opens about one file per probed
+    * bucket), manifest, catalog and, unless `reclaim`, tombstones, each
+    * repartitioned by `blob_hash`. With `reclaim` it writes only what
+    * is live (`Generation.live`) and no tombstones. One directory rename
+    * publishes the new generation; every generation older than n is
+    * then deleted, while n stays for the readers that resolved it. A
+    * rewrite stopped before its rename leaves only the temp dir, which
+    * the next rewrite deletes first. `report` runs under the lock too,
+    * on (n, n+1).
     */
-  def gc(): DataFrame = {
+  private def rewrite[T](reclaim: Boolean)(report: (Generation, Generation) => T): T = {
     if (readonly) throw new StoreReadOnlyException(path)
-    import spark.implicits._
     withWriteLock {
-      val conf = spark.sessionState.newHadoopConf()
-      val tmpRoot = new HPath(path, ".gc_tmp")
-      val fs = tmpRoot.getFileSystem(conf)
-      recoverInterruptedSwap() // finish or roll back a crashed prior swap
+      val from = current()
+      val tmp = s"$path/$RewriteDir"
+      fs.delete(new HPath(tmp), true)
+      val (cat, man, chk) = if (reclaim) from.live else (from.catalog, from.manifest, from.chunks)
+      chk.repartition(col("bucket")).write.partitionBy("bucket").parquet(s"$tmp/chunks")
+      val tombs = if (reclaim || !from.has("tombstones")) Nil else Seq("tombstones" -> from.tombstones)
+      (Seq("manifest" -> man, "catalog" -> cat) ++ tombs).foreach { case (t, rows) =>
+        rows.repartition(col("blob_hash")).write.parquet(s"$tmp/$t")
+      }
+      if (!fs.rename(new HPath(tmp), new HPath(genDir(from.n + 1))))
+        throw new java.io.IOException(s"rewrite: publishing generation ${from.n + 1} failed in $path")
+      val root = fs.listStatus(new HPath(path)).map(_.getPath.getName)
+      root.flatMap(genOf).filter(_ < from.n).foreach(k => fs.delete(new HPath(genDir(k)), true))
+      if (from.n > 0) root.filter(Tables.contains).foreach(t => fs.delete(new HPath(path, t), true))
+      report(from, current())
+    }
+  }
 
-      val beforeChunks = chunks.agg(count(lit(1)), coalesce(sum(col("size")), lit(0L))).as[(Long, Long)].head()
-      val deadBlobs = tombstones.count()
-
-      val liveCat = liveCatalog
-      val liveMan = manifest
-        .dropDuplicates("blob_hash", "level", "part_idx")
-        .join(liveCat.select("blob_hash"), Seq("blob_hash"), "left_semi")
-      val liveChunks = chunks
-        .dropDuplicates("chunk_hash")
-        .join(liveMan.select("chunk_hash").distinct(), Seq("chunk_hash"), "left_semi")
-
-      // materialize the survivors BEFORE touching the source dirs (the
-      // frames above read them lazily)
-      liveChunks.write.partitionBy("bucket").parquet(s"$path/.gc_tmp/chunks")
-      liveMan.write.parquet(s"$path/.gc_tmp/manifest")
-      liveCat.write.parquet(s"$path/.gc_tmp/catalog")
-
-      swapCommitted(fs, tmpRoot, Seq("chunks", "manifest", "catalog"), "gc")
-      fs.delete(new HPath(tombstonesDir), true)
-
-      val afterChunks = chunks.agg(count(lit(1)), coalesce(sum(col("size")), lit(0L))).as[(Long, Long)].head()
+  /** Garbage collection: the reclaiming rewrite, which keeps only the
+    * chunks reachable from live (non-tombstoned) catalog entries — one
+    * distributed cascade, catalog → manifest rows → referenced chunk
+    * hashes — and clears the tombstones. It also drops replayed
+    * duplicate manifest rows and orphan chunks from failed puts (the
+    * same classes [[fsck]] reports). Readers are never blocked and
+    * never see a partial store (see the class doc). Returns a one-row
+    * stats frame. Its reclaimed counts are logical, the current
+    * generation's before and after: the replaced generation, garbage
+    * and deleted payloads included, stays on disk until the next
+    * rewrite, so right after gc the store's directory holds both, and a
+    * bounded store's disk use can exceed `maxBytes`, which bounds the
+    * current generation only.
+    */
+  def gc(): DataFrame =
+    rewrite(reclaim = true) { (from, to) =>
+      def stats(g: Generation) = g.chunks.agg(count(lit(1)), coalesce(sum(col("size")), lit(0L))).head()
+      val (before, after) = (stats(from), stats(to))
       rowsOf(gcSchema, Row(
-        deadBlobs,
-        beforeChunks._1 - afterChunks._1,
-        beforeChunks._2 - afterChunks._2,
-        afterChunks._1,
-        afterChunks._2,
+        from.tombstones.count(),
+        before.getLong(0) - after.getLong(0),
+        before.getLong(1) - after.getLong(1),
+        after.getLong(0),
+        after.getLong(1),
       ))
     }
-  }
-
-  /** Crash-safe table swap shared by [[gc]] and [[compact]]. After the
-    * rewrite fully lands in `tmpRoot`, a `_COMMIT` marker is created;
-    * each table is then swapped by renaming the live dir ASIDE
-    * (`<d>.old`) before renaming the tmp dir in, so a complete copy of
-    * every table exists on disk at every instant. The previous
-    * delete-then-rename protocol had a window where the only copy
-    * lived in the tmp dir and the next run deleted it as debris.
-    */
-  private def swapCommitted(fs: FileSystem, tmpRoot: HPath, tables: Seq[String], what: String): Unit = {
-    fs.create(new HPath(tmpRoot, "_COMMIT"), true).close()
-    tables.foreach { d =>
-      val dst = new HPath(path, d)
-      val old = new HPath(path, s"$d.old")
-      fs.delete(old, true)
-      if (fs.exists(dst) && !fs.rename(dst, old))
-        throw new java.io.IOException(s"$what: rename-aside failed for $d in $path")
-      if (!fs.rename(new HPath(tmpRoot, d), dst))
-        throw new java.io.IOException(s"$what: rename failed for $d in $path")
-      fs.delete(old, true)
-    }
-    fs.delete(tmpRoot, true)
-  }
-
-  /** Recover from a crash mid-[[gc]]/[[compact]]: roll a committed
-    * swap forward (the `_COMMIT` marker means every tmp table is a
-    * complete rewrite), restore any renamed-aside table of an
-    * uncommitted one, then clear debris. Idempotent; runs at writable
-    * load and under the write lock before either rewrite.
-    */
-  private[lake] def recoverInterruptedSwap(): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val tables = Seq("chunks", "manifest", "catalog")
-    Seq(".gc_tmp", ".compact_tmp").foreach { t =>
-      val tmpRoot = new HPath(path, t)
-      val fs = tmpRoot.getFileSystem(conf)
-      val committed = fs.exists(new HPath(tmpRoot, "_COMMIT"))
-      tables.foreach { d =>
-        val dst = new HPath(path, d)
-        val old = new HPath(path, s"$d.old")
-        val tmp = new HPath(tmpRoot, d)
-        if (committed && fs.exists(tmp)) {
-          // roll forward: the committed tmp copy is the new truth
-          if (fs.exists(dst)) { fs.delete(old, true); fs.rename(dst, old) }
-          if (!fs.rename(tmp, dst))
-            throw new java.io.IOException(s"swap recovery: rename failed for $d in $path")
-        } else if (!fs.exists(dst) && fs.exists(old)) {
-          // roll back: restore the renamed-aside live copy
-          if (!fs.rename(old, dst))
-            throw new java.io.IOException(s"swap recovery: restore failed for $d in $path")
-        }
-        if (fs.exists(dst)) fs.delete(old, true)
-      }
-      fs.delete(tmpRoot, true)
-    }
-  }
 
   private def countDataFiles(dir: String): Long = {
     val p = new HPath(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) 0L
     else {
       val it = fs.listFiles(p, true)
@@ -716,30 +743,6 @@ final class ChunkStore private (
     }
   }
 
-  /** Small-file compaction. Every put appends its own parquet files, so
-    * a long-lived store fragments — the classic append-ingest killer at
-    * scale (namenode/listing pressure, an open() per tiny file, no
-    * row-group locality), and the thing the reference's bump-allocated
-    * pages (store/mod.rs:330-390) never suffer: the Spark translation
-    * owes this maintenance op back. Rewrites chunks co-partitioned by
-    * `bucket` (one file per bucket per shuffle task — so the pruned
-    * point read of [[getBlobsByHashes]] opens ~one file per probed
-    * bucket again) and manifest/catalog repartitioned on `blob_hash`,
-    * under the write lock with the same tmp-dir + rename swap as
-    * [[gc]].
-    *
-    * With `reclaim = true` the rewrite is additionally GC-aware: the
-    * same liveness filter [[gc]] applies (live catalog; manifest rows
-    * of live blobs, replay-duplicates dropped; chunks referenced by at
-    * least one live manifest row — shared chunks of tombstoned blobs
-    * survive) is fused INTO the consolidation pass, and tombstones are
-    * cleared after the swap. A 100 TB store pays ONE full rewrite for
-    * both layout and reclamation instead of two.
-    *
-    * Default `reclaim = false` keeps the original contract: contents
-    * untouched, only the file layout changes. Returns per-table
-    * before/after file counts either way.
-    */
   /** Maintenance planner — the WHEN for [[compact]]/[[gc]], completing
     * the plan → execute → verify loop ([[compact]] executes,
     * [[fsck]]/[[scrub]] verify). One row of integer health metrics:
@@ -765,21 +768,15 @@ final class ChunkStore private (
     */
   def maintenanceReport(maxFilesPerBucketMilli: Long = 2000L, maxDeadPpm: Long = 300000L): DataFrame = {
     import spark.implicits._
-    val nFiles = countDataFiles(chunksDir)
-    val nBucketsUsed = bucketDirs.size.toLong
+    val g = current()
+    val nFiles = countDataFiles(s"${g.dir}/chunks")
+    val nBucketsUsed = g.bucketDirs.size.toLong
     val filesPerBucketMilli = if (nBucketsUsed == 0) 0L else nFiles * 1000L / nBucketsUsed
-    // ONE pass over the chunk table for both liveness counts (was two:
-    // a distinct count, then a semi-join + distinct count that re-read
-    // every chunk row): the distinct chunk set left-joins the live
-    // reference set once, and a single scalar aggregate yields total
-    // and live together. Identical numbers — the semi-join's "exists"
-    // is the left join's matched marker.
-    val liveRefs = manifest
-      .dropDuplicates("blob_hash", "level", "part_idx")
-      .join(liveCatalog.select("blob_hash"), Seq("blob_hash"), "left_semi")
-      .select("chunk_hash").distinct()
-      .withColumn("live_", lit(1L))
-    val cnts = chunks.select(col("chunk_hash")).distinct()
+    // ONE pass over the chunk table for both liveness counts: the
+    // distinct chunk set left-joins the live reference set once, and a
+    // single scalar aggregate yields total and live together
+    val liveRefs = g.live._2.select("chunk_hash").distinct().withColumn("live_", lit(1L))
+    val cnts = g.chunks.select(col("chunk_hash")).distinct()
       .join(liveRefs, Seq("chunk_hash"), "left")
       .agg(count(lit(1)).as("n"), coalesce(sum(col("live_")), lit(0L)).as("nl"))
       .head()
@@ -799,58 +796,37 @@ final class ChunkStore private (
         "n_chunks", "n_dead_chunks", "dead_ppm", "recommend")
   }
 
-  def compact(reclaim: Boolean = false): DataFrame = {
-    if (readonly) throw new StoreReadOnlyException(path)
-    withWriteLock {
-      val conf = spark.sessionState.newHadoopConf()
-      val tmpRoot = new HPath(path, ".compact_tmp")
-      val fs = tmpRoot.getFileSystem(conf)
-      recoverInterruptedSwap() // finish or roll back a crashed prior swap
-
-      val before = Map(
-        "chunks" -> countDataFiles(chunksDir),
-        "manifest" -> countDataFiles(manifestDir),
-        "catalog" -> countDataFiles(catalogDir),
-      )
-      val (outCat, outMan, outChunks) =
-        if (!reclaim) (catalog, manifest, chunks)
-        else {
-          val liveCat = liveCatalog
-          val liveMan = manifest
-            .dropDuplicates("blob_hash", "level", "part_idx")
-            .join(liveCat.select("blob_hash"), Seq("blob_hash"), "left_semi")
-          val liveChunks = chunks
-            .dropDuplicates("chunk_hash")
-            .join(liveMan.select("chunk_hash").distinct(), Seq("chunk_hash"), "left_semi")
-          (liveCat, liveMan, liveChunks)
-        }
-      // materialize into tmp BEFORE touching the source dirs (the
-      // frames above read them lazily)
-      outChunks.repartition(col("bucket")).write.partitionBy("bucket")
-        .parquet(s"$path/.compact_tmp/chunks")
-      outMan.repartition(col("blob_hash")).write.parquet(s"$path/.compact_tmp/manifest")
-      outCat.repartition(col("blob_hash")).write.parquet(s"$path/.compact_tmp/catalog")
-
-      swapCommitted(fs, tmpRoot, Seq("chunks", "manifest", "catalog"), "compact")
-      if (reclaim) fs.delete(new HPath(tombstonesDir), true)
-
-      rowsOf(compactSchema, Seq("chunks", "manifest", "catalog").map { d =>
-        val dir = d match {
-          case "chunks" => chunksDir
-          case "manifest" => manifestDir
-          case _ => catalogDir
-        }
-        Row(d, before(d), countDataFiles(dir))
+  /** Small-file compaction. Every put appends its own parquet files, so
+    * a long-lived store fragments — the classic append-ingest killer at
+    * scale (namenode/listing pressure, an open() per tiny file, no
+    * row-group locality), and the thing the reference's bump-allocated
+    * pages (store/mod.rs:330-390) never suffer: the Spark translation
+    * owes this maintenance op back. The same rewrite as [[gc]]: by
+    * default the contents are untouched and only the file layout
+    * changes; with `reclaim = true` the rewrite keeps only what is live,
+    * as [[gc]] does, so a 100 TB store pays ONE full rewrite for both
+    * layout and reclamation instead of two. Like every rewrite it leaves
+    * the generation it replaced on disk until the next rewrite, so the
+    * store's disk use is about doubled in between. Returns per-table
+    * before/after file counts either way: those of the replaced and the
+    * new generation.
+    */
+  def compact(reclaim: Boolean = false): DataFrame =
+    rewrite(reclaim) { (from, to) =>
+      rowsOf(compactSchema, Seq("chunks", "manifest", "catalog").map { t =>
+        Row(t, countDataFiles(s"${from.dir}/$t"), countDataFiles(s"${to.dir}/$t"))
       }: _*)
     }
-  }
 
   /** Store consistency audit — the Spark analog of the reference's
     * load-time corruption checks (store/mod.rs:107-170 bounds/overlap/
     * modulo sanity). Returns one row per invariant with its violation
     * count; a healthy store is all zeros.
     */
-  def fsck(): DataFrame = ChunkStore.fsckReport(manifest, chunks, catalog)
+  def fsck(): DataFrame = {
+    val g = current()
+    ChunkStore.fsckReport(g.manifest, g.chunks, g.catalog)
+  }
 
   /** Payload scrub — the bit-rot half of the integrity story
     * ([[fsck]] audits STRUCTURE across the three relations; scrub
@@ -873,7 +849,7 @@ final class ChunkStore private (
     * store. A healthy store is all-zero.
     */
   def scrub(): DataFrame = {
-    val agg = chunks.agg(
+    val agg = current().chunks.agg(
       count(lit(1)).as("n"),
       coalesce(sum(when(sha2(col("data"), 256) =!= col("chunk_hash"), 1L).otherwise(0L)), lit(0L)).as("h"),
       coalesce(sum(when(col("size") =!= octet_length(col("data")).cast(LongType), 1L).otherwise(0L)), lit(0L)).as("s"),
@@ -927,8 +903,8 @@ final class ChunkStore private (
     * the number of blobs copied.
     *
     * Replication is additive and respects deletes on both ends: the
-    * source side is [[liveCatalog]] (a blob tombstoned here — even
-    * before [[gc]] reclaims it — must not resurrect as a readable
+    * source side is what [[gc]] would keep (a blob tombstoned here — even
+    * before gc reclaims it — must not resurrect as a readable
     * blob in the replica), while the commit keys on the target's *raw*
     * catalog and lifts no tombstone (a blob the target itself
     * tombstoned still owns its catalog row until gc, so it is not
@@ -937,12 +913,9 @@ final class ChunkStore private (
     * not a delete-sync.
     */
   def replicateTo(target: ChunkStore): Long = {
-    val live = liveCatalog.drop("root_bucket")
-    val parts = manifest
-      .drop("bucket")
-      .join(live.select("blob_hash"), Seq("blob_hash"), "left_semi")
-      .join(chunks.dropDuplicates("chunk_hash").select("chunk_hash", "size", "enc", "data"), Seq("chunk_hash"), "left")
-    target.commit(new Staged(live.unionByName(parts, allowMissingColumns = true), blobs = None))
+    val (cat, man, chk) = current().live
+    val parts = man.drop("bucket").join(chk.select("chunk_hash", "size", "enc", "data"), Seq("chunk_hash"), "left")
+    target.commit(new Staged(cat.drop("root_bucket").unionByName(parts, allowMissingColumns = true), blobs = None))
   }
 }
 
@@ -971,8 +944,11 @@ private[lake] final class Staged(val rows: DataFrame, val blobs: Option[DataFram
   def release(): Unit = rows.unpersist()
 }
 
-/** A live catalog row, as the point-read walk starts from it. */
+/** A live catalog row, as the point-read walk starts from it, with the
+  * generation of the store it was read from.
+  */
 private[lake] final case class CatalogEntry(
+    gen: Long,
     blobHash: String,
     kind: String,
     inlineData: Array[Byte],
@@ -991,12 +967,32 @@ object ChunkStore {
   /** Magic marker content (reference: store/mod.rs MAGIC = b"DataLake..."). */
   val Magic = "GraftStore v1"
 
-  /** Write locks older than this are presumed dead and taken over (a
-    * crashed driver must not brick the store forever). A put holds the
-    * lock for its commit only, not for its staging, and refreshes
-    * nothing, so size the TTL well above the longest commit.
+  /** A write lock not refreshed for this long is presumed to belong to
+    * a crashed writer and is taken over (a crashed driver must not brick
+    * the store forever). A live writer refreshes its lock every quarter
+    * of this, however long its commit or rewrite runs.
     */
   val LockTtlMs: Long = 30L * 60 * 1000
+
+  /** Generation n ≥ 1 of a store lives in `gen-<n>/`; generation 0 is
+    * the store root.
+    */
+  private val GenPrefix = "gen-"
+
+  /** The generation number of a store root entry, if it is one. */
+  private def genOf(name: String): Option[Long] =
+    if (name.startsWith(GenPrefix)) name.stripPrefix(GenPrefix).toLongOption.filter(_ > 0) else None
+
+  /** Where a rewrite writes the next generation before publishing it. */
+  private val RewriteDir = "_GRAFT_REWRITE"
+
+  /** What an interrupted gc or compact of earlier graft versions left
+    * in a store root: their temp dirs and the tables renamed aside.
+    */
+  private val SwapDebris = Set(".gc_tmp", ".compact_tmp", "chunks.old", "manifest.old", "catalog.old")
+
+  /** The tables of a generation. */
+  private val Tables = Seq("chunks", "manifest", "catalog", "tombstones")
 
   val chunkSchema: StructType = StructType(Seq(
     StructField("chunk_hash", StringType),
@@ -1221,7 +1217,7 @@ object ChunkStore {
     present.filterNot(r => tombstoned(r.getAs[String]("blob_hash"))).map { r =>
       val h = r.getAs[String]("blob_hash")
       h -> CatalogEntry(
-        h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
+        r.getAs[Long]("gen"), h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
         r.getAs[String]("root_key"), Option(r.getAs[Integer]("root_bucket")).fold(0)(_.intValue),
         Option(r.getAs[Integer]("tree_depth")).fold(0)(_.intValue))
     }.toMap

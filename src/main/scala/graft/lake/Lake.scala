@@ -115,8 +115,9 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     * tombstoned it serves it, so a blob deleted in one store is still
     * served by the next. The probe alone answers a miss or an inline
     * blob; a chunked blob then costs one bucket-scoped job per tree
-    * level plus one for its leaves ([[ChunkStore.getBlobsByHashes]]).
-    * Nothing is cached across calls.
+    * level plus one for its leaves ([[ChunkStore.getBlobsByHashes]]),
+    * read from the generation of the store that the probe read. Nothing
+    * is cached across calls.
     */
   def getBlob(hash: String): Array[Byte] = {
     val rows =
@@ -141,7 +142,10 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
   def delete(hashes: Seq[String]): Long =
     writable.map(_.deleteBlobs(hashes)).sum
 
-  /** GC every writable store; returns per-store stats keyed by path. */
+  /** GC every writable store; returns per-store stats keyed by path.
+    * Reads through this lake or any other handle keep working while it
+    * runs (see [[ChunkStore.gc]]).
+    */
   def gc(): DataFrame = perStore(writable, ChunkStore.gcSchema)(_.gc())
 
   /** `f` of each of `ss` with a `store` column holding its path; an
@@ -152,10 +156,10 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     else ss.map(s => f(s).withColumn("store", lit(s.path))).reduceLeft(_ unionByName _)
 
   /** Compact every writable store (small-file consolidation; with
-    * `reclaim` the GC liveness filter is fused into the same rewrite —
-    * see [[ChunkStore.compact]]). The lake-level maintenance sibling
-    * of [[gc]]: per-store per-table before/after file counts keyed by
-    * path.
+    * `reclaim` it keeps only what is live, as GC does, in the same
+    * rewrite — see [[ChunkStore.compact]]). The lake-level maintenance
+    * sibling of [[gc]]: per-store per-table before/after file counts
+    * keyed by path.
     */
   def compact(reclaim: Boolean = false): DataFrame = perStore(writable, ChunkStore.compactSchema)(_.compact(reclaim))
 

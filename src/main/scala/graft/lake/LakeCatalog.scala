@@ -13,7 +13,11 @@ object LakeCatalog {
     *   {prefix}_chunks / {prefix}_manifest / {prefix}_catalog  (union)
     *   {prefix}_s{i}_chunks / ...                              (per store)
     * Lake-wide unions carry a `store_priority` column matching the
-    * read-fallback order.
+    * read-fallback order. Each view reads the generation of its store
+    * that was current at registration (see [[ChunkStore.chunks]]): a
+    * later put is not in it, and it stays readable until the second
+    * `gc` or `compact` of that store after the call; register again to
+    * see the store as it is now.
     */
   def register(lake: Lake, prefix: String = "graft"): Unit = {
     val parts = lake.stores.zipWithIndex.map { case (s, i) =>
