@@ -110,9 +110,10 @@ object LakeParams {
   * only once fully written, so a failed-and-retried put (the normal
   * streaming foreachBatch failure mode) re-runs idempotently — chunk
   * appends are anti-joined away, and any manifest rows the failed
-  * attempt left behind are deduplicated on read and surfaced by
-  * [[fsck]]. Writers, rewrites included, hold the store's write lock
-  * (the reference's single-writer guard, store/atomic.rs).
+  * attempt left behind are dropped on read by the assembly, which takes
+  * each blob's parts as a set, and surfaced by [[fsck]]. Writers,
+  * rewrites included, hold the store's write lock (the reference's
+  * single-writer guard, store/atomic.rs).
   */
 final class ChunkStore private (
     val spark: SparkSession,
@@ -399,46 +400,27 @@ final class ChunkStore private (
   private def decoded(stored: Column, enc: Column, keyHex: Column): Column =
     when(enc === "raw", stored).otherwise(Convergent.decryptDeflated(stored, unhex(keyHex)))
 
-  /** manifest-rows → (blob_hash, data) via decrypt + single-allocation
-    * ordered concat (linear in blob size; the aggregate(concat) HOF it
-    * replaces re-copied the accumulated prefix per part — O(parts²)).
-    */
-  private def reassemble(m: DataFrame, chunkSrc: DataFrame): DataFrame =
-    m.join(chunkSrc.select(col("chunk_hash"), col("bucket"), col("enc"), col("data").as("stored")), Seq("chunk_hash", "bucket"))
-      .withColumn("part", decoded(col("stored"), col("enc"), col("key")))
-      .groupBy(col("blob_hash"))
-      .agg(Codec.concatBinary(
-        transform(array_sort(collect_list(struct(col("part_idx"), col("part")))), p => p.getField("part"))
-      ).as("data"))
-
-  /** Join-based bulk get: `hashDf` must have a `blob_hash` column.
-    * Returns (blob_hash, data, verified). Missing and tombstoned hashes
-    * are absent from the result (the caller — e.g. [[Lake]] — decides
-    * NotFound).
+  /** Bulk get: `hashDf` must have a `blob_hash` column. Returns
+    * (blob_hash, data, verified) under the contract of
+    * [[getBlobsByHashes]]: every live wanted hash has exactly one row, a
+    * blob that cannot be read is `verified` false (with null `data` when
+    * no part can be read), tombstoned and absent hashes have no row, and
+    * corrupt data never raises.
     *
     * Bulk restores read the flat level-0 manifest rows directly (one
     * distributed join, no tree walk); the recursive tree is the
-    * point-lookup path ([[getBlobsByHashes]]).
+    * point-lookup path. Both end in the same [[assemble]].
     */
   def getBlobs(hashDf: DataFrame): DataFrame = {
     val g = current()
-    val want = hashDf.select(col("blob_hash")).distinct()
-    val cat = g.liveCatalog.join(want, Seq("blob_hash"))
-
-    val inline = cat
-      .filter(col("kind") === "inline")
-      .select(col("blob_hash"), col("inline_data").as("data"))
-
-    val m = g.manifest
+    val cat = g.liveCatalog.join(hashDf.select(col("blob_hash")).distinct(), Seq("blob_hash"))
+    val own = cat.select(col("blob_hash"), lit(0L).as("part_idx"), when(col("kind") === "inline", col("inline_data")).as("part"))
+    val parts = g.manifest
       .filter(col("level") === 0)
       .join(cat.select("blob_hash"), Seq("blob_hash"))
-      // replay-safe: a failed-then-retried put may have appended
-      // duplicate manifest rows (see class doc); rows are identical
-      .dropDuplicates("blob_hash", "part_idx")
-
-    inline
-      .unionByName(reassemble(m, g.chunks))
-      .withColumn("verified", sha2(col("data"), 256) === col("blob_hash"))
+      .join(intact(g.chunks).select(col("chunk_hash"), col("bucket"), col("enc"), col("data")), Seq("chunk_hash", "bucket"))
+      .select(col("blob_hash"), col("part_idx"), decoded(col("data"), col("enc"), col("key")).as("part"))
+    assemble(own.unionByName(parts), parallel = true)
   }
 
   /** Point lookups via the recursive manifest tree (reference LongHkey
@@ -471,9 +453,8 @@ final class ChunkStore private (
     * fetches bucket-scoped. Each entry also contributes a row of its
     * own (a null part for a chunked blob), so a blob none of whose
     * parts can be read still gets a row, unverified. Up to
-    * [[MaxPointRefs]] leaves the parts meet in one single-partition
-    * aggregate, so the frame runs as one job with no shuffle; a larger
-    * leaf set (a big blob) is aggregated in parallel.
+    * [[MaxPointRefs]] leaves the parts are assembled in one job with no
+    * shuffle; a larger leaf set (a big blob) is assembled in parallel.
     */
   private def readEntries(entries: Seq[CatalogEntry]): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -485,16 +466,33 @@ final class ChunkStore private (
     val parts =
       if (leaves.isEmpty) own
       else own.unionByName(fetch(dir, leaves).withColumnRenamed("idx", "part_idx"))
-    (if (leaves.size <= MaxPointRefs) parts.coalesce(1) else parts)
+    assemble(parts, parallel = leaves.size > MaxPointRefs).orderBy("blob_hash")
+  }
+
+  /** (blob_hash, part_idx, part) rows → (blob_hash, data, verified), the
+    * one verify-and-assemble step of every read. Each blob's parts are
+    * taken as a set, so a chunk or manifest row stored twice (a replayed
+    * append) is one part, and concatenated in order with a single
+    * allocation; null parts are dropped. `verified` is whether `data`
+    * hashes to the blob's address, false when no part could be read
+    * (null `data`). Unless `parallel`, the parts meet in one
+    * single-partition aggregate: one job with no shuffle.
+    */
+  private def assemble(parts: DataFrame, parallel: Boolean): DataFrame =
+    (if (parallel) parts else parts.coalesce(1))
       .groupBy(col("blob_hash"))
-      // a set: a chunk stored twice (a replayed append) is one part
       .agg(array_sort(collect_set(when(col("part").isNotNull, struct(col("part_idx"), col("part"))))).as("parts"))
       .select(
         col("blob_hash"),
         when(size(col("parts")) > 0, Codec.concatBinary(transform(col("parts"), p => p.getField("part")))).as("data"))
       .withColumn("verified", coalesce(sha2(col("data"), 256) === col("blob_hash"), lit(false)))
-      .orderBy("blob_hash")
-  }
+
+  /** The rows of a chunk table whose stored bytes still hash to their
+    * address. Every read takes its chunks through it before any decode,
+    * so a rotten chunk drops out and its blob fails verification,
+    * instead of decrypting garbage or failing the read.
+    */
+  private def intact(chunks: DataFrame): DataFrame = chunks.filter(sha2(col("data"), 256) === col("chunk_hash"))
 
   /** Leaf references of the chunked blobs among `entries`, walked from
     * their catalog roots on the driver: one bucket-scoped [[fetch]] job
@@ -554,13 +552,12 @@ final class ChunkStore private (
     * key in a literal map, so the read is one scan. A larger set (a big
     * blob's leaves or lower levels) is matched by a broadcast hash join
     * instead: a literal map is searched linearly, so thousands of
-    * entries make the per-row lookup itself the cost. A chunk whose
-    * stored bytes no longer hash to its address is dropped, so its blob
-    * fails verification instead of decrypting garbage.
+    * entries make the per-row lookup itself the cost. Chunks pass
+    * [[intact]] first.
     */
   private def fetch(dir: String, refs: Seq[PartRef]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val stored = chunksIn(dir, refs.map(_.bucket)).filter(sha2(col("data"), 256) === col("chunk_hash"))
+    val stored = intact(chunksIn(dir, refs.map(_.bucket)))
     val matched =
       if (refs.size <= MaxPointRefs) {
         val owners = typedLit(refs.groupBy(_.chunkHash).map { case (h, rs) => h -> rs.map(r => (r.blobHash, r.idx, r.key)) })
@@ -627,7 +624,7 @@ final class ChunkStore private (
     */
   private[lake] def readBlob(e: CatalogEntry): Array[Byte] = {
     val data =
-      if (e.kind == "inline") Some(e.inlineData).filter(d => sha256Hex(d) == e.blobHash)
+      if (e.kind == "inline") Option(e.inlineData).filter(d => sha256Hex(d) == e.blobHash)
       else readEntries(Seq(e)).collect().headOption.filter(_.getAs[Boolean]("verified")).map(_.getAs[Array[Byte]]("data"))
     data.getOrElse(throw new InvalidMagicException(s"hash mismatch for ${e.blobHash} in $path"))
   }

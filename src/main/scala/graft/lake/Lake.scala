@@ -91,8 +91,10 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     } finally staged.release()
   }
 
-  /** Bulk get across all stores; first (config-order) store holding a
-    * hash provides the payload.
+  /** Bulk get across all stores ([[ChunkStore.getBlobs]]): each hash
+    * comes from the first (config-order) store holding it live; a live
+    * copy that cannot be read comes back `verified = false`, as
+    * [[getBlob]] raises.
     */
   def get(hashDf: DataFrame): DataFrame =
     if (stores.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Lake.readSchema)

@@ -131,7 +131,7 @@ object LakeOps {
       |FROM per""".stripMargin
 
   /** §2.1 #4 — get_blob: reassemble every blob from its parts (ordered
-    * binary concat, exactly the ChunkStore.getBlobs expression) and
+    * binary concat, the kernel ChunkStore's read assembly uses) and
     * verify the content address survives the roundtrip. The oracle
     * computes the hash from the original text — a mismatch means
     * reassembly broke.

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.lake._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -631,6 +632,48 @@ class LakeSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Every read of `hashes` agrees that each is live and cannot be
+    * read: `lake.getBlob` and `store.getBlob` raise
+    * InvalidMagicException, and `Lake.get`, `getBlobs` and
+    * `getBlobsByHashes` return one row per hash, unverified, without
+    * raising. `store` is the first store of `lake` holding them live.
+    */
+  private def unreadable(lake: Lake, store: ChunkStore, hashes: Seq[String]): Unit = {
+    hashes.foreach { h =>
+      intercept[InvalidMagicException](lake.getBlob(h))
+      intercept[InvalidMagicException](store.getBlob(h))
+    }
+    bulkReads(lake, store, hashes).foreach { case (name, rows) =>
+      assert(rows.map(_.getString(0)).sorted.toSeq == hashes.sorted, s"$name: one row per hash")
+      assert(rows.forall(r => !r.isNullAt(2) && !r.getBoolean(2)), s"$name: a row reads verified")
+    }
+  }
+
+  /** Every read of `blobs` (hash → bytes) through `lake` and `store`
+    * returns each blob byte-identical, verified.
+    */
+  private def readable(lake: Lake, store: ChunkStore, blobs: Map[String, Array[Byte]]): Unit = {
+    blobs.foreach { case (h, b) =>
+      assert(java.util.Arrays.equals(lake.getBlob(h), b), s"Lake.getBlob($h)")
+      assert(java.util.Arrays.equals(store.getBlob(h), b), s"getBlob($h)")
+    }
+    bulkReads(lake, store, blobs.keys.toSeq).foreach { case (name, rows) =>
+      assert(rows.map(_.getString(0)).sorted.toSeq == blobs.keys.toSeq.sorted, s"$name: one row per hash")
+      rows.foreach { r =>
+        assert(r.getBoolean(2) && java.util.Arrays.equals(r.getAs[Array[Byte]](1), blobs(r.getString(0))), s"$name: ${r.getString(0)}")
+      }
+    }
+  }
+
+  /** The rows of `hashes` from the three bulk reads: [[Lake.get]] and
+    * `store`'s `getBlobs` and `getBlobsByHashes`.
+    */
+  private def bulkReads(lake: Lake, store: ChunkStore, hashes: Seq[String]): Seq[(String, Array[Row])] = {
+    val want = hashes.toDF("blob_hash")
+    Seq("Lake.get" -> lake.get(want), "getBlobs" -> store.getBlobs(want), "getBlobsByHashes" -> store.getBlobsByHashes(hashes))
+      .map { case (name, df) => name -> df.collect() }
+  }
+
   /** Rewrites a store's chunk table with one bit flipped in the payload
     * of `chunkHash` (the at-rest bit-rot fixture of the scrub tests).
     */
@@ -706,6 +749,27 @@ class LakeSpec extends AnyFunSuite {
     intercept[BlobNotFoundException](lake.getBlob(hMid))
 
     intercept[BlobNotFoundException](lake.getBlob(sha256hex("in no store".getBytes(StandardCharsets.UTF_8))))
+
+    // every chunk file of store 1 stored twice: each read returns the
+    // blob intact, its parts counted once
+    val s1 = lake.stores(1)
+    Files.list(Paths.get(p1, "chunks")).iterator().asScala.filter(_.getFileName.toString.startsWith("bucket=")).foreach { dir =>
+      Files.list(dir).iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+        .foreach(f => Files.copy(f, dir.resolve(s"copy-${f.getFileName}")))
+    }
+    assert(s1.fsck().collect().map(r => r.getString(0) -> r.getLong(1)).toMap.apply("duplicate_chunks") > 0)
+    readable(lake, s1, Map(hBig -> big.getBytes(StandardCharsets.UTF_8)))
+
+    // a live blob none of whose chunks is left in store 0, intact in
+    // store 1: store 0 answers, unreadable, and no read falls through to
+    // store 1 or reads as a miss
+    val (q0, q1) = (tmp(), tmp())
+    val two = Lake.init(spark, LakeConfig(Seq(StoreEntry(q0), StoreEntry(q1))))
+    two.stores.foreach(_.putBlobs(blobDf(1L -> big)))
+    two.stores(0).manifest.filter(col("blob_hash") === hBig).select("bucket").distinct().as[Int].collect()
+      .foreach(b => org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(q0, "chunks", s"bucket=$b").toFile))
+    unreadable(two, two.stores(0), Seq(hBig))
+    assert(java.util.Arrays.equals(two.stores(1).getBlob(hBig), big.getBytes(StandardCharsets.UTF_8)), "fixture: store 1's copy")
   }
 
   test("getBlob verifies on read: a flipped bit in a raw single chunk or a tree leaf raises") {
@@ -734,6 +798,15 @@ class LakeSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[String]("blob_hash")).toSeq == Seq(hRaw, hBig).sorted)
     assert(rows.forall(!_.getAs[Boolean]("verified")))
     assert(rows.find(_.getAs[String]("blob_hash") == hRaw).get.isNullAt(1), "no part of the raw blob is readable")
+    // the bulk reads agree, and the flipped GCM leaf does not abort them
+    assert(store.chunks.filter(col("chunk_hash") === leaf).select("enc").as[String].head() == "gcm")
+    unreadable(lake, store, Seq(hRaw, hBig))
+
+    // a catalog row of an inline blob whose payload is null
+    val hLost = sha("an inline blob whose payload is lost")
+    spark.createDataFrame(java.util.List.of(Row(hLost, 36L, "inline", null, null, null, null, null)), ChunkStore.catalogSchema)
+      .write.mode("append").parquet(s"$p/catalog")
+    unreadable(lake, store, Seq(hLost))
   }
 
   test("a blob of over 256 leaves reads through the parallel path; a corrupt leaf reads unverified") {
@@ -876,6 +949,101 @@ class LakeSpec extends AnyFunSuite {
     assert(out.count() == 0 && out.columns.toSeq == Seq("check", "violations", "store"))
   }
 
+  test("model-based: seeded put, delete, gc, compact and reopen sequences agree with a plain model") {
+    val takers = Seq(3L, 4L).flatMap(modelRun)
+    assert(takers.toSet == Set(0, 1), s"fixture: every batch went to the same store (${takers.mkString(",")})")
+  }
+
+  /** One seeded sequence of lake operations on two stores, the first
+    * capped at [[LakeSpec.ModelCap]] at-rest bytes, checked against a
+    * [[LakeSpec.LakeModel]] after every step. Puts mix the size ladder,
+    * exact duplicates (within a batch, of a live blob, of a deleted one)
+    * and blobs sharing leading chunks with an earlier one. Returns the
+    * store that took each put.
+    */
+  private def modelRun(seed: Long): Seq[Int] = {
+    val rnd = new scala.util.Random(seed)
+    val chunkMax = LakeParams().chunkMax.toInt
+    val cfg = LakeConfig(Seq(StoreEntry(tmp(), maxBytes = ModelCap), StoreEntry(tmp())))
+    var lake = Lake.init(spark, cfg)
+    val model = new LakeModel(lake.stores.size)
+    val never = Seq(sha(s"never put, seed $seed"), sha(s"never put either, seed $seed"))
+    val takers = Seq.newBuilder[Int]
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    def fresh(len: Int): Array[Byte] =
+      if (rnd.nextBoolean()) Array.fill(len)(rnd.nextInt(256).toByte) // incompressible: raw chunks
+      else (s"seed $seed text ${rnd.nextInt()} " * (len / 8 + 1)).getBytes(StandardCharsets.UTF_8).take(len)
+    def blob(): Array[Byte] = {
+      val chunked = model.bytes.values.filter(_.length > chunkMax).toSeq
+      rnd.nextInt(5) match {
+        case 0 if model.bytes.nonEmpty => pick(model.bytes.values.toSeq)
+        case 1 if chunked.nonEmpty =>
+          val b = pick(chunked)
+          b.take(chunkMax * (1 + rnd.nextInt(b.length / chunkMax))) ++ fresh(1 + rnd.nextInt(300))
+        case _ => fresh(pick(Seq(rnd.nextInt(65), 65 + rnd.nextInt(192), 257 + rnd.nextInt(1200))))
+      }
+    }
+    def put(): String = {
+      val batch = Seq.fill(1 + rnd.nextInt(3))(blob())
+      val blobs = if (rnd.nextInt(3) == 0) batch :+ batch.head else batch
+      lake.put(blobs.toDF("data")): Unit
+      // the store that took the batch holds all of it live, and store 0
+      // holding all of it live means that it took it
+      val live0 = lake.stores(0).liveCatalog.select("blob_hash").as[String].collect().toSet
+      val byHash = blobs.map(b => sha256hex(b) -> b)
+      val taker = if (byHash.forall(b => live0(b._1))) 0 else 1
+      takers += taker
+      model.put(byHash, taker)
+      assert(lake.stores(0).currentBytes <= ModelCap, "store 0 holds more than its cap")
+      s"put of ${blobs.map(_.length).mkString(", ")} bytes into store $taker"
+    }
+    ("put" +: rnd.shuffle(Seq("put", "put", "put", "delete", "delete", "gc", "compact", "reopen"))).zipWithIndex.foreach {
+      case (kind, i) =>
+        val step = s"seed $seed, step $i: " + (kind match {
+          case "put" => put()
+          case "delete" =>
+            val hs = Seq.fill(1 + rnd.nextInt(2))(pick(model.bytes.keys.toSeq)).distinct :+ never.head
+            assert(lake.delete(hs) == model.delete(hs), s"seed $seed, step $i: tombstones written")
+            s"delete of ${hs.size}"
+          case "gc" =>
+            lake.gc().collect()
+            lake.stores.foreach(s => assert(s.fsck().filter(col("violations") > 0).count() == 0, s"seed $seed, step $i: fsck after gc"))
+            "gc"
+          case "compact" =>
+            val reclaim = rnd.nextBoolean()
+            lake.compact(reclaim).collect()
+            s"compact(reclaim = $reclaim)"
+          case "reopen" =>
+            lake = Lake.init(spark, cfg)
+            "reopen"
+        })
+        agrees(lake, model, never, step)
+    }
+    takers.result()
+  }
+
+  /** `lake` agrees with `model` on every hash it was ever given and on
+    * `never`: `Lake.get` returns a live one once, verified and
+    * byte-identical, and no row otherwise; `Lake.getBlob` returns its
+    * bytes or raises BlobNotFoundException; each store's live set is
+    * the model's.
+    */
+  private def agrees(lake: Lake, model: LakeModel, never: Seq[String], step: String): Unit = {
+    val hashes = model.bytes.keys.toSeq ++ never
+    val rows = lake.get(hashes.toDF("blob_hash")).collect()
+    assert(rows.map(_.getString(0)).distinct.length == rows.length, s"$step: Lake.get returned a hash twice")
+    val bulk = rows.map(r => r.getString(0) -> (Option(r.getAs[Array[Byte]](1)).map(_.toSeq), r.getAs[Any](2))).toMap
+    hashes.foreach { h =>
+      val want = model.read(h).map(_.toSeq)
+      assert(bulk.get(h) == want.map(b => (Some(b), true)), s"$step: Lake.get of $h")
+      val point = try Some(lake.getBlob(h).toSeq) catch { case _: BlobNotFoundException => None }
+      assert(point == want, s"$step: Lake.getBlob of $h")
+    }
+    lake.stores.zip(model.live).foreach { case (s, live) =>
+      assert(s.liveCatalog.select("blob_hash").as[String].collect().toSet == live, s"$step: live set of ${s.path}")
+    }
+  }
+
   test("Lake.get on a lake without stores returns an empty frame") {
     val out = Lake.init(spark, LakeConfig(Nil)).get(Seq(sha256hex(mid.getBytes(StandardCharsets.UTF_8))).toDF("blob_hash"))
     assert(out.count() == 0 && out.columns.toSeq == Seq("blob_hash", "data", "verified"))
@@ -890,4 +1058,31 @@ object LakeSpec {
     * store its count and three appends.
     */
   val PutJobCeiling = 22
+
+  /** The at-rest bytes the first store of the model-based test holds at
+    * most: about two batches, so later ones spill.
+    */
+  val ModelCap = 2500L
+
+  /** The lake semantics the model-based test checks, in plain Scala:
+    * the bytes of every blob ever put, by address, and the blobs each
+    * store holds live. A put lands whole in one store; a delete
+    * tombstones a blob in every store; gc, compact and a reopen change
+    * nothing a reader sees.
+    */
+  final class LakeModel(nStores: Int) {
+    val bytes = scala.collection.mutable.Map.empty[String, Array[Byte]]
+    val live: IndexedSeq[scala.collection.mutable.Set[String]] = IndexedSeq.fill(nStores)(scala.collection.mutable.Set.empty)
+
+    /** `blobs` as (address, bytes), taken whole by `store`. */
+    def put(blobs: Seq[(String, Array[Byte])], store: Int): Unit =
+      blobs.foreach { case (h, b) => bytes(h) = b; live(store) += h }
+
+    /** The number of (store, blob) tombstones the delete writes. */
+    def delete(hashes: Seq[String]): Long =
+      live.map { l => val n = hashes.distinct.count(l); l --= hashes; n.toLong }.sum
+
+    /** What a read of `h` returns: its bytes while some store holds it live. */
+    def read(h: String): Option[Array[Byte]] = bytes.get(h).filter(_ => live.exists(_(h)))
+  }
 }
