@@ -199,6 +199,14 @@ final class ChunkStore private (
   def catalog: DataFrame = current().catalog
   def tombstones: DataFrame = current().tombstones
 
+  /** [[chunks]], [[manifest]] and [[catalog]] by name, over one
+    * generation: the tables [[LakeCatalog.register]] shows.
+    */
+  private[lake] def views: Seq[(String, DataFrame)] = {
+    val g = current()
+    Seq("chunks" -> g.chunks, "manifest" -> g.manifest, "catalog" -> g.catalog)
+  }
+
   /** catalog minus tombstoned blobs — what readers see. Deletes are
     * two-phase (content-addressed chunks are shared, so nothing can be
     * dropped eagerly): [[deleteBlobs]] tombstones, [[gc]] reclaims.
@@ -604,8 +612,10 @@ final class ChunkStore private (
     * rows (`dead` false) and tombstones (`dead` true) for `hashes`, as
     * [[ChunkStore.liveEntries]] reads them, each tagged with the
     * generation it was read from, so the chunks are read from the same
-    * one ([[readBlob]]). [[Lake.getBlob]] unions every store's probe
-    * into one job.
+    * one ([[readBlob]]) and a delete tombstones in the same one
+    * ([[deleteBlobs]]). Reads and deletes share it: [[Lake.getBlob]]
+    * unions every store's probe into one job, a store's point reads
+    * and [[deleteBlobs]] run it alone.
     */
   private[lake] def probe(hashes: Seq[String]): DataFrame = {
     val g = current()
@@ -640,32 +650,27 @@ final class ChunkStore private (
   def containsBlob(hash: String): Boolean = lookup(Seq(hash)).contains(hash)
 
   /** Tombstone blobs for deletion (no data is reclaimed yet — chunks
-    * are shared across blobs by content addressing). The next [[gc]]
-    * (or `compact(reclaim = true)`) drops their rows from the current
-    * generation, but their payloads stay on disk in the generation it
-    * replaced, which readers may still be reading, until the rewrite
-    * after that one deletes it. Unknown and already-deleted hashes are
-    * ignored. Returns the number of newly tombstoned blobs.
+    * are shared across blobs by content addressing). Under the write
+    * lock, the point read's catalog probe ([[probe]]) finds which of
+    * `hashes` are live in the current generation, and one file appended
+    * to that generation's tombstones names them: one probe job and one
+    * append. Unknown, repeated and already-deleted hashes are ignored.
+    * The next [[gc]] (or `compact(reclaim = true)`) drops their rows
+    * from the current generation, but their payloads stay on disk in
+    * the generation it replaced, which readers may still be reading,
+    * until the rewrite after that one deletes it. Returns the number of
+    * newly tombstoned blobs.
     */
-  def deleteBlobsDf(hashDf: DataFrame): Long = {
+  def deleteBlobs(hashes: Seq[String]): Long = {
     if (readonly) throw new StoreReadOnlyException(path)
     withWriteLock {
-      val g = current()
-      val fresh = hashDf.select(col("blob_hash")).distinct()
-        .join(g.catalog.select("blob_hash"), Seq("blob_hash"), "left_semi")
-        .join(g.tombstones, Seq("blob_hash"), "left_anti")
-        .cache()
-      try {
-        val n = fresh.count()
-        if (n > 0) fresh.write.mode(SaveMode.Append).parquet(s"${g.dir}/tombstones")
-        n
-      } finally fresh.unpersist()
+      val live = lookup(hashes)
+      live.values.headOption.foreach { e =>
+        rowsOf(tombstoneSchema, live.keys.toSeq.sorted.map(Row(_)): _*)
+          .coalesce(1).write.mode(SaveMode.Append).parquet(s"${genDir(e.gen)}/tombstones")
+      }
+      live.size.toLong
     }
-  }
-
-  def deleteBlobs(hashes: Seq[String]): Long = {
-    import spark.implicits._
-    deleteBlobsDf(hashes.toDF("blob_hash"))
   }
 
   /** The one rewrite behind [[gc]] and [[compact]], under the write
@@ -764,7 +769,6 @@ final class ChunkStore private (
     * readonly store.
     */
   def maintenanceReport(maxFilesPerBucketMilli: Long = 2000L, maxDeadPpm: Long = 300000L): DataFrame = {
-    import spark.implicits._
     val g = current()
     val nFiles = countDataFiles(s"${g.dir}/chunks")
     val nBucketsUsed = g.bucketDirs.size.toLong
@@ -788,9 +792,7 @@ final class ChunkStore private (
       else if (frag) "compact"
       else if (dead) "reclaim"
       else "none"
-    Seq((nFiles, nBucketsUsed, filesPerBucketMilli, nChunks, nDead, deadPpm, recommend))
-      .toDF("n_chunk_files", "n_buckets_used", "files_per_bucket_milli",
-        "n_chunks", "n_dead_chunks", "dead_ppm", "recommend")
+    rowsOf(maintenanceSchema, Row(nFiles, nBucketsUsed, filesPerBucketMilli, nChunks, nDead, deadPpm, recommend))
   }
 
   /** Small-file compaction. Every put appends its own parquet files, so
@@ -1021,8 +1023,9 @@ object ChunkStore {
     StructField("blob_hash", StringType),
   ))
 
-  /** Result schemas of [[ChunkStore.gc]], [[ChunkStore.compact]] and
-    * [[ChunkStore.scrub]]; [[Lake]]'s per-store forms add `store`.
+  /** Result schemas of [[ChunkStore.gc]], [[ChunkStore.compact]],
+    * [[ChunkStore.scrub]] and [[ChunkStore.maintenanceReport]];
+    * [[Lake]]'s per-store forms add `store`.
     */
   val gcSchema: StructType = StructType(
     Seq("blobs_deleted", "chunks_reclaimed", "bytes_reclaimed", "chunks_live", "bytes_live").map(StructField(_, LongType, nullable = false)))
@@ -1035,6 +1038,9 @@ object ChunkStore {
     StructField("check", StringType),
     StructField("violations", LongType, nullable = false),
   ))
+  val maintenanceSchema: StructType = StructType(
+    Seq("n_chunk_files", "n_buckets_used", "files_per_bucket_milli", "n_chunks", "n_dead_chunks", "dead_ppm")
+      .map(StructField(_, LongType, nullable = false)) :+ StructField("recommend", StringType))
 
   /** Size ladder (store/mod.rs:430-457). */
   def kindOf(len: Column, p: LakeParams): Column =

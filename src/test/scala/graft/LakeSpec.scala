@@ -863,6 +863,37 @@ class LakeSpec extends AnyFunSuite {
     assert(lake.stores.head.fsck().filter(col("violations") > 0).count() == 0)
   }
 
+  test("Lake.delete: one probe and one tombstone file per writable store, seen at once through another handle") {
+    val (p0, p1) = (tmp(), tmp())
+    val cfg = LakeConfig(Seq(StoreEntry(p0), StoreEntry(p1)))
+    val lake = Lake.init(spark, cfg)
+    val (s0, s1) = (lake.stores(0), lake.stores(1))
+    lake.stores.foreach(_.putBlobs(blobDf(1L -> big)))
+    s1.putBlobs(blobDf(2L -> mid))
+    s0.putBlobs(blobDf(3L -> tiny))
+    val hashes = Seq(big, mid, tiny, "in no store").map(sha)
+    val Seq(hBig, hMid, hTiny, _) = hashes
+    assert(s0.deleteBlobs(Seq(hTiny)) == 1)
+    val reader = Lake.init(spark, cfg)
+    assert(new String(reader.getBlob(hBig), StandardCharsets.UTF_8) == big && new String(reader.getBlob(hMid), StandardCharsets.UTF_8) == mid)
+    def files(p: String) = Option(Paths.get(p, "tombstones").toFile.listFiles).fold(0)(_.count(_.getName.endsWith(".parquet")))
+    val before = Seq(p0, p1).map(files)
+
+    // live in both, live in store 1 only, tombstoned in store 0, unknown;
+    // each twice
+    var n = 0L
+    val jobs = jobLog("delete-budget") { n = lake.delete(hashes ++ hashes) }
+    assert(n == 3, "store 0 tombstones the blob live in both, store 1 that one and its own")
+    assert(rowsOf(s0.tombstones) == Seq(hBig, hTiny).sorted, "store 0 gained one tombstone")
+    assert(rowsOf(s1.tombstones) == Seq(hBig, hMid).sorted, "store 1 gained two tombstones")
+    assert(Seq(p0, p1).map(files) == before.map(_ + 1), "one new tombstone file per store")
+    assert(jobs.size <= 2 * lake.writable.size, s"a delete ran ${jobs.size} jobs: ${jobs.map(_._2).mkString("; ")}")
+
+    hashes.foreach(h => intercept[BlobNotFoundException](reader.getBlob(h)))
+    assert(reader.get(hashes.toDF("blob_hash")).count() == 0, "Lake.get through another handle")
+    assert(lake.stores.map(_.deleteBlobs(hashes)) == Seq(0L, 0L), "a second delete tombstones nothing")
+  }
+
   test("load takes the bucket count from the store's marker") {
     val p = tmp()
     ChunkStore.init(spark, p, params = LakeParams.primeBuckets(100)).putBlobs(blobDf(1L -> big))
@@ -949,6 +980,26 @@ class LakeSpec extends AnyFunSuite {
     assert(out.count() == 0 && out.columns.toSeq == Seq("check", "violations", "store"))
   }
 
+  test("Lake.maintenanceReport on a lake without stores returns an empty frame") {
+    val out = Lake.init(spark, LakeConfig(Nil)).maintenanceReport()
+    assert(out.count() == 0 && out.columns.toSeq == Seq("n_chunk_files", "n_buckets_used", "files_per_bucket_milli", "n_chunks",
+      "n_dead_chunks", "dead_ppm", "recommend", "store", "readonly"))
+  }
+
+  test("LakeCatalog.register on a lake without stores shows empty views and drops the earlier ones") {
+    val two = Lake.init(spark, LakeConfig(Seq(StoreEntry(tmp()), StoreEntry(tmp()))))
+    two.put(blobDf(1L -> big))
+    LakeCatalog.register(two, "emptyspec")
+    assert(LakeCatalog.lakeTables(spark, "emptyspec").contains("emptyspec_s1_catalog"))
+    LakeCatalog.register(Lake.init(spark, LakeConfig(Nil)), "emptyspec")
+    assert(LakeCatalog.lakeTables(spark, "emptyspec") == Seq("emptyspec_catalog", "emptyspec_chunks", "emptyspec_manifest"))
+    for ((t, schema) <- Seq("chunks" -> ChunkStore.chunkSchema, "manifest" -> ChunkStore.manifestSchema,
+        "catalog" -> ChunkStore.catalogSchema)) {
+      val v = spark.table(s"emptyspec_$t")
+      assert(v.count() == 0 && v.columns.toSeq == schema.fieldNames.toSeq :+ "store_priority", t)
+    }
+  }
+
   test("model-based: seeded put, delete, gc, compact and reopen sequences agree with a plain model") {
     val takers = Seq(3L, 4L).flatMap(modelRun)
     assert(takers.toSet == Set(0, 1), s"fixture: every batch went to the same store (${takers.mkString(",")})")
@@ -958,8 +1009,11 @@ class LakeSpec extends AnyFunSuite {
     * capped at [[LakeSpec.ModelCap]] at-rest bytes, checked against a
     * [[LakeSpec.LakeModel]] after every step. Puts mix the size ladder,
     * exact duplicates (within a batch, of a live blob, of a deleted one)
-    * and blobs sharing leading chunks with an earlier one. Returns the
-    * store that took each put.
+    * and blobs sharing leading chunks with an earlier one. Two steps go
+    * through a second handle: a delete through a lake that opens store 0
+    * readonly, and a put into a lake whose only writable store is store
+    * 0 capped at what it holds, which must be refused and change
+    * nothing. Returns the store that took each put.
     */
   private def modelRun(seed: Long): Seq[Int] = {
     val rnd = new scala.util.Random(seed)
@@ -969,10 +1023,13 @@ class LakeSpec extends AnyFunSuite {
     val model = new LakeModel(lake.stores.size)
     val never = Seq(sha(s"never put, seed $seed"), sha(s"never put either, seed $seed"))
     val takers = Seq.newBuilder[Int]
-    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
-    def fresh(len: Int): Array[Byte] =
-      if (rnd.nextBoolean()) Array.fill(len)(rnd.nextInt(256).toByte) // incompressible: raw chunks
-      else (s"seed $seed text ${rnd.nextInt()} " * (len / 8 + 1)).getBytes(StandardCharsets.UTF_8).take(len)
+    // the two second-handle steps draw from their own stream, so the
+    // other steps run the same sequence with or without them
+    val side = new scala.util.Random(~seed)
+    def pick[T](xs: Seq[T], r: scala.util.Random = rnd): T = xs(r.nextInt(xs.size))
+    def fresh(len: Int, r: scala.util.Random = rnd): Array[Byte] =
+      if (r.nextBoolean()) Array.fill(len)(r.nextInt(256).toByte) // incompressible: raw chunks
+      else (s"seed $seed text ${r.nextInt()} " * (len / 8 + 1)).getBytes(StandardCharsets.UTF_8).take(len)
     def blob(): Array[Byte] = {
       val chunked = model.bytes.values.filter(_.length > chunkMax).toSeq
       rnd.nextInt(5) match {
@@ -997,7 +1054,9 @@ class LakeSpec extends AnyFunSuite {
       assert(lake.stores(0).currentBytes <= ModelCap, "store 0 holds more than its cap")
       s"put of ${blobs.map(_.length).mkString(", ")} bytes into store $taker"
     }
-    ("put" +: rnd.shuffle(Seq("put", "put", "put", "delete", "delete", "gc", "compact", "reopen"))).zipWithIndex.foreach {
+    val steps = "put" +: rnd.shuffle(Seq("put", "put", "put", "delete", "delete", "gc", "compact", "reopen"))
+    val withSide = Seq("readonly delete", "refused put").foldLeft(steps)((ss, k) => ss.patch(1 + side.nextInt(ss.size), Seq(k), 0))
+    withSide.zipWithIndex.foreach {
       case (kind, i) =>
         val step = s"seed $seed, step $i: " + (kind match {
           case "put" => put()
@@ -1005,6 +1064,22 @@ class LakeSpec extends AnyFunSuite {
             val hs = Seq.fill(1 + rnd.nextInt(2))(pick(model.bytes.keys.toSeq)).distinct :+ never.head
             assert(lake.delete(hs) == model.delete(hs), s"seed $seed, step $i: tombstones written")
             s"delete of ${hs.size}"
+          case "readonly delete" =>
+            // as the benchmark deletes: through a lake that opens store 0
+            // readonly, so only store 1 tombstones
+            val ro = Lake.init(spark, LakeConfig(cfg.stores.head.copy(readonly = true) +: cfg.stores.tail))
+            val hs = (Seq.fill(1 + side.nextInt(2))(pick(model.bytes.keys.toSeq, side)) ++ model.live(1).toSeq.sorted.take(1)).distinct
+            assert(ro.delete(hs :+ never.head) == model.delete(hs, stores = Seq(1)), s"seed $seed, step $i: tombstones written")
+            s"delete of ${hs.size} through store 1 alone"
+          case "refused put" =>
+            // the only writable store is capped at what it holds
+            val full = Lake.init(spark, LakeConfig(Seq(cfg.stores.head.copy(maxBytes = lake.stores(0).currentBytes),
+              cfg.stores(1).copy(readonly = true))))
+            val b = fresh(1 + side.nextInt(300), side)
+            val e = intercept[LakeOutOfStoresException](full.put(Seq(b).toDF("data")))
+            assert(e.getCause.isInstanceOf[StoreOutOfSpaceException], s"seed $seed, step $i: refused with ${e.getCause}")
+            intercept[BlobNotFoundException](lake.getBlob(sha256hex(b)))
+            s"refused put of ${b.length} bytes"
           case "gc" =>
             lake.gc().collect()
             lake.stores.foreach(s => assert(s.fsck().filter(col("violations") > 0).count() == 0, s"seed $seed, step $i: fsck after gc"))
@@ -1067,8 +1142,8 @@ object LakeSpec {
   /** The lake semantics the model-based test checks, in plain Scala:
     * the bytes of every blob ever put, by address, and the blobs each
     * store holds live. A put lands whole in one store; a delete
-    * tombstones a blob in every store; gc, compact and a reopen change
-    * nothing a reader sees.
+    * tombstones a blob in every writable store; gc, compact, a reopen
+    * and a refused put change nothing a reader sees.
     */
   final class LakeModel(nStores: Int) {
     val bytes = scala.collection.mutable.Map.empty[String, Array[Byte]]
@@ -1078,9 +1153,11 @@ object LakeSpec {
     def put(blobs: Seq[(String, Array[Byte])], store: Int): Unit =
       blobs.foreach { case (h, b) => bytes(h) = b; live(store) += h }
 
-    /** The number of (store, blob) tombstones the delete writes. */
-    def delete(hashes: Seq[String]): Long =
-      live.map { l => val n = hashes.distinct.count(l); l --= hashes; n.toLong }.sum
+    /** The number of (store, blob) tombstones a delete through
+      * `stores` writes.
+      */
+    def delete(hashes: Seq[String], stores: Seq[Int] = live.indices): Long =
+      stores.map { i => val n = hashes.distinct.count(live(i)); live(i) --= hashes; n.toLong }.sum
 
     /** What a read of `h` returns: its bytes while some store holds it live. */
     def read(h: String): Option[Array[Byte]] = bytes.get(h).filter(_ => live.exists(_(h)))
