@@ -89,7 +89,8 @@ object LakeParams {
   * The four tables form a generation. Generation 0 lives at the store
   * root. Puts and deletes append to the current generation; [[gc]] and
   * [[compact]] never rewrite one in place, they write the next one,
-  * `gen-<n>/` with the same four tables, and publish it
+  * `gen-<n>/` with the same four tables in the compacted layout (gc
+  * keeps only what is live, compact everything), and publish it
   * with one directory rename (the snapshot commit of a table format
   * such as Delta or Iceberg, without the dependency). Every operation
   * resolves the current generation once, from one listing of the root,
@@ -105,6 +106,10 @@ object LakeParams {
   * this store's work under its write lock: dedup against its catalog
   * and chunks, the capacity gate, the appends. [[replicateTo]] feeds
   * the same commit.
+  *
+  * A point read or a delete first resolves its hashes to live catalog
+  * rows with one probe job ([[ChunkStore.resolve]], the same one
+  * [[Lake.getBlob]] runs over every store of a lake).
   *
   * Write order is chunks → manifest → catalog: a blob becomes visible
   * only once fully written, so a failed-and-retried put (the normal
@@ -214,51 +219,44 @@ final class ChunkStore private (
   def liveCatalog: DataFrame = current().liveCatalog
 
   /** Bytes currently stored (at-rest chunk payloads + inline payloads). */
-  def currentBytes: Long = {
+  def currentBytes: Long = totals._1
+
+  /** What the current generation holds, as (bytes, blobs, chunks), in
+    * one aggregate: [[currentBytes]], the raw catalog's rows (tombstoned
+    * blobs included) and the chunk table's rows.
+    */
+  private[lake] def totals: (Long, Long, Long) = {
     val g = current()
-    tally(holdings(g.chunks, g.catalog, added = false))._1
+    tally(holdings(g.chunks, g.catalog, added = true))
   }
 
-  /** (bytes, blobs) rows: the at-rest size of each of `chunkRows`, the
-    * inline payload of each of `catalogRows`, and, when `added`, one
-    * blob per catalog row.
+  /** (bytes, blobs, chunks) rows: the at-rest size of each of
+    * `chunkRows` and one chunk per row, the inline payload of each of
+    * `catalogRows` and, when `added`, one blob per catalog row.
     */
   private def holdings(chunkRows: DataFrame, catalogRows: DataFrame, added: Boolean): DataFrame =
-    chunkRows.select(col("size").as("bytes"), lit(0L).as("blobs")).unionByName(catalogRows.select(
+    chunkRows.select(col("size").as("bytes"), lit(0L).as("blobs"), lit(1L).as("chunks")).unionByName(catalogRows.select(
       when(col("kind") === "inline", octet_length(col("inline_data"))).otherwise(lit(0)).cast(LongType).as("bytes"),
-      lit(if (added) 1L else 0L).as("blobs")))
+      lit(if (added) 1L else 0L).as("blobs"), lit(0L).as("chunks")))
 
-  /** Total bytes and blobs of `holdings` frames, in one job. */
-  private def tally(holdings: DataFrame*): (Long, Long) = {
-    val r = holdings.reduce(_ unionByName _).agg(coalesce(sum(col("bytes")), lit(0L)), coalesce(sum(col("blobs")), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** Collect-free put for large batches: the same stage and commit as
-    * [[putBlobs]], but the per-blob summary stays distributed (at
-    * 100 TB the driver must never hold one row per blob).
-    */
-  def putBlobsDf(blobs: DataFrame): DataFrame = {
-    put(blobs)(_ => ())
-    catalog.join(
-      blobs.select(sha2(col("data"), 256).as("blob_hash")).distinct(),
-      Seq("blob_hash"),
-      "left_semi",
-    ).select(col("blob_hash"), col("total_len"), col("kind"))
+  /** Total bytes, blobs and chunks of `holdings` frames, in one aggregate. */
+  private def tally(holdings: DataFrame*): (Long, Long, Long) = {
+    val Seq(bytes, blobs, chunks) = Seq("bytes", "blobs", "chunks").map(c => coalesce(sum(col(c)), lit(0L)))
+    val r = holdings.reduce(_ unionByName _).agg(bytes, blobs, chunks).head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   /** Stores every blob in `blobs` (column `data`: binary): one
-    * [[ChunkStore.stage]] of the batch, then one [[commit]] here.
-    * Content-addressed: already-present blobs and chunks are skipped
-    * (idempotent put, store/mod.rs:330-344), and a blob deleted here
-    * and put again before [[gc]] is live again.
+    * [[ChunkStore.stage]] of the batch, then one [[commit]] here, then
+    * the summary of the blobs asked for. Content-addressed:
+    * already-present blobs and chunks are skipped (idempotent put,
+    * store/mod.rs:330-344), and a blob deleted here and put again
+    * before [[gc]] is live again.
     */
-  def putBlobs(blobs: DataFrame): PutResult = put(blobs)(_.summary)
-
-  private def put[T](blobs: DataFrame)(result: Staged => T): T = {
+  def putBlobs(blobs: DataFrame): PutResult = {
     if (readonly) throw new StoreReadOnlyException(path)
     val staged = stage(blobs, Seq(this))
-    try { commit(staged); result(staged) }
+    try { commit(staged); staged.summary }
     finally staged.release()
   }
 
@@ -298,7 +296,7 @@ final class ChunkStore private (
         val n =
           if (maxBytes == Long.MaxValue) { rows.cache(); newCat.coalesce(1).count() }
           else {
-            val (bytes, blobs) = tally(holdings(g.chunks, g.catalog, added = false), holdings(newChunks, newCat, added = true))
+            val (bytes, blobs, _) = tally(holdings(g.chunks, g.catalog, added = false), holdings(newChunks, newCat, added = true))
             if (blobs > 0 && bytes > maxBytes) throw new StoreOutOfSpaceException(path)
             rows.cache()
             blobs
@@ -450,9 +448,11 @@ final class ChunkStore private (
   def getBlobsByHashes(hashes: Seq[String]): DataFrame =
     readEntries(lookup(hashes).values.toSeq)
 
-  /** This store's live catalog rows for `hashes`: the probe alone. */
+  /** This store's live catalog rows for `hashes`: [[ChunkStore.resolve]]
+    * over this store alone, one probe job (none for no hashes).
+    */
   private def lookup(hashes: Seq[String]): Map[String, CatalogEntry] =
-    if (hashes.isEmpty) Map.empty else liveEntries(probe(hashes).collect().toSeq)
+    resolve(Seq(this), hashes).map { case (h, (_, e)) => h -> e }
 
   /** (blob_hash, data, verified) for live catalog rows of one probe,
     * ordered by blob_hash, read from the generation it probed. Inline
@@ -610,21 +610,19 @@ final class ChunkStore private (
 
   /** This store's side of a point read's catalog probe: its catalog
     * rows (`dead` false) and tombstones (`dead` true) for `hashes`, as
-    * [[ChunkStore.liveEntries]] reads them, each tagged with the
-    * generation it was read from, so the chunks are read from the same
-    * one ([[readBlob]]) and a delete tombstones in the same one
-    * ([[deleteBlobs]]). Reads and deletes share it: [[Lake.getBlob]]
-    * unions every store's probe into one job, a store's point reads
-    * and [[deleteBlobs]] run it alone.
+    * [[ChunkStore.resolve]] reads them, each tagged with `store`, this
+    * store's index there, and with the generation it was read from, so
+    * the chunks are read from the same one ([[readBlob]]) and a delete
+    * tombstones in the same one ([[deleteBlobs]]).
     */
-  private[lake] def probe(hashes: Seq[String]): DataFrame = {
+  private def probe(hashes: Seq[String], store: Int): DataFrame = {
     val g = current()
     val wanted = col("blob_hash").isin(hashes.distinct: _*)
     g.catalog.filter(wanted)
       .select(lit(false).as("dead"), col("blob_hash"), col("kind"), col("inline_data"),
         col("root_hash"), col("root_key"), col("root_bucket"), col("tree_depth"))
       .unionByName(g.tombstones.filter(wanted).select(lit(true).as("dead"), col("blob_hash")), allowMissingColumns = true)
-      .withColumn("gen", lit(g.n))
+      .withColumns(Map("gen" -> lit(g.n), "store" -> lit(store)))
   }
 
   /** One blob's bytes from its live catalog row, verified on read. An
@@ -655,11 +653,10 @@ final class ChunkStore private (
     * `hashes` are live in the current generation, and one file appended
     * to that generation's tombstones names them: one probe job and one
     * append. Unknown, repeated and already-deleted hashes are ignored.
-    * The next [[gc]] (or `compact(reclaim = true)`) drops their rows
-    * from the current generation, but their payloads stay on disk in
-    * the generation it replaced, which readers may still be reading,
-    * until the rewrite after that one deletes it. Returns the number of
-    * newly tombstoned blobs.
+    * The next [[gc]] drops their rows from the current generation, but
+    * their payloads stay on disk in the generation it replaced, which
+    * readers may still be reading, until the rewrite after that one
+    * deletes it. Returns the number of newly tombstoned blobs.
     */
   def deleteBlobs(hashes: Seq[String]): Long = {
     if (readonly) throw new StoreReadOnlyException(path)
@@ -673,9 +670,9 @@ final class ChunkStore private (
     }
   }
 
-  /** The one rewrite behind [[gc]] and [[compact]], under the write
-    * lock. From the current generation n it writes generation n+1 into
-    * a temp dir: chunks repartitioned by `bucket` (one file per bucket
+  /** The one rewrite behind [[gc]] (`reclaim`) and [[compact]], under
+    * the write lock. From the current generation n it writes generation
+    * n+1 into a temp dir: chunks repartitioned by `bucket` (one file per bucket
     * per task, so a pruned point read opens about one file per probed
     * bucket), manifest, catalog and, unless `reclaim`, tombstones, each
     * repartitioned by `blob_hash`. With `reclaim` it writes only what
@@ -712,8 +709,11 @@ final class ChunkStore private (
     * distributed cascade, catalog → manifest rows → referenced chunk
     * hashes — and clears the tombstones. It also drops replayed
     * duplicate manifest rows and orphan chunks from failed puts (the
-    * same classes [[fsck]] reports). Readers are never blocked and
-    * never see a partial store (see the class doc). Returns a one-row
+    * same classes [[fsck]] reports). What it keeps it writes in the
+    * layout [[compact]] writes, so one gc serves both layout and
+    * reclamation (`recommend` "reclaim" and "compact_reclaim" in
+    * [[maintenanceReport]]) for the price of one rewrite. Readers are
+    * never blocked and never see a partial store (see the class doc). Returns a one-row
     * stats frame. Its reclaimed counts are logical, the current
     * generation's before and after: the replaced generation, garbage
     * and deleted payloads included, stays on disk until the next
@@ -746,7 +746,7 @@ final class ChunkStore private (
   }
 
   /** Maintenance planner — the WHEN for [[compact]]/[[gc]], completing
-    * the plan → execute → verify loop ([[compact]] executes,
+    * the plan → execute → verify loop ([[gc]], [[compact]] execute,
     * [[fsck]]/[[scrub]] verify). One row of integer health metrics:
     *  - fragmentation: chunk file count, buckets used, files per used
     *    bucket (milli — every put batch appends ~one file per touched
@@ -754,12 +754,14 @@ final class ChunkStore private (
     *    the number of opens a pruned point read pays per probed
     *    bucket),
     *  - liveness: chunks whose every referencing blob is tombstoned
-    *    (what [[gc]] or compact(reclaim=true) would reclaim), as a
-    *    count and ppm,
+    *    (what [[gc]] would reclaim), as a count and ppm,
     *  - `recommend` — "compact_reclaim" when both thresholds trip,
     *    "compact" for fragmentation only, "reclaim" for dead mass
-    *    only, "none" otherwise. Thresholds: > `maxFilesPerBucketMilli`
-    *    (default 2000 = two files/bucket) and dead_ppm >
+    *    only, "none" otherwise. [[gc]] serves "reclaim" and
+    *    "compact_reclaim" (its rewrite also writes the compacted
+    *    layout), [[compact]] serves "compact". Thresholds:
+    *    > `maxFilesPerBucketMilli` (default 2000 = two files/bucket)
+    *    and dead_ppm >
     *    `maxDeadPpm` (default 300000 — the q_compact_plan 30%
     *    dead-fraction trigger convention).
     *
@@ -800,18 +802,17 @@ final class ChunkStore private (
     * scale (namenode/listing pressure, an open() per tiny file, no
     * row-group locality), and the thing the reference's bump-allocated
     * pages (store/mod.rs:330-390) never suffer: the Spark translation
-    * owes this maintenance op back. The same rewrite as [[gc]]: by
-    * default the contents are untouched and only the file layout
-    * changes; with `reclaim = true` the rewrite keeps only what is live,
-    * as [[gc]] does, so a 100 TB store pays ONE full rewrite for both
-    * layout and reclamation instead of two. Like every rewrite it leaves
-    * the generation it replaced on disk until the next rewrite, so the
-    * store's disk use is about doubled in between. Returns per-table
-    * before/after file counts either way: those of the replaced and the
-    * new generation.
+    * owes this maintenance op back. The same rewrite as [[gc]], but the
+    * contents are untouched and only the file layout changes; to
+    * reclaim as well, run [[gc]] instead, which writes the same layout,
+    * so a 100 TB store pays ONE full rewrite for both. Like every
+    * rewrite it leaves the generation it replaced on disk until the
+    * next rewrite, so the store's disk use is about doubled in between.
+    * Returns per-table before/after file counts: those of the replaced
+    * and the new generation.
     */
-  def compact(reclaim: Boolean = false): DataFrame =
-    rewrite(reclaim) { (from, to) =>
+  def compact(): DataFrame =
+    rewrite(reclaim = false) { (from, to) =>
       rowsOf(compactSchema, Seq("chunks", "manifest", "catalog").map { t =>
         Row(t, countDataFiles(s"${from.dir}/$t"), countDataFiles(s"${to.dir}/$t"))
       }: _*)
@@ -1210,21 +1211,29 @@ object ChunkStore {
     StructField("key", StringType),
   ))
 
-  /** The live catalog rows among one store's [[ChunkStore.probe]]
-    * rows, by blob hash: those whose hash the same store has not
-    * tombstoned.
+  /** The one point-read resolution: for each of `hashes` that some of
+    * `stores` holds live (catalogued there and not tombstoned there),
+    * the first such store in `stores`' order and its catalog row. Every
+    * store's [[ChunkStore.probe]] is unioned and collected in ONE job however many stores there are (none for no
+    * stores or no hashes), so a blob deleted in one store is served by
+    * the next.
     */
-  private[lake] def liveEntries(rows: Seq[Row]): Map[String, CatalogEntry] = {
-    val (dead, present) = rows.partition(_.getAs[Boolean]("dead"))
-    val tombstoned = dead.map(_.getAs[String]("blob_hash")).toSet
-    present.filterNot(r => tombstoned(r.getAs[String]("blob_hash"))).map { r =>
-      val h = r.getAs[String]("blob_hash")
-      h -> CatalogEntry(
-        r.getAs[Long]("gen"), h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
-        r.getAs[String]("root_key"), Option(r.getAs[Integer]("root_bucket")).fold(0)(_.intValue),
-        Option(r.getAs[Integer]("tree_depth")).fold(0)(_.intValue))
-    }.toMap
-  }
+  private[lake] def resolve(stores: Seq[ChunkStore], hashes: Seq[String]): Map[String, (ChunkStore, CatalogEntry)] =
+    if (stores.isEmpty || hashes.isEmpty) Map.empty
+    else {
+      val rows = stores.zipWithIndex.map { case (s, i) => s.probe(hashes, i) }.reduceLeft(_ unionByName _).collect().toSeq
+      def key(r: Row) = (r.getAs[Int]("store"), r.getAs[String]("blob_hash"))
+      val (dead, present) = rows.partition(_.getAs[Boolean]("dead"))
+      val tombstoned = dead.map(key).toSet
+      // later stores first, so the first store's row is the one kept
+      present.filterNot(r => tombstoned(key(r))).sortBy(-_.getAs[Int]("store")).map { r =>
+        val h = r.getAs[String]("blob_hash")
+        h -> (stores(r.getAs[Int]("store")), CatalogEntry(
+          r.getAs[Long]("gen"), h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
+          r.getAs[String]("root_key"), Option(r.getAs[Integer]("root_bucket")).fold(0)(_.intValue),
+          Option(r.getAs[Integer]("tree_depth")).fold(0)(_.intValue)))
+      }.toMap
+    }
 
   /** The [[ChunkStore.fsck]] invariant algebra over ARBITRARY
     * (manifest, chunks, catalog) relations — static so the audit can
@@ -1396,8 +1405,16 @@ object ChunkStore {
     }
   }
 
-  /** Initialize a fresh store directory (reference: DataStore::init). */
+  /** Initialize a fresh store directory (reference: DataStore::init).
+    * On a path that already holds a store, the marker's bucket count must
+    * be `params`' one: every chunk there was placed by it, so another
+    * count would send reads to the wrong buckets. Raises
+    * IllegalArgumentException otherwise.
+    */
   def init(spark: SparkSession, path: String, maxBytes: Long = Long.MaxValue, params: LakeParams = LakeParams()): ChunkStore = {
+    marker(spark, path).flatMap(markedBuckets(path, _)).filter(_ != params.nBuckets).foreach { n =>
+      throw new IllegalArgumentException(s"$path already holds a store of $n buckets; init with ${params.nBuckets} would misplace its chunks")
+    }
     val root = new HPath(path)
     val fs = root.getFileSystem(hadoopConf(spark))
     fs.mkdirs(root)
@@ -1413,10 +1430,13 @@ object ChunkStore {
     * `params` supplies it only for a marker without that line.
     */
   def load(spark: SparkSession, path: String, readonly: Boolean, maxBytes: Long = Long.MaxValue, params: LakeParams = LakeParams()): ChunkStore = {
-    val text = marker(spark, path).getOrElse(throw new InvalidMagicException(path))
-    val nBuckets = text.linesIterator.collectFirst { case l if l.startsWith("nBuckets=") =>
-      l.stripPrefix("nBuckets=").trim.toIntOption.filter(_ > 0).getOrElse(throw new InvalidMagicException(path))
-    }
+    val nBuckets = markedBuckets(path, marker(spark, path).getOrElse(throw new InvalidMagicException(path)))
     new ChunkStore(spark, path, readonly, maxBytes, nBuckets.fold(params)(n => params.copy(nBuckets = n)))
   }
+
+  /** The bucket count a marker's text names, if it names one. */
+  private def markedBuckets(path: String, text: String): Option[Int] =
+    text.linesIterator.collectFirst { case l if l.startsWith("nBuckets=") =>
+      l.stripPrefix("nBuckets=").trim.toIntOption.filter(_ > 0).getOrElse(throw new InvalidMagicException(path))
+    }
 }

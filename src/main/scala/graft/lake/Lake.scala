@@ -28,20 +28,27 @@ final case class LakeConfig(stores: Seq[StoreEntry]) {
 }
 
 object LakeConfig {
+  /** Parses the subset [[LakeConfig.toToml]] writes, with `#` comments
+    * (a `#` inside a quoted filename is part of it). Unknown keys are
+    * ignored; a `readonly` other than true/false or a `max_bytes` that is
+    * not an integer raises IllegalArgumentException naming the line.
+    */
   def fromToml(toml: String): LakeConfig = {
     val entries = scala.collection.mutable.ListBuffer.empty[StoreEntry]
     var cur: Option[(String, Boolean, Long)] = None
     def flush(): Unit = cur.foreach { case (p, r, m) => if (p.nonEmpty) entries += StoreEntry(p, r, m) }
-    toml.linesIterator.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).foreach {
-      case "[[stores]]" =>
+    val lines = toml.linesIterator.zipWithIndex.map { case (l, i) => (l.replaceFirst(Comment, "$1").trim, i + 1) }
+    lines.filter(_._1.nonEmpty).foreach {
+      case ("[[stores]]", _) =>
         flush(); cur = Some(("", false, Long.MaxValue))
-      case l if l.contains("=") =>
+      case (l, n) if l.contains("=") =>
         val Array(k, v) = l.split("=", 2).map(_.trim)
+        def bad(what: String) = new IllegalArgumentException(s"lake config line $n: $what: $l")
         cur = cur.map { case (p, r, m) =>
           k match {
             case "filename" => (v.stripPrefix("\"").stripSuffix("\""), r, m)
-            case "readonly" => (p, v == "true", m)
-            case "max_bytes" => (p, r, v.toLong)
+            case "readonly" => (p, Map("true" -> true, "false" -> false).getOrElse(v, throw bad("readonly must be true or false")), m)
+            case "max_bytes" => (p, r, v.toLongOption.getOrElse(throw bad("max_bytes must be an integer")))
             case _ => (p, r, m)
           }
         }
@@ -50,6 +57,9 @@ object LakeConfig {
     flush()
     LakeConfig(entries.toList)
   }
+
+  /** A line up to a `#` outside double quotes (group 1) and the comment. */
+  private val Comment = "^((?:[^\"#]|\"[^\"]*\")*)#.*$"
 }
 
 /** Multi-store lake (reference: DataLake, lake/mod.rs).
@@ -70,7 +80,6 @@ object LakeConfig {
   */
 final class Lake private (val spark: SparkSession, val config: LakeConfig, val stores: Seq[ChunkStore]) {
 
-  def readable: Seq[ChunkStore] = stores
   def writable: Seq[ChunkStore] = stores.filterNot(_.readonly)
 
   /** Stores `blobs` (column `data`: binary) in the first writable
@@ -112,10 +121,9 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
         .drop("rn", "store_priority")
     }
 
-  /** Point read with verify-on-read. Every store's catalog probe
-    * ([[ChunkStore.probe]]), tagged with the store's index, is unioned
-    * and collected in ONE job however many stores there are; the first
-    * store (in config order) that holds the blob and has not
+  /** Point read with verify-on-read. [[ChunkStore.resolve]] probes
+    * every store's catalog in ONE job however many stores there are;
+    * the first store (in config order) that holds the blob and has not
     * tombstoned it serves it, so a blob deleted in one store is still
     * served by the next. The probe alone answers a miss or an inline
     * blob; a chunked blob then costs one bucket-scoped job per tree
@@ -123,21 +131,9 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     * read from the generation of the store that the probe read. Nothing
     * is cached across calls.
     */
-  def getBlob(hash: String): Array[Byte] = {
-    val rows =
-      if (stores.isEmpty) Map.empty[Int, Seq[Row]]
-      else stores.zipWithIndex
-        .map { case (s, i) => s.probe(Seq(hash)).withColumn("store", lit(i)) }
-        .reduceLeft(_ unionByName _)
-        .collect().toSeq
-        .groupBy(_.getAs[Int]("store"))
-    stores.indices.iterator
-      .flatMap(i => ChunkStore.liveEntries(rows.getOrElse(i, Seq.empty)).get(hash).map(stores(i) -> _))
-      .nextOption() match {
-      case Some((s, e)) => s.readBlob(e)
-      case None => throw new BlobNotFoundException(hash)
-    }
-  }
+  def getBlob(hash: String): Array[Byte] =
+    ChunkStore.resolve(stores, Seq(hash)).get(hash)
+      .fold(throw new BlobNotFoundException(hash)) { case (s, e) => s.readBlob(e) }
 
   /** Tombstone blobs in every writable store that holds them (a blob
     * put before a spill-over may live in several). Returns the number
@@ -159,13 +155,12 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     if (ss.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema.add("store", StringType, nullable = false))
     else ss.map(s => f(s).withColumn("store", lit(s.path))).reduceLeft(_ unionByName _)
 
-  /** Compact every writable store (small-file consolidation; with
-    * `reclaim` it keeps only what is live, as GC does, in the same
-    * rewrite — see [[ChunkStore.compact]]). The lake-level maintenance
-    * sibling of [[gc]]: per-store per-table before/after file counts
-    * keyed by path.
+  /** Compact every writable store (small-file consolidation; [[gc]]
+    * writes the same layout while it reclaims — see
+    * [[ChunkStore.compact]]). The lake-level maintenance sibling of
+    * [[gc]]: per-store per-table before/after file counts keyed by path.
     */
-  def compact(reclaim: Boolean = false): DataFrame = perStore(writable, ChunkStore.compactSchema)(_.compact(reclaim))
+  def compact(): DataFrame = perStore(writable, ChunkStore.compactSchema)(_.compact())
 
   /** Scrub every store, readable included (payload verification needs
     * no write access); per-store per-invariant violation counts keyed
@@ -184,7 +179,9 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     * lake reads) but never recommend a write action: their tripped
     * recommendation degrades to `read_only` so a scheduler executing
     * this column can never be steered into a StoreReadOnlyException.
-    * Completes the fleet-level plan → execute ([[compact]]) → verify
+    * A writable store's "reclaim" and "compact_reclaim" call for [[gc]],
+    * its "compact" for [[compact]].
+    * Completes the fleet-level plan → execute ([[gc]], [[compact]]) → verify
     * ([[scrub]]/fsck) loop.
     */
   def maintenanceReport(maxFilesPerBucketMilli: Long = 2000L, maxDeadPpm: Long = 300000L): DataFrame = {

@@ -43,15 +43,17 @@ object LakeCatalog {
   }
 
   /** Lake-wide stats: per store, blob/chunk counts and byte totals —
-    * the `DataLake` health view.
+    * the `DataLake` health view. `n_blobs` counts the raw catalog,
+    * tombstoned blobs included; `bytes` is [[ChunkStore.currentBytes]].
+    * Each row is one resolution of its store and one aggregate
+    * ([[ChunkStore.totals]]), so it describes one generation.
     */
   def describe(lake: Lake): DataFrame = {
     val spark = lake.spark
     import spark.implicits._
     lake.stores.zipWithIndex.map { case (s, i) =>
-      val nBlobs = s.catalog.count()
-      val nChunks = s.chunks.count()
-      (i, s.path, s.readonly, nBlobs, nChunks, s.currentBytes)
+      val (bytes, nBlobs, nChunks) = s.totals
+      (i, s.path, s.readonly, nBlobs, nChunks, bytes)
     }.toDF("store_priority", "path", "readonly", "n_blobs", "n_chunks", "bytes")
   }
 

@@ -449,7 +449,7 @@ object LakeOps {
     * Scale shape: one exchange of the unique chunk set keyed on
     * bucket — the O(store) floor any rewrite pays — then two
     * metadata-sized per-bucket rollups. The real-store twin (multi-put
-    * fragmentation → `compact(reclaim = true)` → fsck+scrub green,
+    * fragmentation → `gc()` → fsck+scrub green,
     * payload roundtrip, one-file-per-bucket, pruned tree-get plan
     * unchanged) is pinned in Round21OpsSpec.
     */
@@ -965,7 +965,7 @@ object LakeOps {
         val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (fs.exists(tmp)) fs.delete(tmp, true)
         val building = ChunkStore.init(spark, tmp.toString, params = TreeP)
-        building.putBlobsDf(treePayloads(spark, dir).select(col("data"))).count()
+        building.putBlobs(treePayloads(spark, dir).select(col("data")))
         if (fs.exists(dst)) fs.delete(dst, true)
         if (!fs.rename(tmp, dst))
           throw new java.io.IOException(s"treeStore: rename $tmp -> $dst failed")
@@ -1004,7 +1004,7 @@ object LakeOps {
         val building = ChunkStore.init(spark, tmp.toString, params = MaintP)
         val blobs = docs(spark, dir)
           .groupBy(col("text")).agg(min(col("doc_id")).as("min_id"))
-        building.putBlobsDf(blobs.select(col("text").cast(BinaryType).as("data"))).count()
+        building.putBlobs(blobs.select(col("text").cast(BinaryType).as("data")))
         val dead = blobs.filter(col("min_id") % 3 === 0)
           .select(sha2(col("text"), 256)).collect().map(_.getString(0)).toSeq
         building.deleteBlobs(dead)

@@ -122,7 +122,7 @@ class LakeSpec extends AnyFunSuite {
     Files.move(root.resolve("catalog"), root.resolve("catalog.old"))
     val writers = Seq(store, ChunkStore.load(spark, dir, readonly = false))
     writers.foreach { s =>
-      Seq[() => Any](() => s.gc(), () => s.compact(reclaim = true), () => s.putBlobs(blobDf(4L -> "after the swap")),
+      Seq[() => Any](() => s.gc(), () => s.compact(), () => s.putBlobs(blobDf(4L -> "after the swap")),
         () => s.deleteBlobs(Seq(sha(mid)))).foreach { op =>
         val e = intercept[IllegalStateException](op())
         assert(e.getMessage.contains("catalog.old") && e.getMessage.contains(".compact_tmp"))
@@ -209,7 +209,7 @@ class LakeSpec extends AnyFunSuite {
     try {
       lake.gc(): Unit
       lake.compact(): Unit
-      lake.compact(reclaim = true): Unit
+      lake.gc(): Unit
       assert(lake.delete(Seq(hVictim)) == 1)
       deleted.set(true)
       lake.gc(): Unit
@@ -457,6 +457,16 @@ class LakeSpec extends AnyFunSuite {
     val cfg = LakeConfig(Seq(StoreEntry("/a", readonly = true), StoreEntry("/b", maxBytes = 12345)))
     val back = LakeConfig.fromToml(cfg.toToml)
     assert(back == cfg)
+    // trailing comments, and a `#` that is part of a quoted filename
+    val commented = LakeConfig.fromToml(
+      "# the lake\n[[stores]]  # hot\nfilename = \"/a\"  # c\nreadonly = true  # archive\n\n" +
+        "[[stores]]\nfilename = \"/b#2\" # capped\nmax_bytes = 1000  # cap\nsize_hint = 3 # unknown keys are ignored\n")
+    assert(commented == LakeConfig(Seq(StoreEntry("/a", readonly = true), StoreEntry("/b#2", maxBytes = 1000))))
+    // malformed values are refused, naming the line
+    for ((line, what) <- Seq("readonly = yes" -> "readonly", "max_bytes = 1k" -> "max_bytes")) {
+      val e = intercept[IllegalArgumentException](LakeConfig.fromToml(s"[[stores]]\nfilename = \"/a\"\n$line\n"))
+      assert(e.getMessage.contains("line 3") && e.getMessage.contains(what) && e.getMessage.contains(line), e.getMessage)
+    }
   }
 
   test("convergent encryption is deterministic (same content → same ciphertext)") {
@@ -466,17 +476,6 @@ class LakeSpec extends AnyFunSuite {
     val cts = df.select(hex(col("ct"))).as[String].collect()
     assert(cts(0) == cts(1), "equal plaintexts must encrypt identically")
     assert(cts(0) != cts(2))
-  }
-
-  test("putBlobsDf: collect-free put returns the distributed summary") {
-    val store = ChunkStore.init(spark, tmp())
-    val out = store.putBlobsDf(blobDf(1L -> tiny, 2L -> big))
-    assert(out.count() == 2)
-    val kinds = out.select("kind").as[String].collect().sorted
-    assert(kinds.sameElements(Array("inline", "tree")))
-    // idempotent like putBlobs
-    assert(store.putBlobsDf(blobDf(3L -> big)).count() == 1)
-    assert(store.catalog.count() == 2)
   }
 
   test("file ingest: whole files land content-addressed and read back identical") {
@@ -517,6 +516,41 @@ class LakeSpec extends AnyFunSuite {
     val d = LakeCatalog.describe(lake).collect()
     assert(d.length == 2)
     assert(d.map(_.getAs[Long]("n_blobs")).sum == 1)
+  }
+
+  test("LakeCatalog.describe: one aggregate per store, each row equal to the store's separate counts") {
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(tmp()), StoreEntry(tmp()))))
+    lake.put(blobDf(1L -> tiny, 2L -> mid, 3L -> big))
+    lake.stores(1).putBlobs(blobDf(4L -> "another inline blob", 5L -> ("q" * 300)))
+    assert(lake.delete(Seq(sha(mid), sha(tiny))) == 2)
+    def separate(s: ChunkStore) = (s.catalog.count(), s.chunks.count(), s.currentBytes)
+    def check(when: String): Unit = {
+      var rows = Array.empty[Row]
+      val jobs = jobLog(s"describe-$when") { rows = LakeCatalog.describe(lake).collect() }
+      // one aggregate per store: its shuffle stage and its result
+      assert(jobs.size == 2 * lake.stores.size, s"$when: ${jobs.size} jobs for ${lake.stores.size} stores")
+      assert(rows.toSeq.map(r => (r.getAs[Long]("n_blobs"), r.getAs[Long]("n_chunks"), r.getAs[Long]("bytes"))) ==
+        lake.stores.map(separate), when)
+      assert(rows.toSeq.map(r => (r.getAs[Int]("store_priority"), r.getAs[String]("path"), r.getAs[Boolean]("readonly"))) ==
+        lake.stores.zipWithIndex.map { case (s, i) => (i, s.path, false) }, when)
+    }
+    check("with tombstones")
+    assert(lake.stores(0).catalog.count() == 3, "n_blobs counts the raw catalog, tombstoned blobs included")
+    lake.gc(): Unit
+    check("after gc")
+    assert(lake.stores(0).catalog.count() == 1)
+  }
+
+  test("ChunkStore.init refuses a store of another bucket count and leaves it readable") {
+    val p = tmp()
+    val store = ChunkStore.init(spark, p, params = LakeParams.primeBuckets(100))
+    store.putBlobs(blobDf(1L -> big))
+    val e = intercept[IllegalArgumentException](ChunkStore.init(spark, p))
+    assert(e.getMessage.contains("97") && e.getMessage.contains("64"), e.getMessage)
+    assert(new String(ChunkStore.load(spark, p, readonly = true).getBlob(sha(big)), StandardCharsets.UTF_8) == big)
+    assert(ChunkStore.load(spark, p, readonly = true).scrub().filter(col("violations") > 0 && col("check") =!= "scanned_chunks").count() == 0)
+    // the same count is still allowed
+    assert(new String(ChunkStore.init(spark, p, params = LakeParams.primeBuckets(100)).getBlob(sha(big)), StandardCharsets.UTF_8) == big)
   }
 
   test("replicateTo: missing blobs copy by content address, shared chunks dedup, idempotent") {
@@ -971,7 +1005,7 @@ class LakeSpec extends AnyFunSuite {
   test("Lake.compact on a lake without a writable store returns an empty frame") {
     val p = tmp()
     ChunkStore.init(spark, p)
-    val out = Lake.init(spark, LakeConfig(Seq(StoreEntry(p, readonly = true)))).compact(reclaim = true)
+    val out = Lake.init(spark, LakeConfig(Seq(StoreEntry(p, readonly = true)))).compact()
     assert(out.count() == 0 && out.columns.toSeq == Seq("table", "files_before", "files_after", "store"))
   }
 
@@ -1013,18 +1047,22 @@ class LakeSpec extends AnyFunSuite {
     * through a second handle: a delete through a lake that opens store 0
     * readonly, and a put into a lake whose only writable store is store
     * 0 capped at what it holds, which must be refused and change
-    * nothing. Returns the store that took each put.
+    * nothing. After every step the lake that opens store 0 readonly
+    * reads too, and must agree with the model as well. Returns the store
+    * that took each put.
     */
   private def modelRun(seed: Long): Seq[Int] = {
     val rnd = new scala.util.Random(seed)
     val chunkMax = LakeParams().chunkMax.toInt
     val cfg = LakeConfig(Seq(StoreEntry(tmp(), maxBytes = ModelCap), StoreEntry(tmp())))
     var lake = Lake.init(spark, cfg)
+    // the second handle of the readonly steps and reads
+    val ro = Lake.init(spark, LakeConfig(cfg.stores.head.copy(readonly = true) +: cfg.stores.tail))
     val model = new LakeModel(lake.stores.size)
     val never = Seq(sha(s"never put, seed $seed"), sha(s"never put either, seed $seed"))
     val takers = Seq.newBuilder[Int]
-    // the two second-handle steps draw from their own stream, so the
-    // other steps run the same sequence with or without them
+    // the second-handle steps and reads draw from their own stream, so
+    // the other steps run the same sequence with or without them
     val side = new scala.util.Random(~seed)
     def pick[T](xs: Seq[T], r: scala.util.Random = rnd): T = xs(r.nextInt(xs.size))
     def fresh(len: Int, r: scala.util.Random = rnd): Array[Byte] =
@@ -1067,7 +1105,6 @@ class LakeSpec extends AnyFunSuite {
           case "readonly delete" =>
             // as the benchmark deletes: through a lake that opens store 0
             // readonly, so only store 1 tombstones
-            val ro = Lake.init(spark, LakeConfig(cfg.stores.head.copy(readonly = true) +: cfg.stores.tail))
             val hs = (Seq.fill(1 + side.nextInt(2))(pick(model.bytes.keys.toSeq, side)) ++ model.live(1).toSeq.sorted.take(1)).distinct
             assert(ro.delete(hs :+ never.head) == model.delete(hs, stores = Seq(1)), s"seed $seed, step $i: tombstones written")
             s"delete of ${hs.size} through store 1 alone"
@@ -1085,37 +1122,46 @@ class LakeSpec extends AnyFunSuite {
             lake.stores.foreach(s => assert(s.fsck().filter(col("violations") > 0).count() == 0, s"seed $seed, step $i: fsck after gc"))
             "gc"
           case "compact" =>
-            val reclaim = rnd.nextBoolean()
-            lake.compact(reclaim).collect()
-            s"compact(reclaim = $reclaim)"
+            // gc is the reclaiming compaction
+            if (rnd.nextBoolean()) { lake.gc().collect(); "compact by gc" }
+            else { lake.compact().collect(); "compact" }
           case "reopen" =>
             lake = Lake.init(spark, cfg)
             "reopen"
         })
         agrees(lake, model, never, step)
+        // the readonly handle reads what the lake reads: every hash in
+        // bulk, a few drawn from `side` point by point
+        val hashes = model.bytes.keys.toSeq ++ never
+        reads(ro, model, hashes, Seq.fill(2)(pick(hashes, side)).distinct, s"$step, through store 0 readonly")
     }
     takers.result()
   }
 
   /** `lake` agrees with `model` on every hash it was ever given and on
-    * `never`: `Lake.get` returns a live one once, verified and
-    * byte-identical, and no row otherwise; `Lake.getBlob` returns its
-    * bytes or raises BlobNotFoundException; each store's live set is
+    * `never`: both reads agree ([[reads]]), and each store's live set is
     * the model's.
     */
   private def agrees(lake: Lake, model: LakeModel, never: Seq[String], step: String): Unit = {
     val hashes = model.bytes.keys.toSeq ++ never
+    reads(lake, model, hashes, hashes, step)
+    lake.stores.zip(model.live).foreach { case (s, live) =>
+      assert(s.liveCatalog.select("blob_hash").as[String].collect().toSet == live, s"$step: live set of ${s.path}")
+    }
+  }
+
+  /** `Lake.get` of `hashes` returns a live one once, verified and
+    * byte-identical, and no row otherwise; `Lake.getBlob` of each of
+    * `points` returns its bytes or raises BlobNotFoundException.
+    */
+  private def reads(lake: Lake, model: LakeModel, hashes: Seq[String], points: Seq[String], step: String): Unit = {
     val rows = lake.get(hashes.toDF("blob_hash")).collect()
     assert(rows.map(_.getString(0)).distinct.length == rows.length, s"$step: Lake.get returned a hash twice")
     val bulk = rows.map(r => r.getString(0) -> (Option(r.getAs[Array[Byte]](1)).map(_.toSeq), r.getAs[Any](2))).toMap
-    hashes.foreach { h =>
-      val want = model.read(h).map(_.toSeq)
-      assert(bulk.get(h) == want.map(b => (Some(b), true)), s"$step: Lake.get of $h")
+    hashes.foreach(h => assert(bulk.get(h) == model.read(h).map(b => (Some(b.toSeq), true)), s"$step: Lake.get of $h"))
+    points.foreach { h =>
       val point = try Some(lake.getBlob(h).toSeq) catch { case _: BlobNotFoundException => None }
-      assert(point == want, s"$step: Lake.getBlob of $h")
-    }
-    lake.stores.zip(model.live).foreach { case (s, live) =>
-      assert(s.liveCatalog.select("blob_hash").as[String].collect().toSet == live, s"$step: live set of ${s.path}")
+      assert(point == model.read(h).map(_.toSeq), s"$step: Lake.getBlob of $h")
     }
   }
 

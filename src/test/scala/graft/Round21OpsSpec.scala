@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-21 pins: the `lake_compact_exec` small-file compaction
   * (per-bucket post-state replayed exactly in plain Scala; physical
   * one-file-per-bucket and batch-count fragmentation read from the
-  * files themselves), the real store's fused `compact(reclaim=true)`
-  * (layout + GC in one rewrite: dead chunks reclaimed, shared chunks
-  * survive, fsck+scrub green, payloads intact, tombstones cleared),
+  * files themselves), the real store's `gc()`, compaction fused with
+  * reclamation (layout + GC in one rewrite: dead chunks reclaimed,
+  * shared chunks survive, fsck+scrub green, payloads intact,
+  * tombstones cleared),
   * the under-recorded `tree_depth` read-availability fallback, and
   * the no-cached-state contract of the point-read path.
   */
@@ -78,7 +79,7 @@ class Round21OpsSpec extends AnyFunSuite {
 
   // --------------------------------------- fused compact+reclaim (real store)
 
-  test("compact(reclaim=true): one rewrite consolidates files AND reclaims dead chunks; shared chunks survive") {
+  test("gc: one rewrite compacts files AND reclaims dead chunks; shared chunks survive") {
     val store = ChunkStore.init(spark, tmp())
     val shared = "s" * 256 // 256-byte aligned prefix → its own chunk
     val blobA = shared + ("a" * 40) // shares chunk(shared) with B
@@ -98,10 +99,12 @@ class Round21OpsSpec extends AnyFunSuite {
     val chunksBefore = store.chunks.count()
     assert(chunksBefore > liveChunksExpected, "the deletes must strand some chunks")
 
-    val report = store.compact(reclaim = true).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(report("chunks")._2 < report("chunks")._1,
-      s"chunks must consolidate: ${report("chunks")}")
+    def chunkFiles() = store.maintenanceReport().head().getAs[Long]("n_chunk_files")
+    val filesBefore = chunkFiles()
+    store.gc()
+    val filesAfter = chunkFiles()
+    assert(filesAfter < filesBefore,
+      s"chunks must consolidate: ${(filesBefore, filesAfter)}")
 
     // reclamation: dead-only chunks gone, shared chunk survives (blobB
     // still reassembles through it), tombstones cleared
@@ -144,7 +147,7 @@ class Round21OpsSpec extends AnyFunSuite {
       s"half the blobs tombstoned must strand >30% of chunks: $before")
     assert(before.getAs[String]("recommend") == "compact_reclaim", before.toString)
 
-    store.compact(reclaim = true)
+    store.gc()
     val after = report()
     assert(after.getAs[String]("recommend") == "none", after.toString)
     assert(after.getAs[Long]("n_dead_chunks") == 0L)
@@ -261,7 +264,7 @@ class Round21OpsSpec extends AnyFunSuite {
 
   // ------------------------------------------- lake-level maintenance
 
-  test("Lake.compact(reclaim) and Lake.scrub fan out per store") {
+  test("Lake.gc and Lake.scrub fan out per store") {
     val root = tmp()
     // store 0 holds ~2 payloads then spills over to store 1
     val lake = graft.lake.Lake.init(spark, graft.lake.LakeConfig(Seq(
@@ -277,10 +280,12 @@ class Round21OpsSpec extends AnyFunSuite {
     def h(s: String) = sha256hex(s.getBytes(StandardCharsets.UTF_8))
     lake.delete(Seq(h(payloads.head._2)))
 
-    val report = lake.compact(reclaim = true).collect()
-      .map(r => (r.getString(3), r.getString(0)) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(report.keys.map(_._1).toSet.size == 2, "one report block per writable store")
-    val store0Chunks = report((s"$root/s0", "chunks"))
+    def chunkFiles() = lake.maintenanceReport().collect()
+      .map(r => r.getAs[String]("store") -> r.getAs[Long]("n_chunk_files")).toMap
+    val filesBefore = chunkFiles()
+    val report = lake.gc().collect().map(_.getAs[String]("store"))
+    assert(report.toSet.size == 2, "one report block per writable store")
+    val store0Chunks = (filesBefore(s"$root/s0"), chunkFiles()(s"$root/s0"))
     assert(store0Chunks._2 <= store0Chunks._1, s"files must not grow: $store0Chunks")
     // deleted blob reclaimed, the rest roundtrip through the lake
     intercept[BlobNotFoundException](lake.getBlob(h(payloads.head._2)))

@@ -27,7 +27,7 @@ class Round22OpsSpec extends AnyFunSuite {
       .select(col("blob_id"), col("s").cast("binary").as("data"))
 
   test("Lake.maintenanceReport: degraded writable store recommends compact_reclaim, " +
-    "readonly store reports read-only-safe, all-none after Lake.compact(reclaim=true)") {
+    "readonly store reports read-only-safe, all-none after Lake.gc") {
     // store A: built degraded, then reopened READONLY in the lake —
     // the planner must still measure it but never recommend a write
     val pathA = tmp()
@@ -69,8 +69,9 @@ class Round22OpsSpec extends AnyFunSuite {
     assert(roRow.getAs[Boolean]("readonly"))
 
     // execute the plan at the fleet grain: only the writable store is
-    // rewritten (Lake.compact routes around readonly members)
-    lake.compact(reclaim = true)
+    // rewritten (Lake.gc routes around readonly members), and gc writes
+    // the compacted layout while it reclaims
+    lake.gc()
     val after = report()
     assert(after(pathB).getAs[String]("recommend") == "none", after(pathB).toString)
     assert(after(pathB).getAs[Long]("n_dead_chunks") == 0L)
