@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -107,9 +108,11 @@ object LakeParams {
   * and chunks, the capacity gate, the appends. [[replicateTo]] feeds
   * the same commit.
   *
-  * A point read or a delete first resolves its hashes to live catalog
-  * rows with one probe job ([[ChunkStore.resolve]], the same one
-  * [[Lake.getBlob]] runs over every store of a lake).
+  * A store's reads are the one-store case of a [[Lake]]'s: the same
+  * point read ([[ChunkStore.read]]) and bulk read
+  * ([[ChunkStore.readAll]]), under the one read rule stated beside
+  * [[ChunkStore.resolve]]. A point read or a delete first resolves its
+  * hashes to live catalog rows with one probe job.
   *
   * Write order is chunks → manifest → catalog: a blob becomes visible
   * only once fully written, so a failed-and-retried put (the normal
@@ -279,15 +282,13 @@ final class ChunkStore private (
       try {
         val newCat = rows.filter(col("level").isNull)
         val newMan = rows.filter(col("level").isNotNull)
-        // repartitioned by bucket last, with an explicit count, which AQE
-        // keeps, so that each task writes the files of its own buckets
-        // whichever way the anti-join runs; the copies of a chunk meet in
-        // its bucket's task, so the dedup needs no shuffle of its own
-        val newChunks = newMan
+        // laid out by bucket last, whichever way the anti-join runs; the
+        // copies of a chunk meet in its bucket's task, so the dedup needs
+        // no shuffle of its own
+        val newChunks = byBucket(newMan
           .filter(col("data").isNotNull)
           .select(col("chunk_hash"), col("size"), col("enc"), col("data"), bucketOf(col("chunk_hash"), params.nBuckets).as("bucket"))
-          .join(g.chunks.select("chunk_hash"), Seq("chunk_hash"), "left_anti")
-          .repartition(params.nBuckets min spark.sparkContext.defaultParallelism max 1, col("bucket"))
+          .join(g.chunks.select("chunk_hash"), Seq("chunk_hash"), "left_anti"))
           .dropDuplicates("bucket", "chunk_hash")
         // the blobs to add and, for a bounded store, the bytes it would
         // hold with them: one job either way. The new rows are cached for
@@ -321,6 +322,15 @@ final class ChunkStore private (
       } finally rows.unpersist()
     }
   }
+
+  /** `chunks` repartitioned for a write into a `chunks/` table, the one
+    * layout rule of [[commit]] and [[rewrite]]: by `bucket`, with an
+    * explicit count, which AQE keeps. Each bucket lands in one task, so a
+    * write puts one file into each bucket directory it touches, and the
+    * buckets spread over the cores instead of one task writing them all.
+    */
+  private def byBucket(chunks: DataFrame): DataFrame =
+    chunks.repartition(params.nBuckets min spark.sparkContext.defaultParallelism max 1, col("bucket"))
 
   /** Lifts the tombstones of generation `g` on `hashes`, so a blob
     * deleted and put again before [[gc]] is live again (its rows stay
@@ -411,13 +421,18 @@ final class ChunkStore private (
     * [[getBlobsByHashes]]: every live wanted hash has exactly one row, a
     * blob that cannot be read is `verified` false (with null `data` when
     * no part can be read), tombstoned and absent hashes have no row, and
-    * corrupt data never raises.
-    *
-    * Bulk restores read the flat level-0 manifest rows directly (one
-    * distributed join, no tree walk); the recursive tree is the
-    * point-lookup path. Both end in the same [[assemble]].
+    * corrupt data never raises. [[ChunkStore.readAll]] over this store
+    * alone.
     */
-  def getBlobs(hashDf: DataFrame): DataFrame = {
+  def getBlobs(hashDf: DataFrame): DataFrame = readAll(Seq(this), hashDf)
+
+  /** This store's side of a bulk read: (blob_hash, data, verified) for
+    * each live wanted hash, as [[getBlobs]] describes. It reads the flat
+    * level-0 manifest rows directly (one distributed join, no tree
+    * walk); the recursive tree is the point-lookup path. Both end in the
+    * same [[assemble]].
+    */
+  private def copies(hashDf: DataFrame): DataFrame = {
     val g = current()
     val cat = g.liveCatalog.join(hashDf.select(col("blob_hash")).distinct(), Seq("blob_hash"))
     val own = cat.select(col("blob_hash"), lit(0L).as("part_idx"), when(col("kind") === "inline", col("inline_data")).as("part"))
@@ -452,7 +467,7 @@ final class ChunkStore private (
     * over this store alone, one probe job (none for no hashes).
     */
   private def lookup(hashes: Seq[String]): Map[String, CatalogEntry] =
-    resolve(Seq(this), hashes).map { case (h, (_, e)) => h -> e }
+    resolve(Seq(this), hashes).map { case (h, live) => h -> live.head._2 }
 
   /** (blob_hash, data, verified) for live catalog rows of one probe,
     * ordered by blob_hash, read from the generation it probed. Inline
@@ -531,7 +546,9 @@ final class ChunkStore private (
         log.warn(
           s"tree deeper than recorded tree_depth=$maxDepth in $path " +
             s"(extra level ${level - maxDepth}); continuing depth-agnostic walk")
-      val children = fetch(dir, frontier).collect().toSeq
+      // a node whose key does not decrypt it reads null: its subtree is
+      // lost, and its blob fails verification
+      val children = fetch(dir, frontier).collect().toSeq.filterNot(_.isNullAt(2))
         .flatMap(r => parseNode(r.getString(0), new String(r.getAs[Array[Byte]](2), StandardCharsets.UTF_8)))
         .distinct
       leaves ++= children.collect { case (r, true) => r }
@@ -625,10 +642,12 @@ final class ChunkStore private (
       .withColumns(Map("gen" -> lit(g.n), "store" -> lit(store)))
   }
 
-  /** One blob's bytes from its live catalog row, verified on read. An
-    * inline payload comes straight from the row, with no further job.
-    * A payload that is missing or does not hash to its address raises
-    * [[InvalidMagicException]]: the catalog says the blob is live.
+  /** One blob's bytes from one live copy's catalog row, verified on
+    * read, from the generation the row was probed in. An inline payload
+    * comes straight from the row, with no further job. A payload that is
+    * missing or does not hash to its address raises
+    * [[InvalidMagicException]], the one failure after which
+    * [[ChunkStore.read]] tries the blob's next live copy.
     */
   private[lake] def readBlob(e: CatalogEntry): Array[Byte] = {
     val data =
@@ -640,9 +659,9 @@ final class ChunkStore private (
   /** Single-blob get with verify-on-read: the catalog probe once (which
     * alone answers a miss or an inline blob), then bucket-scoped chunk
     * reads, one job per tree level plus one for the leaves.
+    * [[ChunkStore.read]] over this store alone.
     */
-  def getBlob(hash: String): Array[Byte] =
-    lookup(Seq(hash)).get(hash).fold(throw new BlobNotFoundException(hash))(readBlob)
+  def getBlob(hash: String): Array[Byte] = read(Seq(this), hash)
 
   /** Whether the blob is live here: the catalog probe alone, one job. */
   def containsBlob(hash: String): Boolean = lookup(Seq(hash)).contains(hash)
@@ -672,9 +691,9 @@ final class ChunkStore private (
 
   /** The one rewrite behind [[gc]] (`reclaim`) and [[compact]], under
     * the write lock. From the current generation n it writes generation
-    * n+1 into a temp dir: chunks repartitioned by `bucket` (one file per bucket
-    * per task, so a pruned point read opens about one file per probed
-    * bucket), manifest, catalog and, unless `reclaim`, tombstones, each
+    * n+1 into a temp dir: chunks laid out as a commit lays them out
+    * ([[byBucket]]: one file per bucket, so a pruned point read opens one
+    * file per probed bucket), manifest, catalog and, unless `reclaim`, tombstones, each
     * repartitioned by `blob_hash`. With `reclaim` it writes only what
     * is live (`Generation.live`) and no tombstones. One directory rename
     * publishes the new generation; every generation older than n is
@@ -690,7 +709,7 @@ final class ChunkStore private (
       val tmp = s"$path/$RewriteDir"
       fs.delete(new HPath(tmp), true)
       val (cat, man, chk) = if (reclaim) from.live else (from.catalog, from.manifest, from.chunks)
-      chk.repartition(col("bucket")).write.partitionBy("bucket").parquet(s"$tmp/chunks")
+      byBucket(chk).write.partitionBy("bucket").parquet(s"$tmp/chunks")
       val tombs = if (reclaim || !from.has("tombstones")) Nil else Seq("tombstones" -> from.tombstones)
       (Seq("manifest" -> man, "catalog" -> cat) ++ tombs).foreach { case (t, rows) =>
         rows.repartition(col("blob_hash")).write.parquet(s"$tmp/$t")
@@ -1211,29 +1230,72 @@ object ChunkStore {
     StructField("key", StringType),
   ))
 
-  /** The one point-read resolution: for each of `hashes` that some of
-    * `stores` holds live (catalogued there and not tombstoned there),
-    * the first such store in `stores`' order and its catalog row. Every
-    * store's [[ChunkStore.probe]] is unioned and collected in ONE job however many stores there are (none for no
-    * stores or no hashes), so a blob deleted in one store is served by
-    * the next.
+  /** The live copies of each of `hashes` that some of `stores` holds
+    * live (catalogued there and not tombstoned there): each such store,
+    * in `stores`' order, with its catalog row. Every store's
+    * [[ChunkStore.probe]] is unioned and collected in ONE job however
+    * many stores there are (none for no stores or no hashes).
+    *
+    * The one read rule, of a store (the one-store case) and of a
+    * [[Lake]] alike: of a blob's live copies, a read serves the first
+    * one in config order that verifies. So a blob deleted in one store,
+    * or rotten or lost there, is served by the next store that holds it
+    * intact, and a blob is unreadable only when every live copy is.
+    * [[read]] applies it to one blob, [[readAll]] to a frame of them.
     */
-  private[lake] def resolve(stores: Seq[ChunkStore], hashes: Seq[String]): Map[String, (ChunkStore, CatalogEntry)] =
+  private[lake] def resolve(stores: Seq[ChunkStore], hashes: Seq[String]): Map[String, Seq[(ChunkStore, CatalogEntry)]] =
     if (stores.isEmpty || hashes.isEmpty) Map.empty
     else {
       val rows = stores.zipWithIndex.map { case (s, i) => s.probe(hashes, i) }.reduceLeft(_ unionByName _).collect().toSeq
       def key(r: Row) = (r.getAs[Int]("store"), r.getAs[String]("blob_hash"))
       val (dead, present) = rows.partition(_.getAs[Boolean]("dead"))
       val tombstoned = dead.map(key).toSet
-      // later stores first, so the first store's row is the one kept
-      present.filterNot(r => tombstoned(key(r))).sortBy(-_.getAs[Int]("store")).map { r =>
+      present.filterNot(r => tombstoned(key(r))).distinctBy(key).sortBy(_.getAs[Int]("store")).map { r =>
         val h = r.getAs[String]("blob_hash")
         h -> (stores(r.getAs[Int]("store")), CatalogEntry(
           r.getAs[Long]("gen"), h, r.getAs[String]("kind"), r.getAs[Array[Byte]]("inline_data"), r.getAs[String]("root_hash"),
           r.getAs[String]("root_key"), Option(r.getAs[Integer]("root_bucket")).fold(0)(_.intValue),
           Option(r.getAs[Integer]("tree_depth")).fold(0)(_.intValue)))
-      }.toMap
+      }.groupMap(_._1)(_._2)
     }
+
+  /** The point read of every store and lake: `hash`'s bytes under the
+    * read rule ([[resolve]]). The copies are read in turn
+    * ([[ChunkStore.readBlob]]) until one verifies, so a healthy read
+    * runs its probe and its first copy's reads, and a fallthrough only
+    * the next copy's. Raises [[BlobNotFoundException]] when no store
+    * holds `hash` live, and the first copy's [[InvalidMagicException]],
+    * the later copies' failures suppressed in it, when none verifies.
+    * Any other failure, such as an I/O error, propagates at once.
+    */
+  private[lake] def read(stores: Seq[ChunkStore], hash: String): Array[Byte] = {
+    val failed = Seq.newBuilder[InvalidMagicException]
+    resolve(stores, Seq(hash)).getOrElse(hash, throw new BlobNotFoundException(hash)).iterator
+      .flatMap { case (s, e) => try Some(s.readBlob(e)) catch { case f: InvalidMagicException => failed += f; None } }
+      .nextOption()
+      .getOrElse {
+        val first +: later = failed.result()
+        later.foreach(first.addSuppressed)
+        throw first
+      }
+  }
+
+  /** The bulk read of every store and lake: (blob_hash, data, verified)
+    * for `hashDf`'s `blob_hash`es under the read rule ([[resolve]]).
+    * Each store assembles its own copies ([[ChunkStore.getBlobs]]'s
+    * contract), and one window keeps, per blob, a verified copy before
+    * an unverified one and then the first store's: a live blob is one
+    * row, verified when some live copy is, and corrupt data never raises.
+    */
+  private[lake] def readAll(stores: Seq[ChunkStore], hashDf: DataFrame): DataFrame = {
+    val first = Window.partitionBy(col("blob_hash")).orderBy(col("verified").desc, col("store"))
+    stores.zipWithIndex.map { case (s, i) => s.copies(hashDf).withColumn("store", lit(i)) }
+      .reduceLeftOption(_ unionByName _)
+      .getOrElse(hashDf.select(col("blob_hash"), lit(null).cast(BinaryType).as("data"), lit(false).as("verified"), lit(0).as("store")).limit(0))
+      .withColumn("rn", row_number().over(first))
+      .filter(col("rn") === 1)
+      .drop("rn", "store")
+  }
 
   /** The [[ChunkStore.fsck]] invariant algebra over ARBITRARY
     * (manifest, chunks, catalog) relations — static so the audit can

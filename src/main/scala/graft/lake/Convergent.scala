@@ -45,7 +45,10 @@ object Convergent {
   def encryptDeflated(data: Column): Column =
     aes_encrypt(Codec.deflateCol(data.cast("binary")), contentKey(data), lit("GCM"), lit("NONE"), contentIv(data))
 
-  /** Inverse of [[encryptDeflated]]. */
+  /** Inverse of [[encryptDeflated]]; null when `key` does not
+    * authenticate `ciphertext` (a rotten key in a catalog or manifest
+    * row), so a read reports the part unreadable instead of failing.
+    */
   def decryptDeflated(ciphertext: Column, key: Column): Column =
-    Codec.inflateCol(aes_decrypt(ciphertext, key, lit("GCM"), lit("NONE")))
+    Codec.inflateCol(try_aes_decrypt(ciphertext, key, lit("GCM"), lit("NONE")))
 }

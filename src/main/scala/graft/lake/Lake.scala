@@ -1,9 +1,8 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, BooleanType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, StringType, StructType}
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 
@@ -68,11 +67,13 @@ object LakeConfig {
   *  - init: readonly entries load read-only; writable entries are
   *    initialized if the magic is absent, loaded otherwise
   *    (lake/mod.rs:36-53 verify_magic branch);
-  *  - get: first store that has the blob wins (lake/mod.rs:59-75
-  *    fallback chain) — implemented as a priority-ranked union so one
-  *    distributed job covers all stores, for the bulk [[get]] and the
-  *    point [[getBlob]] alike (whose probe also decides liveness per
-  *    store: a blob tombstoned in one store is served by the next);
+  *  - get: the lake/mod.rs:59-75 fallback chain, as the one read rule
+  *    of stores and lakes (stated beside [[ChunkStore.resolve]]): of a
+  *    blob's live copies, the first in config order that verifies is
+  *    served, so a blob tombstoned, lost or rotten in one store is
+  *    served by the next that holds it intact. The point [[getBlob]]
+  *    probes every store in one job; the bulk [[get]] reads every
+  *    store's live copies in one plan;
   *  - put: first writable store with space; OutOfSpace/ReadOnly →
   *    try next; none left → LakeOutOfStores, carrying the last
   *    writable store's refusal as its cause, or StoreReadOnly when no
@@ -102,38 +103,24 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
     } finally staged.release()
   }
 
-  /** Bulk get across all stores ([[ChunkStore.getBlobs]]): each hash
-    * comes from the first (config-order) store holding it live; a live
-    * copy that cannot be read comes back `verified = false`, as
-    * [[getBlob]] raises.
+  /** Bulk get across all stores ([[ChunkStore.readAll]]): one row per
+    * live wanted hash, from the first store whose copy verifies;
+    * `verified = false` only when no live copy does. It never raises on
+    * corrupt data. Tombstoned and absent hashes have no row.
     */
-  def get(hashDf: DataFrame): DataFrame =
-    if (stores.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Lake.readSchema)
-    else {
-      val perStore = stores.zipWithIndex.map { case (s, i) =>
-        s.getBlobs(hashDf).withColumn("store_priority", lit(i))
-      }
-      val all = perStore.reduceLeft(_ unionByName _)
-      val w = Window.partitionBy(col("blob_hash")).orderBy(col("store_priority"))
-      all
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .drop("rn", "store_priority")
-    }
+  def get(hashDf: DataFrame): DataFrame = ChunkStore.readAll(stores, hashDf)
 
-  /** Point read with verify-on-read. [[ChunkStore.resolve]] probes
-    * every store's catalog in ONE job however many stores there are;
-    * the first store (in config order) that holds the blob and has not
-    * tombstoned it serves it, so a blob deleted in one store is still
-    * served by the next. The probe alone answers a miss or an inline
-    * blob; a chunked blob then costs one bucket-scoped job per tree
-    * level plus one for its leaves ([[ChunkStore.getBlobsByHashes]]),
-    * read from the generation of the store that the probe read. Nothing
-    * is cached across calls.
+  /** Point read with verify-on-read ([[ChunkStore.read]]): one catalog
+    * probe of every store in ONE job however many stores there are, then
+    * the live copies in config order until one verifies, each read from
+    * the generation its store's probe read. The probe alone answers a
+    * miss or an inline blob; a chunked blob then costs one bucket-scoped
+    * job per tree level plus one for its leaves, per copy tried. Raises
+    * BlobNotFoundException when no store holds the blob live, and
+    * InvalidMagicException when no live copy verifies. Nothing is
+    * cached across calls.
     */
-  def getBlob(hash: String): Array[Byte] =
-    ChunkStore.resolve(stores, Seq(hash)).get(hash)
-      .fold(throw new BlobNotFoundException(hash)) { case (s, e) => s.readBlob(e) }
+  def getBlob(hash: String): Array[Byte] = ChunkStore.read(stores, hash)
 
   /** Tombstone blobs in every writable store that holds them (a blob
     * put before a spill-over may live in several). Returns the number
@@ -201,13 +188,6 @@ final class Lake private (val spark: SparkSession, val config: LakeConfig, val s
 }
 
 object Lake {
-  /** The schema of [[Lake.get]]'s frame. */
-  private val readSchema = StructType(Seq(
-    StructField("blob_hash", StringType),
-    StructField("data", BinaryType),
-    StructField("verified", BooleanType),
-  ))
-
   /** DataLake::init (lake/mod.rs:32-57). */
   def init(spark: SparkSession, config: LakeConfig, params: LakeParams = LakeParams()): Lake = {
     val stores = config.stores.map { e =>

@@ -13,8 +13,9 @@ object LakeCatalog {
   /** Registers per-store and lake-wide views:
     *   {prefix}_chunks / {prefix}_manifest / {prefix}_catalog  (union)
     *   {prefix}_s{i}_chunks / ...                              (per store)
-    * Lake-wide unions carry a `store_priority` column matching the
-    * read-fallback order; on a lake with no stores they are empty.
+    * Lake-wide unions carry a `store_priority` column: the store's
+    * config-order index, the order reads fall back along
+    * ([[ChunkStore.resolve]]); on a lake with no stores they are empty.
     * The views replace every view an earlier call made under `prefix`,
     * so none shows a store the lake no longer has. Each store is
     * resolved once, and its per-store views and its part of the

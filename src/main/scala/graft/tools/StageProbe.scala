@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * task-time sum, shuffle bytes) plus job count and total job-gap
   * time — the measurement for the graph-loop per-round constant
   * question (VERDICT r16 #3). Honors SPARK_GRAFT_CPUS /
-  * SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_CONF like Scratch.
+  * SPARK_GRAFT_SHUFFLE (shuffle partitions, default the core count) /
+  * SPARK_GRAFT_CONF (extra `k=v;k=v` confs).
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {

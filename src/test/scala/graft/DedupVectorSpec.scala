@@ -57,7 +57,7 @@ class DedupVectorSpec extends AnyFunSuite {
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = bf.count(ivf.contains).toDouble / bf.size
     info(s"ann_ivf recall@5 = $recall")
-    // floor pinned from the tools/IvfSweep sweep: 8/16 probes measures
+    // floor pinned from a sweep of recall@5 over (numCentroids, nProbes): 8/16 probes measures
     // 0.76 here — deterministic given the fixed k-means seeds
     assert(recall >= 0.7, s"IVF recall under the pinned floor: $recall")
   }

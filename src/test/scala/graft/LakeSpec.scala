@@ -56,6 +56,20 @@ class LakeSpec extends AnyFunSuite {
     assert(store.fsck().filter(col("violations") > 0).count() == 0)
   }
 
+  test("gc lays chunks out as a commit does: bucket by bucket over several tasks, one file per bucket dir") {
+    val p = tmp()
+    val store = ChunkStore.init(spark, p)
+    (1L to 4L).foreach(i => store.putBlobs(blobDf(i -> (s"layout-$i " * 200))))
+    store.gc().collect(): Unit
+    val dirs = Files.list(Paths.get(p, "gen-1", "chunks")).iterator().asScala.filter(_.getFileName.toString.startsWith("bucket=")).toSeq
+    val files = dirs.map(d => Files.list(d).iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq)
+    assert(dirs.size > 8 && files.forall(_.size == 1), s"files per bucket dir: ${files.map(_.size)}")
+    // a file's `part-NNNNN` prefix names the task that wrote it: the
+    // buckets spread over as many tasks as a commit uses
+    val writers = files.flatten.map(_.take("part-00000".length)).distinct
+    assert(writers.size == (LakeParams().nBuckets min spark.sparkContext.defaultParallelism), s"chunks written by the tasks $writers")
+  }
+
   test("fault injection: a rewrite stopped before or after its publish loses nothing") {
     val dir = tmp()
     val root = Paths.get(dir)
@@ -709,7 +723,8 @@ class LakeSpec extends AnyFunSuite {
   }
 
   /** Rewrites a store's chunk table with one bit flipped in the payload
-    * of `chunkHash` (the at-rest bit-rot fixture of the scrub tests).
+    * of `chunkHash` (the at-rest bit-rot fixture of the scrub tests), in
+    * the store's current generation.
     */
   private def flipChunk(store: ChunkStore, chunkHash: String): Unit = {
     val rows = store.chunks.collect().map { r =>
@@ -719,8 +734,16 @@ class LakeSpec extends AnyFunSuite {
     }.toSeq
     assert(rows.exists(_._1 == chunkHash), s"fixture: chunk $chunkHash not stored")
     rows.toDF("chunk_hash", "size", "enc", "data", "bucket")
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"${store.path}/chunks")
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"${currentDir(store)}/chunks")
   }
+
+  /** The directory of `store`'s current generation: its highest
+    * `gen-<n>`, or the store root while it has none.
+    */
+  private def currentDir(store: ChunkStore): String =
+    Files.list(Paths.get(store.path)).iterator().asScala.map(_.getFileName.toString)
+      .flatMap(n => if (n.startsWith("gen-")) n.stripPrefix("gen-").toLongOption else None).maxOption
+      .fold(store.path)(n => s"${store.path}/gen-$n")
 
   test("getBlob job budget: one catalog probe across stores, bucket-scoped chunk reads") {
     val params = LakeParams()
@@ -795,15 +818,70 @@ class LakeSpec extends AnyFunSuite {
     readable(lake, s1, Map(hBig -> big.getBytes(StandardCharsets.UTF_8)))
 
     // a live blob none of whose chunks is left in store 0, intact in
-    // store 1: store 0 answers, unreadable, and no read falls through to
-    // store 1 or reads as a miss
+    // store 1: the lake reads fall through to store 1's copy, byte for
+    // byte and verified, while store 0's own reads stay unreadable and
+    // none reads as a miss
     val (q0, q1) = (tmp(), tmp())
     val two = Lake.init(spark, LakeConfig(Seq(StoreEntry(q0), StoreEntry(q1))))
     two.stores.foreach(_.putBlobs(blobDf(1L -> big)))
     two.stores(0).manifest.filter(col("blob_hash") === hBig).select("bucket").distinct().as[Int].collect()
       .foreach(b => org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(q0, "chunks", s"bucket=$b").toFile))
-    unreadable(two, two.stores(0), Seq(hBig))
-    assert(java.util.Arrays.equals(two.stores(1).getBlob(hBig), big.getBytes(StandardCharsets.UTF_8)), "fixture: store 1's copy")
+    readable(two, two.stores(1), Map(hBig -> big.getBytes(StandardCharsets.UTF_8)))
+    unreadable(Lake.init(spark, LakeConfig(Seq(StoreEntry(q0)))), two.stores(0), Seq(hBig))
+  }
+
+  test("a read serves the first live copy that verifies: a rotten copy falls through, all rotten raises") {
+    val (p0, p1) = (tmp(), tmp())
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(p0), StoreEntry(p1))))
+    lake.stores.foreach(_.putBlobs(blobDf(1L -> mid, 2L -> big)))
+    val (hMid, hBig) = (sha(mid), sha(big))
+    val blobs = Map(hMid -> mid.getBytes(StandardCharsets.UTF_8), hBig -> big.getBytes(StandardCharsets.UTF_8))
+    def leaf(s: ChunkStore, h: String) =
+      s.manifest.filter(col("blob_hash") === h && col("level") === 0 && col("part_idx") === 0L).select("chunk_hash").as[String].head()
+    val (s0, s1) = (lake.stores(0), lake.stores(1))
+    lake.getBlob(hMid): Unit // warm the code paths outside the counted group
+    val healthy = jobLog("fallthrough-healthy")(lake.getBlob(hMid): Unit).size
+
+    // rotten in store 0 only: both lake reads serve store 1's copy
+    Seq(hMid, hBig).foreach(h => flipChunk(s0, leaf(s0, h)))
+    unreadable(Lake.init(spark, LakeConfig(Seq(StoreEntry(p0)))), s0, Seq(hMid, hBig))
+    readable(lake, s1, blobs)
+    // the probe runs once: the fallthrough adds only store 1's leaf read
+    val fallthrough = jobLog("fallthrough-rotten")(lake.getBlob(hMid): Unit).size
+    assert(healthy == 2 && fallthrough == healthy + 1, s"jobs: healthy read $healthy, fallthrough $fallthrough")
+
+    // rotten in both: the point read raises the first copy's failure
+    // with the second's suppressed, the bulk read is one unverified row
+    Seq(hMid, hBig).foreach(h => flipChunk(s1, leaf(s1, h)))
+    Seq(hMid, hBig).foreach { h =>
+      val e = intercept[InvalidMagicException](lake.getBlob(h))
+      assert(e.getMessage.contains(p0) && e.getSuppressed.toSeq.map(_.getMessage.contains(p1)) == Seq(true), s"$h: $e")
+    }
+    val rows = lake.get(Seq(hMid, hBig).toDF("blob_hash")).collect()
+    assert(rows.map(_.getString(0)).sorted.toSeq == Seq(hMid, hBig).sorted && rows.forall(!_.getBoolean(2)))
+  }
+
+  test("a rotten key never aborts a read: the copy reads unverified and the lake serves the next store's") {
+    val (p0, p1) = (tmp(), tmp())
+    val lake = Lake.init(spark, LakeConfig(Seq(StoreEntry(p0), StoreEntry(p1))))
+    lake.stores.foreach(_.putBlobs(blobDf(1L -> mid, 2L -> big)))
+    val (hMid, hBig) = (sha(mid), sha(big))
+    val s0 = lake.stores(0)
+    // another valid key in place of each blob's catalog root_key (the
+    // point reads' way in) and of one level-0 manifest key (the bulk
+    // read's) in store 0; every part they name is GCM-encrypted
+    val other = sha("not the key of any part")
+    def rekey(table: String, rows: Array[Row], schema: org.apache.spark.sql.types.StructType, keyAt: Int)(pick: Row => Boolean): Unit = {
+      val rekeyed = rows.map { r =>
+        if (!pick(r)) r
+        else { assert(!r.isNullAt(keyAt), s"fixture: a raw part in $table"); Row.fromSeq(r.toSeq.updated(keyAt, other)) }
+      }
+      spark.createDataFrame(rekeyed.toSeq.asJava, schema).write.mode("overwrite").parquet(s"$p0/$table")
+    }
+    rekey("catalog", s0.catalog.collect(), ChunkStore.catalogSchema, 5)(_ => true)
+    rekey("manifest", s0.manifest.collect(), ChunkStore.manifestSchema, 4)(r => r.getInt(1) == 0 && (r.getString(0) == hMid || r.getLong(2) == 1L))
+    unreadable(Lake.init(spark, LakeConfig(Seq(StoreEntry(p0)))), s0, Seq(hMid, hBig))
+    readable(lake, lake.stores(1), Map(hMid -> mid.getBytes(StandardCharsets.UTF_8), hBig -> big.getBytes(StandardCharsets.UTF_8)))
   }
 
   test("getBlob verifies on read: a flipped bit in a raw single chunk or a tree leaf raises") {
@@ -1035,8 +1113,10 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("model-based: seeded put, delete, gc, compact and reopen sequences agree with a plain model") {
-    val takers = Seq(3L, 4L).flatMap(modelRun)
+    val runs = Seq(3L, 4L).map(modelRun)
+    val takers = runs.flatMap(_._1)
     assert(takers.toSet == Set(0, 1), s"fixture: every batch went to the same store (${takers.mkString(",")})")
+    assert(runs.map(_._2).sum > 0, "fixture: no flip step found a chunked blob in store 0")
   }
 
   /** One seeded sequence of lake operations on two stores, the first
@@ -1047,11 +1127,12 @@ class LakeSpec extends AnyFunSuite {
     * through a second handle: a delete through a lake that opens store 0
     * readonly, and a put into a lake whose only writable store is store
     * 0 capped at what it holds, which must be refused and change
-    * nothing. After every step the lake that opens store 0 readonly
-    * reads too, and must agree with the model as well. Returns the store
-    * that took each put.
+    * nothing. A third flips a bit in a chunk of store 0 under a blob
+    * that store 1 also holds live. After every step the lake that opens
+    * store 0 readonly reads too, and must agree with the model as well.
+    * Returns the store that took each put and the number of flips.
     */
-  private def modelRun(seed: Long): Seq[Int] = {
+  private def modelRun(seed: Long): (Seq[Int], Int) = {
     val rnd = new scala.util.Random(seed)
     val chunkMax = LakeParams().chunkMax.toInt
     val cfg = LakeConfig(Seq(StoreEntry(tmp(), maxBytes = ModelCap), StoreEntry(tmp())))
@@ -1061,6 +1142,7 @@ class LakeSpec extends AnyFunSuite {
     val model = new LakeModel(lake.stores.size)
     val never = Seq(sha(s"never put, seed $seed"), sha(s"never put either, seed $seed"))
     val takers = Seq.newBuilder[Int]
+    var flips = 0
     // the second-handle steps and reads draw from their own stream, so
     // the other steps run the same sequence with or without them
     val side = new scala.util.Random(~seed)
@@ -1093,7 +1175,7 @@ class LakeSpec extends AnyFunSuite {
       s"put of ${blobs.map(_.length).mkString(", ")} bytes into store $taker"
     }
     val steps = "put" +: rnd.shuffle(Seq("put", "put", "put", "delete", "delete", "gc", "compact", "reopen"))
-    val withSide = Seq("readonly delete", "refused put").foldLeft(steps)((ss, k) => ss.patch(1 + side.nextInt(ss.size), Seq(k), 0))
+    val withSide = Seq("readonly delete", "refused put", "flip").foldLeft(steps)((ss, k) => ss.patch(1 + side.nextInt(ss.size), Seq(k), 0))
     withSide.zipWithIndex.foreach {
       case (kind, i) =>
         val step = s"seed $seed, step $i: " + (kind match {
@@ -1117,13 +1199,31 @@ class LakeSpec extends AnyFunSuite {
             assert(e.getCause.isInstanceOf[StoreOutOfSpaceException], s"seed $seed, step $i: refused with ${e.getCause}")
             intercept[BlobNotFoundException](lake.getBlob(sha256hex(b)))
             s"refused put of ${b.length} bytes"
+          case "flip" =>
+            // a part of a chunked blob rots in store 0; store 1 holds the
+            // blob live, put there directly when it did not
+            val chunked = model.live(0).toSeq.sorted.filter(h => model.bytes(h).length > LakeParams().inlineMax)
+            if (chunked.isEmpty) "flip skipped: store 0 holds no chunked blob"
+            else {
+              val h = pick(chunked, side)
+              val b = model.bytes(h)
+              if (!model.live(1)(h)) { lake.stores(1).putBlobs(Seq(b).toDF("data")): Unit; model.put(Seq(h -> b), 1) }
+              val i = side.nextInt((b.length + chunkMax - 1) / chunkMax)
+              val s0 = lake.stores(0)
+              flipChunk(s0, s0.manifest.filter(col("blob_hash") === h && col("level") === 0 && col("part_idx") === i.toLong)
+                .select("chunk_hash").as[String].head())
+              model.rot(b.slice(i * chunkMax, (i + 1) * chunkMax))
+              flips += 1
+              s"flip of part $i of a ${b.length}-byte blob in store 0"
+            }
           case "gc" =>
             lake.gc().collect()
+            model.gc()
             lake.stores.foreach(s => assert(s.fsck().filter(col("violations") > 0).count() == 0, s"seed $seed, step $i: fsck after gc"))
             "gc"
           case "compact" =>
             // gc is the reclaiming compaction
-            if (rnd.nextBoolean()) { lake.gc().collect(); "compact by gc" }
+            if (rnd.nextBoolean()) { lake.gc().collect(); model.gc(); "compact by gc" }
             else { lake.compact().collect(); "compact" }
           case "reopen" =>
             lake = Lake.init(spark, cfg)
@@ -1135,7 +1235,7 @@ class LakeSpec extends AnyFunSuite {
         val hashes = model.bytes.keys.toSeq ++ never
         reads(ro, model, hashes, Seq.fill(2)(pick(hashes, side)).distinct, s"$step, through store 0 readonly")
     }
-    takers.result()
+    (takers.result(), flips)
   }
 
   /** `lake` agrees with `model` on every hash it was ever given and on
@@ -1150,18 +1250,27 @@ class LakeSpec extends AnyFunSuite {
     }
   }
 
-  /** `Lake.get` of `hashes` returns a live one once, verified and
-    * byte-identical, and no row otherwise; `Lake.getBlob` of each of
-    * `points` returns its bytes or raises BlobNotFoundException.
+  /** `Lake.get` of `hashes` returns a live one once: verified and
+    * byte-identical while some store holds an intact live copy,
+    * unverified when every live copy is rotten; and no row otherwise.
+    * `Lake.getBlob` of each of `points` returns its bytes, or raises
+    * InvalidMagicException or BlobNotFoundException, likewise.
     */
   private def reads(lake: Lake, model: LakeModel, hashes: Seq[String], points: Seq[String], step: String): Unit = {
     val rows = lake.get(hashes.toDF("blob_hash")).collect()
     assert(rows.map(_.getString(0)).distinct.length == rows.length, s"$step: Lake.get returned a hash twice")
     val bulk = rows.map(r => r.getString(0) -> (Option(r.getAs[Array[Byte]](1)).map(_.toSeq), r.getAs[Any](2))).toMap
-    hashes.foreach(h => assert(bulk.get(h) == model.read(h).map(b => (Some(b.toSeq), true)), s"$step: Lake.get of $h"))
+    hashes.foreach { h =>
+      if (model.unreadable(h)) assert(bulk.get(h).map(_._2).contains(false), s"$step: Lake.get of rotten $h")
+      else assert(bulk.get(h) == model.read(h).map(b => (Some(b.toSeq), true)), s"$step: Lake.get of $h")
+    }
     points.foreach { h =>
-      val point = try Some(lake.getBlob(h).toSeq) catch { case _: BlobNotFoundException => None }
-      assert(point == model.read(h).map(_.toSeq), s"$step: Lake.getBlob of $h")
+      val point = try Right(lake.getBlob(h).toSeq) catch {
+        case _: BlobNotFoundException => Left("not found")
+        case _: InvalidMagicException => Left("unreadable")
+      }
+      val want = if (model.unreadable(h)) Left("unreadable") else model.read(h).map(_.toSeq).toRight("not found")
+      assert(point == want, s"$step: Lake.getBlob of $h")
     }
   }
 
@@ -1186,14 +1295,32 @@ object LakeSpec {
   val ModelCap = 2500L
 
   /** The lake semantics the model-based test checks, in plain Scala:
-    * the bytes of every blob ever put, by address, and the blobs each
-    * store holds live. A put lands whole in one store; a delete
-    * tombstones a blob in every writable store; gc, compact, a reopen
-    * and a refused put change nothing a reader sees.
+    * the bytes of every blob ever put, by address, the blobs each store
+    * holds live, and the level-0 parts whose chunk is rotten in store 0.
+    * A put lands whole in one store; a delete tombstones a blob in every
+    * writable store; compact, a reopen and a refused put change nothing
+    * a reader sees. A rotten chunk rots every blob of store 0 with its
+    * part, until gc drops it with the last of them; a read serves the
+    * first intact live copy.
     */
   final class LakeModel(nStores: Int) {
     val bytes = scala.collection.mutable.Map.empty[String, Array[Byte]]
     val live: IndexedSeq[scala.collection.mutable.Set[String]] = IndexedSeq.fill(nStores)(scala.collection.mutable.Set.empty)
+    private val rotten = scala.collection.mutable.Set.empty[Seq[Byte]]
+
+    /** A blob's level-0 parts, each of which is one chunk: none for an
+      * inline blob.
+      */
+    private def parts(b: Array[Byte]): Seq[Seq[Byte]] =
+      if (b.length <= LakeParams().inlineMax) Nil else b.toSeq.grouped(LakeParams().chunkMax.toInt).toSeq
+
+    /** The chunk of `part` in store 0 rots. */
+    def rot(part: Array[Byte]): Unit = rotten += part.toSeq
+
+    /** gc of every store: a rotten chunk no blob live in store 0 holds is dropped. */
+    def gc(): Unit = rotten.filterInPlace(p => live(0).exists(h => parts(bytes(h)).contains(p)))
+
+    private def intact(store: Int, h: String): Boolean = store != 0 || !parts(bytes(h)).exists(rotten)
 
     /** `blobs` as (address, bytes), taken whole by `store`. */
     def put(blobs: Seq[(String, Array[Byte])], store: Int): Unit =
@@ -1205,7 +1332,12 @@ object LakeSpec {
     def delete(hashes: Seq[String], stores: Seq[Int] = live.indices): Long =
       stores.map { i => val n = hashes.distinct.count(live(i)); live(i) --= hashes; n.toLong }.sum
 
-    /** What a read of `h` returns: its bytes while some store holds it live. */
-    def read(h: String): Option[Array[Byte]] = bytes.get(h).filter(_ => live.exists(_(h)))
+    /** What a read of `h` returns: its bytes while some store holds an
+      * intact copy of it live.
+      */
+    def read(h: String): Option[Array[Byte]] = bytes.get(h).filter(_ => live.indices.exists(i => live(i)(h) && intact(i, h)))
+
+    /** Whether `h` is live somewhere, but no live copy is intact. */
+    def unreadable(h: String): Boolean = live.exists(_(h)) && read(h).isEmpty
   }
 }
